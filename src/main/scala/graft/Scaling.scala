@@ -117,7 +117,7 @@ object Scaling {
     "q_unigram_encode" -> 16, // bounded word-table train (driver EM)
                               // + scan-fused per-row Viterbi kernel
     "q_glove_fit" -> 16, // per half-step: one vocab-pair-bounded
-                         // groupBy vs broadcast factors
+                         // groupBy vs broadcast factors + CholeskySolve
     "q_neighborhood_function" -> 16, // per round: |E|+|V| packed
                                      // register rows through one edge join
     "q_scc_pivot" -> 16, // corpus-sized trade join, then two BFS
@@ -138,16 +138,17 @@ object Scaling {
     // round-13 targets
     "q_byte_bpe" -> 16, // bounded word-table train + scan-fused
                         // byte-surrogate merge kernel
-    "q_glove_fit_d8" -> 16, // the measured q_glove_fit shape with
-                            // 44 agg columns + CholeskySolve kernel
-    "q_als_implicit_d8" -> 16, // the measured q_als_implicit shape,
-                               // wider agg row + CholeskySolve kernel
+    "q_glove_fit_d8" -> 16, // the measured q_glove_fit shape at d = 8:
+                            // 44 agg columns per half-step
+    "q_als_implicit_d8" -> 16, // the measured q_als_implicit shape at
+                               // d = 8: wider agg row
     "q_weighted_sssp" -> 16, // corpus-sized trade join, then bucketed
                              // relaxation phases on the 25-node graph
     "q_kmv_sketch" -> 16, // one bounded BottomKDistinct aggregate
                           // (<= k values per partition pre-shuffle)
     "q_als_implicit" -> 16, // per half-step: one interaction-frame
                             // groupBy vs broadcast factors + 1-row Gram
+                            // + CholeskySolve
     "q_cox_onestep" -> 16, // one rollup; risk-set windows over the
                            // <=|durations| frame
     "q_policy_eval" -> 16, // two corpus aggregates vs broadcast

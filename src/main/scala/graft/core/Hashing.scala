@@ -19,4 +19,15 @@ object Hashing {
   /** h60 reduced mod n — the uniform bucket form. */
   def bucket(key: Column, salt: String, n: Long): Column =
     pmod(h60(key, salt), lit(n))
+
+  /** ALS factor init draw in [-0.1, 0.1]: (h60 mod 2001 − 1000) / 10⁴ —
+    * integer-derived, so both engines produce identical doubles. */
+  def initDraw(key: Column, salt: String): Column =
+    (pmod(h60(key, salt), lit(2001L)) - lit(1000L))
+      .cast("double") / lit(10000.0)
+
+  /** DuckDB mirror of [[initDraw]] over the SQL key expression `key`. */
+  def sqlInitDraw(key: String, salt: String): String =
+    s"CAST((('0x' || substr(md5('$salt' || CAST($key AS VARCHAR))," +
+      s" 1, 15))::BIGINT % 2001 - 1000) AS DOUBLE) / 10000.0"
 }

@@ -8,10 +8,9 @@ import org.apache.spark.sql.graft.ExpressionBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native codegen d×d ridge solve — (A + λI) x = b by Cholesky
-  * factorization — the dimension-generic ALS half-step kernel
-  * ([[graft.llmdata.Glove]] / [[graft.recommend.ImplicitAls]] at
-  * d > 2, where the closed-form 2×2 inverse stops being writable as a
-  * flat Column expression). `left` is A's upper triangle, row-major
+  * factorization — the ALS half-step kernel of
+  * [[graft.llmdata.Glove]] and [[graft.recommend.ImplicitAls]] at
+  * every rank. `left` is A's upper triangle, row-major
   * ((0,0),(0,1),…,(0,d−1),(1,1),…,(d−1,d−1), d(d+1)/2 doubles —
   * exactly the normal-equation aggregate column order); `right` is b
   * (d doubles). Returns the solution vector x, UNROUNDED — callers

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -8,7 +8,7 @@ import graft.core.{ExactAgg, Hashing}
 
 /** Distributed GloVe embedding fit by alternating least squares
   * (Pennington, Socher & Manning EMNLP'14 objective; ALS in place of
-  * AdaGrad SGD — each half-step is the CLOSED-FORM ridge solve for one
+  * AdaGrad SGD — each half-step is the EXACT ridge solve for one
   * factor side given the other, the standard distributed matrix-
   * factorization recipe). This closes the in-engine loop
   * graph → walks → pairs → co-occurrence → VECTORS → ANN: the fit
@@ -17,10 +17,10 @@ import graft.core.{ExactAgg, Hashing}
   *
   * Objective (bias-free form): J = Σ_ij f(x_ij) (wᵢ·cⱼ − ln x_ij)²
   * + λ(Σ‖w‖² + Σ‖c‖²), f(x) = min((x/xmax)^α, 1). Dropping GloVe's
-  * scalar biases keeps each half-step a d×d solve; the gate pins
-  * d = 2 where the inverse is closed-form on BOTH engines (a larger d
-  * rides the same normal-equation frame with a native solve
-  * expression — the aggregation shape below is dimension-generic).
+  * scalar biases keeps each half-step a d×d ridge system per token,
+  * solved by the native [[graft.functions.CholeskySolve]] kernel; the
+  * oracle replays the same op sequence through
+  * [[graft.core.CholeskySql]], so every rank rides one code path.
   *
   * Scale posture: each half-step is ONE groupBy over the co-occurrence
   * frame (vocab-pair-bounded, never corpus-sized) against the BROADCAST
@@ -44,100 +44,21 @@ object Glove {
   val Alpha = 0.75
   val Lambda = 0.01
 
-  /** Deterministic init draw in [-0.1, 0.1]: (h60 mod 2001 − 1000) /
-    * 10⁴ — integer-derived, so both engines produce identical doubles.
-    */
-  private def initFactor(token: Column, salt: String): Column =
-    (pmod(Hashing.h60(token, salt), lit(2001L)) - lit(1000L))
-      .cast("double") / lit(10000.0)
-
-  /** Init factor frame for a (token) vocabulary. */
-  private[llmdata] def initFactors(tokens: DataFrame,
+  /** Init factor frame for a (token) vocabulary — per-dim h60 draws
+    * ([[Hashing.initDraw]]) under the `${salt}${dim}:` salt family,
+    * dim 1-based. */
+  private[llmdata] def initFactors(tokens: DataFrame, d: Int,
       salt: String = "glove"): DataFrame =
-    tokens.select(col("token"),
-      initFactor(col("token"), s"${salt}1:").as("f1"),
-      initFactor(col("token"), s"${salt}2:").as("f2"))
+    tokens.select((col("token") +: (1 to d).map(i =>
+      Hashing.initDraw(col("token"), s"$salt$i:").as(s"f$i"))): _*)
 
   /** One ridge half-step: solve the `solveKey` factors given the
     * `otherKey` factors — a single groupBy of the weighted normal
-    * equations against the broadcast factor table, closed-form 2×2
-    * inverse, round-6 handoff.
+    * equations (d(d+1)/2 + d map-side-combined sums) against the
+    * broadcast factor table, solved per token by
+    * [[graft.functions.CholeskySolve]], round-6 handoff.
     */
   private[llmdata] def half(base: DataFrame, solveKey: String,
-      otherKey: String, factors: DataFrame, lambda: Double): DataFrame = {
-    val a11 = col("__a11") + lit(lambda)
-    val a22 = col("__a22") + lit(lambda)
-    val det = a11 * a22 - col("__a12") * col("__a12")
-    base
-      .join(broadcast(factors.select(col("token").as(otherKey),
-        col("f1").as("__g1"), col("f2").as("__g2"))), Seq(otherKey))
-      .groupBy(col(solveKey).as("token"))
-      .agg(
-        ExactAgg.sumMicro(col("__f") * col("__g1") * col("__g1")).as("__a11"),
-        ExactAgg.sumMicro(col("__f") * col("__g1") * col("__g2")).as("__a12"),
-        ExactAgg.sumMicro(col("__f") * col("__g2") * col("__g2")).as("__a22"),
-        ExactAgg.sumMicro(col("__f") * col("__y") * col("__g1")).as("__b1"),
-        ExactAgg.sumMicro(col("__f") * col("__y") * col("__g2")).as("__b2"))
-      .select(col("token"),
-        round((a22 * col("__b1") - col("__a12") * col("__b2")) / det, 6)
-          .as("f1"),
-        round((a11 * col("__b2") - col("__a12") * col("__b1")) / det, 6)
-          .as("f2"))
-  }
-
-  /** Weighted frame (center, context, __f, __y) from a co-occurrence
-    * frame — f and y quantized at construction (handoff rule).
-    */
-  def weighted(cooc: DataFrame, xmax: Double = Xmax,
-      alpha: Double = Alpha): DataFrame =
-    cooc.select(col("center"), col("context"),
-      round(least(pow(col("x") / lit(xmax), lit(alpha)), lit(1.0)), 6)
-        .as("__f"),
-      round(log(col("x")), 6).as("__y"))
-
-  /** Fit 2-d factors over `alternations` full ALS rounds. Returns
-    * (token, role, f1, f2) for both factor sides ('center'/'context' —
-    * a word2vec-style consumer averages or concatenates them; the
-    * center side is what [[Ann.knnGraph]] gates consume).
-    */
-  def fit(cooc: DataFrame, alternations: Int = 2, xmax: Double = Xmax,
-      alpha: Double = Alpha, lambda: Double = Lambda,
-      salt: String = "glove"): DataFrame = {
-    require(alternations >= 1, s"need alternations >= 1, got $alternations")
-    val base = track(weighted(cooc, xmax, alpha)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    var ctx = initFactors(
-        base.select(col("context").as("token")).distinct(), salt)
-      .localCheckpoint()
-    var cen: DataFrame = null
-    for (_ <- 1 to alternations) {
-      cen = half(base, "center", "context", ctx, lambda).localCheckpoint()
-      ctx = half(base, "context", "center", cen, lambda).localCheckpoint()
-    }
-    cen.select(col("token"), lit("center").as("role"), col("f1"), col("f2"))
-      .unionByName(ctx.select(col("token"), lit("context").as("role"),
-        col("f1"), col("f2")))
-  }
-
-  // ---------------------------------------------------------------
-  // Dimension-generic fit (d > 2): the SAME normal-equation frame with
-  // the native CholeskySolve kernel in place of the closed-form 2×2
-  // inverse. d(d+1)/2 + d map-side-combined aggregate columns per
-  // half-step; everything else (broadcast opposite factors, round-6
-  // handoffs, h60 init draws) is the d = 2 convention unchanged.
-  // ---------------------------------------------------------------
-
-  /** Init factor frame at dimension d — per-dim h60 draws under the
-    * `${salt}${dim}:` salt family (dim 1-based, matching d = 2). */
-  private[llmdata] def initFactorsD(tokens: DataFrame, d: Int,
-      salt: String = "glove"): DataFrame =
-    tokens.select((col("token") +: (1 to d).map(i =>
-      initFactor(col("token"), s"$salt$i:").as(s"f$i"))): _*)
-
-  /** One d-dimensional ridge half-step: the weighted normal-equation
-    * rollup against the broadcast opposite factors, solved per token
-    * by [[graft.functions.CholeskySolve]], round-6 handoff. */
-  private[llmdata] def halfD(base: DataFrame, solveKey: String,
       otherKey: String, factors: DataFrame, lambda: Double,
       d: Int): DataFrame = {
     val gSel = col("token").as(otherKey) +:
@@ -162,23 +83,36 @@ object Glove {
         round(element_at(sol, i + 1), 6).as(s"f${i + 1}"))): _*)
   }
 
-  /** Fit d-dimensional factors (token, role, f1..fd) — [[fit]] at an
-    * arbitrary rank. */
-  def fitD(cooc: DataFrame, d: Int, alternations: Int = 2,
+  /** Weighted frame (center, context, __f, __y) from a co-occurrence
+    * frame — f and y quantized at construction (handoff rule).
+    */
+  def weighted(cooc: DataFrame, xmax: Double = Xmax,
+      alpha: Double = Alpha): DataFrame =
+    cooc.select(col("center"), col("context"),
+      round(least(pow(col("x") / lit(xmax), lit(alpha)), lit(1.0)), 6)
+        .as("__f"),
+      round(log(col("x")), 6).as("__y"))
+
+  /** Fit rank-d factors over `alternations` full ALS rounds. Returns
+    * (token, role, f1..fd) for both factor sides ('center'/'context' —
+    * a word2vec-style consumer averages or concatenates them; the
+    * center side is what [[Ann.knnGraph]] gates consume).
+    */
+  def fit(cooc: DataFrame, d: Int, alternations: Int = 2,
       xmax: Double = Xmax, alpha: Double = Alpha, lambda: Double = Lambda,
       salt: String = "glove"): DataFrame = {
     require(alternations >= 1, s"need alternations >= 1, got $alternations")
     require(d >= 1, s"need d >= 1, got $d")
     val base = track(weighted(cooc, xmax, alpha)
       .persist(StorageLevel.MEMORY_AND_DISK))
-    var ctx = initFactorsD(
+    var ctx = initFactors(
         base.select(col("context").as("token")).distinct(), d, salt)
       .localCheckpoint()
     var cen: DataFrame = null
     for (_ <- 1 to alternations) {
-      cen = halfD(base, "center", "context", ctx, lambda, d)
+      cen = half(base, "center", "context", ctx, lambda, d)
         .localCheckpoint()
-      ctx = halfD(base, "context", "center", cen, lambda, d)
+      ctx = half(base, "context", "center", cen, lambda, d)
         .localCheckpoint()
     }
     val fCols = (1 to d).map(i => col(s"f$i"))
@@ -187,8 +121,10 @@ object Glove {
         ctx.select((col("token") +: lit("context").as("role") +: fCols): _*))
   }
 
-  /** [[loss]] at dimension d (spec surface). */
-  def lossD(base: DataFrame, cen: DataFrame, ctx: DataFrame, d: Int,
+  /** Penalized objective on given rank-d factor frames (spec surface —
+    * asserts ALS non-increase per half-step).
+    */
+  def loss(base: DataFrame, cen: DataFrame, ctx: DataFrame, d: Int,
       lambda: Double = Lambda): Double = {
     val dot = (1 to d).map(i => col(s"__w$i") * col(s"__c$i"))
       .reduce(_ + _)
@@ -206,15 +142,23 @@ object Glove {
     fitTerm + lambda * (ridge(cen) + ridge(ctx))
   }
 
-  /** [[alsCtes]] at dimension d: h60 per-dim init draws, one
-    * normal-equation + unrolled-Cholesky solve CTE per half-step
-    * ([[graft.core.CholeskySql]] emits the kernel's exact op sequence
-    * as lateral column aliases), `gfinal(token, role, f1..fd)`. */
-  def alsCtesD(d: Int, alternations: Int = 2): String = {
-    def draw(saltDim: String) =
-      s"CAST((('0x' || substr(md5('$saltDim:' || CAST(token AS VARCHAR))," +
-        s" 1, 15))::BIGINT % 2001 - 1000) AS DOUBLE) / 10000.0"
-    val fOut = (0 until d).map(i => s"round(x_$i, 6) AS f${i + 1}")
+  /** The ALS trajectory CTEs replaying [[fit]] — h60 per-dim init
+    * draws, one normal-equation + nested-Cholesky solve CTE per
+    * half-step ([[graft.core.CholeskySql]] emits the kernel's exact op
+    * sequence), every handoff rounded exactly as the engine rounds —
+    * over a PRE-EXISTING `gb(center, context, f, y)` CTE, so any
+    * co-occurrence source (document windows, walk corpora) chains into
+    * the same replay. Ends in `gfinal(token, role, f1..fd)` and keeps
+    * `gw{n}` (final center factors) addressable for downstream
+    * oracles. Token ids stringify via CAST AS VARCHAR, matching the
+    * engine's h60 key cast for both strings and longs. Plain WITH (no
+    * recursion).
+    *
+    * `+ 0.0` on each handoff: DuckDB's round can emit -0.0, Spark's
+    * (BigDecimal-based) cannot.
+    */
+  def alsCtes(d: Int, alternations: Int = 2): String = {
+    val fOut = (0 until d).map(i => s"round(x_$i, 6) + 0.0 AS f${i + 1}")
       .mkString(",\n    ")
     def solve(out: String, key: String, other: String, fTab: String) = {
       val aSums = (for (i <- 0 until d; j <- i until d) yield
@@ -235,7 +179,8 @@ object Glove {
       solve(s"gw$t", "center", "context", prevCtx) + ",\n" +
         solve(s"gc$t", "context", "center", s"gw$t")
     }.mkString(",\n")
-    val drawCols = (1 to d).map(i => s"${draw(s"glove$i")} AS f$i")
+    val drawCols = (1 to d).map(i =>
+      s"${Hashing.sqlInitDraw("token", s"glove$i:")} AS f$i")
       .mkString(",\n    ")
     val fList = (1 to d).map(i => s"f$i").mkString(", ")
     s"""gc0 AS MATERIALIZED (SELECT token,
@@ -248,82 +193,9 @@ object Glove {
        |  SELECT token, 'context' AS role, $fList FROM gc$alternations)""".stripMargin
   }
 
-  /** [[gloveCteSql]] at dimension d (same co-occurrence prefix). */
-  def gloveCteSqlD(d: Int, alternations: Int = 2): String =
-    s"$coocCteSql,\n${alsCtesD(d, alternations)}"
-
-  /** Penalized objective on given factor frames (spec surface —
-    * asserts ALS non-increase per half-step).
-    */
-  def loss(base: DataFrame, cen: DataFrame, ctx: DataFrame,
-      lambda: Double = Lambda): Double = {
-    val fitTerm = base
-      .join(cen.select(col("token").as("center"), col("f1").as("__w1"),
-        col("f2").as("__w2")), Seq("center"))
-      .join(ctx.select(col("token").as("context"), col("f1").as("__c1"),
-        col("f2").as("__c2")), Seq("context"))
-      .select((col("__f") * pow(col("__w1") * col("__c1")
-        + col("__w2") * col("__c2") - col("__y"), 2)).as("__t"))
-      .agg(sum("__t")).head().getDouble(0)
-    def ridge(df: DataFrame): Double = df
-      .select((col("f1") * col("f1") + col("f2") * col("f2")).as("__r"))
-      .agg(sum("__r")).head().getDouble(0)
-    fitTerm + lambda * (ridge(cen) + ridge(ctx))
-  }
-
-  /** DuckDB CTE chain replaying [[fit]] over the q_glove_cooc frame
-    * (window 2, minX 1.5 on `documents`): co-occurrence CTEs, the
-    * weighted frame, h60 init draws, and one pair of normal-equation
-    * CTEs per alternation, every handoff rounded exactly as the
-    * engine rounds. Ends in `gfinal(token, role, f1, f2)` and keeps
-    * `gw{n}` (final center factors) addressable for downstream
-    * oracles. Plain WITH (no recursion).
-    */
-  /** The ALS trajectory CTEs alone — h60 init draws, one pair of
-    * normal-equation solves per alternation, `gfinal(token, role, f1,
-    * f2)` — over a PRE-EXISTING `gb(center, context, f, y)` CTE, so
-    * any co-occurrence source (document windows, walk corpora) chains
-    * into the same replay. Token ids stringify via CAST AS VARCHAR,
-    * matching the engine's h60 key cast for both strings and longs.
-    */
-  def alsCtes(alternations: Int = 2): String = {
-    def draw(saltDim: String) =
-      s"CAST((('0x' || substr(md5('$saltDim:' || CAST(token AS VARCHAR))," +
-        s" 1, 15))::BIGINT % 2001 - 1000) AS DOUBLE) / 10000.0"
-    def solve(out: String, key: String, other: String, fTab: String) =
-      s"""$out AS MATERIALIZED (SELECT token,
-         |  round((($Lambda + a22) * b1 - a12 * b2)
-         |    / (($Lambda + a11) * ($Lambda + a22) - a12 * a12), 6) AS f1,
-         |  round((($Lambda + a11) * b2 - a12 * b1)
-         |    / (($Lambda + a11) * ($Lambda + a22) - a12 * a12), 6) AS f2
-         |FROM (SELECT b.$key AS token,
-         |        ${ExactAgg.sqlSumMicro("b.f * g.f1 * g.f1")} AS a11,
-         |        ${ExactAgg.sqlSumMicro("b.f * g.f1 * g.f2")} AS a12,
-         |        ${ExactAgg.sqlSumMicro("b.f * g.f2 * g.f2")} AS a22,
-         |        ${ExactAgg.sqlSumMicro("b.f * b.y * g.f1")} AS b1,
-         |        ${ExactAgg.sqlSumMicro("b.f * b.y * g.f2")} AS b2
-         |      FROM gb b JOIN $fTab g ON g.token = b.$other
-         |      GROUP BY 1))""".stripMargin
-    val steps = (1 to alternations).map { t =>
-      val prevCtx = if (t == 1) "gc0" else s"gc${t - 1}"
-      solve(s"gw$t", "center", "context", prevCtx) + ",\n" +
-        solve(s"gc$t", "context", "center", s"gw$t")
-    }.mkString(",\n")
-    s"""gc0 AS MATERIALIZED (SELECT token,
-       |    ${draw("glove1")} AS f1,
-       |    ${draw("glove2")} AS f2
-       |  FROM (SELECT DISTINCT context AS token FROM gb)),
-       |$steps,
-       |gfinal AS (SELECT token, 'center' AS role, f1, f2
-       |    FROM gw$alternations
-       |  UNION ALL
-       |  SELECT token, 'context' AS role, f1, f2 FROM gc$alternations)""".stripMargin
-  }
-
   /** The q_glove_cooc-equivalent co-occurrence + weighted-frame CTEs
     * (window 2, minX 1.5 on `documents`), ending in
-    * `gb(center, context, f, y)` — shared by the d = 2 and d > 2
-    * replays. */
+    * `gb(center, context, f, y)`. */
   private def coocCteSql: String =
     s"""d AS MATERIALIZED (SELECT doc_id,
        |    string_split(text, ' ') AS t FROM documents),
@@ -343,6 +215,8 @@ object Glove {
        |    round(least(power(x / $Xmax, $Alpha), 1.0), 6) AS f,
        |    round(ln(x), 6) AS y FROM cx)""".stripMargin
 
-  def gloveCteSql(alternations: Int = 2): String =
-    s"$coocCteSql,\n${alsCtes(alternations)}"
+  /** [[alsCtes]] over the q_glove_cooc frame (window 2, minX 1.5 on
+    * `documents`) — the q_glove_fit / q_glove_knn replay. */
+  def gloveCteSql(d: Int, alternations: Int = 2): String =
+    s"$coocCteSql,\n${alsCtes(d, alternations)}"
 }

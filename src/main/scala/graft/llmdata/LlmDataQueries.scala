@@ -483,25 +483,24 @@ object LlmDataQueries extends QueryPack {
         .orderBy("center", "context")),
 
     // GloVe ALS embedding fit (Glove.fit) on the q_glove_cooc frame:
-    // 2 alternations of closed-form ridge half-steps (one groupBy of
-    // the weighted normal equations vs the broadcast opposite factors
-    // per half-step), h60-hash init, round-6 trajectory handoffs —
-    // the quantized-trajectory convention, replayed by chained CTEs.
+    // rank 2, 2 alternations of ridge half-steps (one groupBy of the
+    // weighted normal equations vs the broadcast opposite factors per
+    // half-step, per-token CholeskySolve), h60-hash init, round-6
+    // trajectory handoffs — the quantized-trajectory convention,
+    // replayed by chained CTEs.
     // Closes graph→walks→pairs→cooc→VECTORS in-engine.
     "q_glove_fit" -> ((s, dir) =>
       Glove.fit(SkipGram.cooccurrenceCounts(Tables.documents(s, dir),
-          "text", "doc_id", window = 2, minX = 1.5))
+          "text", "doc_id", window = 2, minX = 1.5), d = 2)
         .orderBy("role", "token")),
 
-    // The same GloVe ALS fit at rank d = 8 — the dimension-generic
-    // path (Glove.fitD): identical normal-equation aggregation shape
-    // (d(d+1)/2 + d map-side-combined sums per half-step vs the
-    // broadcast opposite factors), with the native CholeskySolve
-    // codegen kernel in place of the closed-form 2×2 inverse. Round-6
-    // trajectory handoffs → EXACT oracle via CholeskySql's nested
-    // op-exact d×d factorization mirror.
+    // The same GloVe ALS fit at rank d = 8: identical normal-equation
+    // aggregation shape (d(d+1)/2 + d map-side-combined sums per
+    // half-step vs the broadcast opposite factors). Round-6 trajectory
+    // handoffs → EXACT oracle via CholeskySql's nested op-exact d×d
+    // factorization mirror.
     "q_glove_fit_d8" -> ((s, dir) =>
-      Glove.fitD(SkipGram.cooccurrenceCounts(Tables.documents(s, dir),
+      Glove.fit(SkipGram.cooccurrenceCounts(Tables.documents(s, dir),
           "text", "doc_id", window = 2, minX = 1.5), d = 8)
         .orderBy("role", "token")),
 
@@ -512,7 +511,7 @@ object LlmDataQueries extends QueryPack {
     "q_glove_knn" -> ((s, dir) => {
       val cen = Glove.fit(SkipGram.cooccurrenceCounts(
           Tables.documents(s, dir), "text", "doc_id",
-          window = 2, minX = 1.5))
+          window = 2, minX = 1.5), d = 2)
         .where(col("role") === "center")
         .select(col("token"), array(col("f1"), col("f2")).as("vec"))
       Ann.knnGraph(cen, "token", "vec", k = 3)
@@ -2533,15 +2532,16 @@ object LlmDataQueries extends QueryPack {
         |HAVING round(sum(CAST(1 AS DOUBLE) / abs(pos - cp)), 6) >= 1.5
         |ORDER BY center, context""".stripMargin,
 
-    // ALS trajectory replay: chained normal-equation CTEs, every
-    // handoff rounded exactly where the engine rounds (Glove.fit doc).
+    // ALS trajectory replay: chained normal-equation + nested-Cholesky
+    // CTEs, every handoff rounded exactly where the engine rounds
+    // (Glove.fit doc).
     "q_glove_fit" ->
-      s"""WITH ${Glove.gloveCteSql(alternations = 2)}
+      s"""WITH ${Glove.gloveCteSql(d = 2)}
          |SELECT token, role, f1, f2 FROM gfinal
          |ORDER BY role, token""".stripMargin,
 
     "q_glove_fit_d8" ->
-      s"""WITH ${Glove.gloveCteSqlD(d = 8, alternations = 2)}
+      s"""WITH ${Glove.gloveCteSql(d = 8)}
          |SELECT token, role, ${(1 to 8).map(i => s"f$i").mkString(", ")}
          |FROM gfinal
          |ORDER BY role, token""".stripMargin,
@@ -2550,7 +2550,7 @@ object LlmDataQueries extends QueryPack {
     // q_ann_topk convention): rank on ROUND-6 cosine then token asc —
     // Ann.knnGraph quantizes before its bounded heap.
     "q_glove_knn" ->
-      s"""WITH ${Glove.gloveCteSql(alternations = 2)},
+      s"""WITH ${Glove.gloveCteSql(d = 2)},
          |gx AS (SELECT q.token AS src, c.token AS dst,
          |    round((q.f1 * c.f1 + q.f2 * c.f2)
          |      / (sqrt(q.f1 * q.f1 + q.f2 * q.f2)

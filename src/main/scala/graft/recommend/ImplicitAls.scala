@@ -1,6 +1,6 @@
 package graft.recommend
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,9 +27,11 @@ import graft.core.{ExactAgg, Hashing}
   * Scale posture: each half-step is one groupBy over the interaction
   * frame joined to the opposite factor table (a plain equi-join — AQE
   * broadcasts it at test scale; at 100 TB the user side shuffles, which
-  * is the correct plan) plus a broadcast 1-row Gram frame. d = 2 keeps
-  * the solve closed-form on both engines (the [[graft.llmdata.Glove]]
-  * convention; the aggregation shape is dimension-generic).
+  * is the correct plan) plus a broadcast 1-row Gram frame. The rank d
+  * is a parameter: the per-key d×d system is solved by the native
+  * [[graft.functions.CholeskySolve]] kernel, which the oracle replays
+  * op for op through [[graft.core.CholeskySql]] (the
+  * [[graft.llmdata.Glove]] convention).
   *
   * Exactness (the quantized-trajectory convention): confidences are
   * rounded at construction, the Gram entries and every solved factor
@@ -41,17 +43,12 @@ object ImplicitAls {
   val Alpha = 0.1
   val Lambda = 0.1
 
-  /** Deterministic init draw in [-0.1, 0.1] — the Glove.initFactor
-    * convention under the 'als' salt family. */
-  private def initFactor(id: Column, salt: String): Column =
-    (pmod(Hashing.h60(id, salt), lit(2001L)) - lit(1000L))
-      .cast("double") / lit(10000.0)
-
-  private[recommend] def initFactors(ids: DataFrame,
+  /** Per-dim h60 init draws ([[Hashing.initDraw]]) under the
+    * `${salt}${dim}:` salt family, dim 1-based. */
+  private[recommend] def initFactors(ids: DataFrame, d: Int,
       salt: String): DataFrame =
-    ids.select(col("id"),
-      initFactor(col("id"), s"${salt}1:").as("f1"),
-      initFactor(col("id"), s"${salt}2:").as("f2"))
+    ids.select((col("id") +: (1 to d).map(i =>
+      Hashing.initDraw(col("id"), s"$salt$i:").as(s"f$i"))): _*)
 
   /** Confidence frame (user, item, c) from raw interactions —
     * c = 1 + α·x, quantized at construction (handoff rule). */
@@ -64,8 +61,10 @@ object ImplicitAls {
 
   /** One HKV half-step: solve `solveKey` factors given `otherKey`
     * factors. Gram = one aggregate over the WHOLE opposite factor
-    * frame (round-6 handoff, broadcast as 1 row); the per-key
-    * correction is one groupBy over the confidence frame.
+    * frame (d(d+1)/2 round-6 entries, broadcast as 1 row); the per-key
+    * correction is one groupBy over the confidence frame; the system
+    * A = Gram + S (+λI inside the kernel) is solved by
+    * [[graft.functions.CholeskySolve]], round-6 handoff.
     *
     * Every trajectory sum goes through [[ExactAgg.sumMicro]]: these
     * unrounded sums feed the solve and then a round-6 handoff, and a
@@ -76,85 +75,6 @@ object ImplicitAls {
     * the identical pre-rounding value by construction.
     */
   private[recommend] def half(conf: DataFrame, solveKey: String,
-      otherKey: String, factors: DataFrame, lambda: Double): DataFrame = {
-    val gram = factors.agg(
-      round(ExactAgg.sumMicro(col("f1") * col("f1")), 6).as("__g11"),
-      round(ExactAgg.sumMicro(col("f1") * col("f2")), 6).as("__g12"),
-      round(ExactAgg.sumMicro(col("f2") * col("f2")), 6).as("__g22"))
-    val a11 = col("__g11") + col("__s11") + lit(lambda)
-    val a12 = col("__g12") + col("__s12")
-    val a22 = col("__g22") + col("__s22") + lit(lambda)
-    val det = a11 * a22 - a12 * a12
-    conf
-      .join(factors.select(col("id").as(otherKey),
-        col("f1").as("__y1"), col("f2").as("__y2")), Seq(otherKey))
-      .groupBy(col(solveKey).as("id"))
-      .agg(
-        ExactAgg.sumMicro((col("c") - 1.0) * col("__y1") * col("__y1")).as("__s11"),
-        ExactAgg.sumMicro((col("c") - 1.0) * col("__y1") * col("__y2")).as("__s12"),
-        ExactAgg.sumMicro((col("c") - 1.0) * col("__y2") * col("__y2")).as("__s22"),
-        ExactAgg.sumMicro(col("c") * col("__y1")).as("__b1"),
-        ExactAgg.sumMicro(col("c") * col("__y2")).as("__b2"))
-      .crossJoin(broadcast(gram))
-      .select(col("id"),
-        round((a22 * col("__b1") - a12 * col("__b2")) / det, 6).as("f1"),
-        round((a11 * col("__b2") - a12 * col("__b1")) / det, 6).as("f2"))
-  }
-
-  /** Fit 2-d factors over `alternations` full ALS rounds. Returns
-    * (id, role['user'/'item'], f1, f2). The item side is what a
-    * similar-items consumer feeds to [[graft.llmdata.Ann.knnGraph]];
-    * scoring a bounded user probe set rides [[recommendTopK]].
-    *
-    * Cache lifecycle: fit caches an ALIASED projection of `conf` for
-    * its own half-steps and RELEASES it before returning (repeat fits
-    * must not accumulate cached copies — see the unpersist below).
-    * The alias matters: persist/unpersist key on the analyzed plan, so
-    * persisting `conf` itself would make fit's release silently drop a
-    * cache entry the CALLER created on the same frame (the r13 ADVICE
-    * finding). The aliased copy still reads through a caller's cached
-    * `conf` if one exists; a caller with no cache of its own re-pays
-    * the conf lineage (one scan + rollup) after fit returns.
-    */
-  def fit(conf: DataFrame, alternations: Int = 2,
-      lambda: Double = Lambda, salt: String = "als"): DataFrame = {
-    require(alternations >= 1, s"need alternations >= 1, got $alternations")
-    val base = conf.select(conf.columns.map(col).toIndexedSeq: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var items = initFactors(
-        base.select(col("item").as("id")).distinct(), s"${salt}i")
-      .localCheckpoint()
-    var users: DataFrame = null
-    for (_ <- 1 to alternations) {
-      users = half(base, "user", "item", items, lambda).localCheckpoint()
-      items = half(base, "item", "user", users, lambda).localCheckpoint()
-    }
-    // factors are localCheckpoint'ed — lineage no longer needs the
-    // cached confidence frame, so release it (repeat fits in one
-    // session must not accumulate cached copies)
-    base.unpersist(blocking = false)
-    users.select(col("id"), lit("user").as("role"), col("f1"), col("f2"))
-      .unionByName(items.select(col("id"), lit("item").as("role"),
-        col("f1"), col("f2")))
-  }
-
-  // ---------------------------------------------------------------
-  // Dimension-generic fit (d > 2): the SAME Gram-trick aggregation
-  // with the native CholeskySolve kernel in place of the closed-form
-  // 2×2 inverse (the graft.llmdata.Glove.fitD convention).
-  // ---------------------------------------------------------------
-
-  private[recommend] def initFactorsD(ids: DataFrame, d: Int,
-      salt: String): DataFrame =
-    ids.select((col("id") +: (1 to d).map(i =>
-      initFactor(col("id"), s"$salt$i:").as(s"f$i"))): _*)
-
-  /** One d-dimensional HKV half-step: round-6 Gram (d(d+1)/2 entries,
-    * broadcast as 1 row) + per-key observed corrections, solved by
-    * [[graft.functions.CholeskySolve]] over A = Gram + S (+λI inside
-    * the kernel), round-6 handoff.
-    */
-  private[recommend] def halfD(conf: DataFrame, solveKey: String,
       otherKey: String, factors: DataFrame, lambda: Double,
       d: Int): DataFrame = {
     val gramAggs = (for (i <- 0 until d; j <- i until d) yield
@@ -183,25 +103,40 @@ object ImplicitAls {
         round(element_at(sol, i + 1), 6).as(s"f${i + 1}"))): _*)
   }
 
-  /** Fit d-dimensional factors (id, role, f1..fd) — [[fit]] at an
-    * arbitrary rank. */
-  def fitD(conf: DataFrame, d: Int, alternations: Int = 2,
+  /** Fit rank-d factors over `alternations` full ALS rounds. Returns
+    * (id, role['user'/'item'], f1..fd). The item side is what a
+    * similar-items consumer feeds to [[graft.llmdata.Ann.knnGraph]];
+    * scoring a bounded user probe set rides [[recommendTopK]].
+    *
+    * Cache lifecycle: fit caches an ALIASED projection of `conf` for
+    * its own half-steps and RELEASES it before returning (repeat fits
+    * must not accumulate cached copies — see the unpersist below).
+    * The alias matters: persist/unpersist key on the analyzed plan, so
+    * persisting `conf` itself would make fit's release silently drop a
+    * cache entry the CALLER created on the same frame (the r13 ADVICE
+    * finding). The aliased copy still reads through a caller's cached
+    * `conf` if one exists; a caller with no cache of its own re-pays
+    * the conf lineage (one scan + rollup) after fit returns.
+    */
+  def fit(conf: DataFrame, d: Int, alternations: Int = 2,
       lambda: Double = Lambda, salt: String = "als"): DataFrame = {
     require(alternations >= 1, s"need alternations >= 1, got $alternations")
     require(d >= 1, s"need d >= 1, got $d")
-    // aliased projection — same caller-cache-safety contract as [[fit]]
     val base = conf.select(conf.columns.map(col).toIndexedSeq: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var items = initFactorsD(
+    var items = initFactors(
         base.select(col("item").as("id")).distinct(), d, s"${salt}i")
       .localCheckpoint()
     var users: DataFrame = null
     for (_ <- 1 to alternations) {
-      users = halfD(base, "user", "item", items, lambda, d)
+      users = half(base, "user", "item", items, lambda, d)
         .localCheckpoint()
-      items = halfD(base, "item", "user", users, lambda, d)
+      items = half(base, "item", "user", users, lambda, d)
         .localCheckpoint()
     }
+    // factors are localCheckpoint'ed — lineage no longer needs the
+    // cached confidence frame, so release it (repeat fits in one
+    // session must not accumulate cached copies)
     base.unpersist(blocking = false)
     val fCols = (1 to d).map(i => col(s"f$i"))
     users.select((col("id") +: lit("user").as("role") +: fCols): _*)
@@ -209,8 +144,14 @@ object ImplicitAls {
         items.select((col("id") +: lit("item").as("role") +: fCols): _*))
   }
 
-  /** [[loss]] at dimension d (spec surface). */
-  def lossD(conf: DataFrame, users: DataFrame, items: DataFrame, d: Int,
+  /** The full HKV objective on given rank-d factor frames (spec
+    * surface — asserts ALS non-increase per half-step):
+    * Σ_ALL cells c·(p − x·y)² + λ(Σ‖x‖² + Σ‖y‖²), with unobserved
+    * cells at c = 1, p = 0. Evaluated WITHOUT materializing the cell
+    * space via the same Gram identity the solver uses:
+    * Σ_all (x·y)² = Σ_u xᵀ(YᵀY)x.
+    */
+  def loss(conf: DataFrame, users: DataFrame, items: DataFrame, d: Int,
       lambda: Double = Lambda): Double = {
     val gAggs = (for (i <- 1 to d; j <- 1 to d) yield
       sum(col(s"f$i") * col(s"f$j")).as(s"g_${i}_$j")).toSeq
@@ -239,15 +180,21 @@ object ImplicitAls {
     allTerm + obsTerm + lambda * (ridge(users) + ridge(items))
   }
 
-  /** [[alsCtes]] at dimension d — round-6 Gram CTEs and
-    * normal-equation + nested-Cholesky solve CTEs
-    * ([[graft.core.CholeskySql]]), `afinal(id, role, f1..fd)`. */
-  def alsCtesD(d: Int, alternations: Int = 2, lambda: Double = Lambda,
+  /** DuckDB CTE chain replaying [[fit]] — h60 item init draws, then one
+    * (Gram, solve) CTE pair per half-step: round-6 Gram entries and a
+    * normal-equation + nested-Cholesky solve ([[graft.core.CholeskySql]]),
+    * every handoff rounded exactly as the engine rounds — over a
+    * PRE-EXISTING `ac(u_id, i_id, c)` confidence CTE. Ends in
+    * `afinal(id, role, f1..fd)` and keeps `au{n}` / `ai{n}` (final
+    * user / item factors) addressable for downstream oracles. Plain
+    * WITH (no recursion).
+    *
+    * `+ 0.0` on each handoff: DuckDB's round can emit -0.0, Spark's
+    * (BigDecimal-based) cannot.
+    */
+  def alsCtes(d: Int, alternations: Int = 2, lambda: Double = Lambda,
       salt: String = "als"): String = {
-    def draw(saltDim: String) =
-      s"CAST((('0x' || substr(md5('$saltDim:' || CAST(id AS VARCHAR))," +
-        s" 1, 15))::BIGINT % 2001 - 1000) AS DOUBLE) / 10000.0"
-    val fOut = (0 until d).map(i => s"round(x_$i, 6) AS f${i + 1}")
+    val fOut = (0 until d).map(i => s"round(x_$i, 6) + 0.0 AS f${i + 1}")
       .mkString(",\n    ")
     val fList = (1 to d).map(i => s"f$i").mkString(", ")
     def gram(out: String, fTab: String) = {
@@ -282,7 +229,8 @@ object ImplicitAls {
         gram(s"agi$t", s"au$t") + ",\n" +
         solve(s"ai$t", "i_id", "u_id", s"au$t", s"agi$t")
     }.mkString(",\n")
-    val drawCols = (1 to d).map(i => s"${draw(s"${salt}i$i")} AS f$i")
+    val drawCols = (1 to d).map(i =>
+      s"${Hashing.sqlInitDraw("id", s"${salt}i$i:")} AS f$i")
       .mkString(",\n    ")
     s"""ai0 AS MATERIALIZED (SELECT id,
        |    $drawCols
@@ -292,94 +240,6 @@ object ImplicitAls {
        |    FROM au$alternations
        |  UNION ALL
        |  SELECT id, 'item' AS role, $fList FROM ai$alternations)""".stripMargin
-  }
-
-  /** The full HKV objective on given factor frames (spec surface —
-    * asserts ALS non-increase per half-step):
-    * Σ_ALL cells c·(p − x·y)² + λ(Σ‖x‖² + Σ‖y‖²), with unobserved
-    * cells at c = 1, p = 0. Evaluated WITHOUT materializing the cell
-    * space via the same Gram identity the solver uses:
-    * Σ_all (x·y)² = Σ_u xᵀ(YᵀY)x.
-    */
-  def loss(conf: DataFrame, users: DataFrame, items: DataFrame,
-      lambda: Double = Lambda): Double = {
-    val g = items.agg(sum(col("f1") * col("f1")).as("g11"),
-      sum(col("f1") * col("f2")).as("g12"),
-      sum(col("f2") * col("f2")).as("g22")).head()
-    val (g11, g12, g22) = (g.getDouble(0), g.getDouble(1), g.getDouble(2))
-    val allTerm = users.select(
-      (col("f1") * col("f1") * g11 + col("f1") * col("f2") * (2 * g12)
-        + col("f2") * col("f2") * g22).as("__q"))
-      .agg(sum("__q")).head().getDouble(0)
-    val obsTerm = conf
-      .join(users.select(col("id").as("user"), col("f1").as("__u1"),
-        col("f2").as("__u2")), Seq("user"))
-      .join(items.select(col("id").as("item"), col("f1").as("__i1"),
-        col("f2").as("__i2")), Seq("item"))
-      .select((col("c")
-        * pow(lit(1.0) - (col("__u1") * col("__i1")
-          + col("__u2") * col("__i2")), 2)
-        - pow(col("__u1") * col("__i1") + col("__u2") * col("__i2"), 2))
-        .as("__t"))
-      .agg(sum("__t")).head().getDouble(0)
-    def ridge(df: DataFrame): Double = df
-      .select((col("f1") * col("f1") + col("f2") * col("f2")).as("__r"))
-      .agg(sum("__r")).head().getDouble(0)
-    allTerm + obsTerm + lambda * (ridge(users) + ridge(items))
-  }
-
-  /** DuckDB CTE chain replaying [[fit]] — h60 item init draws, then one
-    * (Gram, solve) CTE pair per half-step, every handoff rounded
-    * exactly as the engine rounds — over a PRE-EXISTING
-    * `ac(u_id, i_id, c)` confidence CTE. Ends in
-    * `afinal(id, role, f1, f2)` and keeps `au{n}` / `ai{n}` (final
-    * user / item factors) addressable for downstream oracles. Plain
-    * WITH (no recursion).
-    */
-  def alsCtes(alternations: Int = 2, lambda: Double = Lambda,
-      salt: String = "als"): String = {
-    def draw(saltDim: String) =
-      s"CAST((('0x' || substr(md5('$saltDim:' || CAST(id AS VARCHAR))," +
-        s" 1, 15))::BIGINT % 2001 - 1000) AS DOUBLE) / 10000.0"
-    def gram(out: String, fTab: String) =
-      s"""$out AS (SELECT round(${ExactAgg.sqlSumMicro("f1 * f1")}, 6) AS g11,
-         |    round(${ExactAgg.sqlSumMicro("f1 * f2")}, 6) AS g12,
-         |    round(${ExactAgg.sqlSumMicro("f2 * f2")}, 6) AS g22 FROM $fTab)""".stripMargin
-    def solve(out: String, key: String, other: String, fTab: String,
-        gTab: String) = {
-      val det = s"((g11 + s11 + $lambda) * (g22 + s22 + $lambda)" +
-        s" - (g12 + s12) * (g12 + s12))"
-      s"""$out AS MATERIALIZED (SELECT id,
-         |  round(((g22 + s22 + $lambda) * b1 - (g12 + s12) * b2)
-         |    / $det, 6) AS f1,
-         |  round(((g11 + s11 + $lambda) * b2 - (g12 + s12) * b1)
-         |    / $det, 6) AS f2
-         |FROM (SELECT c.$key AS id,
-         |        ${ExactAgg.sqlSumMicro("(c.c - 1.0) * y.f1 * y.f1")} AS s11,
-         |        ${ExactAgg.sqlSumMicro("(c.c - 1.0) * y.f1 * y.f2")} AS s12,
-         |        ${ExactAgg.sqlSumMicro("(c.c - 1.0) * y.f2 * y.f2")} AS s22,
-         |        ${ExactAgg.sqlSumMicro("c.c * y.f1")} AS b1,
-         |        ${ExactAgg.sqlSumMicro("c.c * y.f2")} AS b2
-         |      FROM ac c JOIN $fTab y ON y.id = c.$other
-         |      GROUP BY 1)
-         |CROSS JOIN $gTab)""".stripMargin
-    }
-    val steps = (1 to alternations).map { t =>
-      val prevItems = if (t == 1) "ai0" else s"ai${t - 1}"
-      gram(s"agu$t", prevItems) + ",\n" +
-        solve(s"au$t", "u_id", "i_id", prevItems, s"agu$t") + ",\n" +
-        gram(s"agi$t", s"au$t") + ",\n" +
-        solve(s"ai$t", "i_id", "u_id", s"au$t", s"agi$t")
-    }.mkString(",\n")
-    s"""ai0 AS MATERIALIZED (SELECT id,
-       |    ${draw(s"${salt}i1")} AS f1,
-       |    ${draw(s"${salt}i2")} AS f2
-       |  FROM (SELECT DISTINCT i_id AS id FROM ac)),
-       |$steps,
-       |afinal AS (SELECT id, 'user' AS role, f1, f2
-       |    FROM au$alternations
-       |  UNION ALL
-       |  SELECT id, 'item' AS role, f1, f2 FROM ai$alternations)""".stripMargin
   }
 
   /** Top-k recommendations for a BOUNDED user probe frame (one column

@@ -692,21 +692,22 @@ object RelationalQueries extends QueryPack {
     // customer×part purchase matrix (confidence 1 + 0.1·Σquantity),
     // each half-step ONE groupBy over the interaction frame + the
     // broadcast 1-row Gram (the YᵀY trick — the quadratic cell space
-    // never materializes). Quantized trajectory (round-6 confidences,
-    // Gram entries and factors) → EXACT chained-CTE oracle.
+    // never materializes), per-user systems solved by the native
+    // CholeskySolve kernel. Quantized trajectory (round-6 confidences,
+    // Gram entries and factors) → EXACT chained-CTE oracle replaying
+    // the solve op for op through CholeskySql.
     // r14 optimization: the rank-2 fit is memoized per dir
     // (alsFactorsMemo) — q_als_recs consumed an identical second fit.
     "q_als_implicit" -> ((s, dir) =>
       alsFactorsMemo(s, dir).orderBy("role", "id")),
 
-    // The same HKV fit at rank d = 8 — the dimension-generic path
-    // (ImplicitAls.fitD): identical Gram-trick aggregation shape, the
-    // native CholeskySolve codegen kernel in place of the closed-form
-    // 2×2 inverse. Round-6 trajectory (Gram entries, factor handoffs)
-    // → EXACT oracle; the DuckDB side replays the d×d factorization
-    // through CholeskySql's nested op-exact mirror.
+    // The same HKV fit at rank d = 8: identical Gram-trick aggregation
+    // shape with d(d+1)/2 + d sums per key. Round-6 trajectory (Gram
+    // entries, factor handoffs) → EXACT oracle; the DuckDB side
+    // replays the d×d factorization through CholeskySql's nested
+    // op-exact mirror.
     "q_als_implicit_d8" -> ((s, dir) =>
-      graft.recommend.ImplicitAls.fitD(alsConfidences(s, dir), d = 8,
+      graft.recommend.ImplicitAls.fit(alsConfidences(s, dir), d = 8,
           alternations = 2)
         .orderBy("role", "id")),
 
@@ -1138,7 +1139,8 @@ object RelationalQueries extends QueryPack {
         .select(col("walk_id"),
           transform(col("__st"), x => x.getField("node")).as("__seq"))
       graft.llmdata.Glove.fit(graft.llmdata.SkipGram
-          .sequenceCooccurrence(seqs, "__seq", "walk_id", window = 2))
+          .sequenceCooccurrence(seqs, "__seq", "walk_id", window = 2),
+          d = 2)
         .orderBy("role", "token")
     }),
 
@@ -2333,7 +2335,7 @@ object RelationalQueries extends QueryPack {
        |    round(least(power(x / ${graft.llmdata.Glove.Xmax},
        |      ${graft.llmdata.Glove.Alpha}), 1.0), 6) AS f,
        |    round(ln(x), 6) AS y FROM cx),
-       |${graft.llmdata.Glove.alsCtes(2)}
+       |${graft.llmdata.Glove.alsCtes(d = 2)}
        |SELECT token, role, f1, f2 FROM gfinal
        |ORDER BY role, token""".stripMargin
 
@@ -2579,7 +2581,7 @@ object RelationalQueries extends QueryPack {
   private def alsFactorsMemo(s: SparkSession, dir: String): DataFrame = {
     val conf = alsConfidences(s, dir)
     graphMemo.computeIfAbsent(s"alsf2:$dir", _ => {
-      val f = graft.recommend.ImplicitAls.fit(conf, 2)
+      val f = graft.recommend.ImplicitAls.fit(conf, d = 2)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       f.count()
       f
@@ -2619,21 +2621,21 @@ object RelationalQueries extends QueryPack {
 
   private def alsImplicitOracleSql(): String =
     s"""WITH $alsConfCte,
-       |${graft.recommend.ImplicitAls.alsCtes(2)}
+       |${graft.recommend.ImplicitAls.alsCtes(d = 2)}
        |SELECT id, role, f1, f2 FROM afinal
        |ORDER BY role, id""".stripMargin
 
   private def alsImplicitD8OracleSql(): String = {
     val fList = (1 to 8).map(i => s"f$i").mkString(", ")
     s"""WITH $alsConfCte,
-       |${graft.recommend.ImplicitAls.alsCtesD(d = 8, alternations = 2)}
+       |${graft.recommend.ImplicitAls.alsCtes(d = 8)}
        |SELECT id, role, $fList FROM afinal
        |ORDER BY role, id""".stripMargin
   }
 
   private def alsRecsOracleSql(k: Int = 5): String =
     s"""WITH $alsConfCte,
-       |${graft.recommend.ImplicitAls.alsCtes(2)},
+       |${graft.recommend.ImplicitAls.alsCtes(d = 2)},
        |aprobe AS (SELECT DISTINCT u_id FROM ac WHERE u_id < 30),
        |ascored AS (SELECT p.u_id,
        |    i.id AS item, round(u.f1 * i.f1 + u.f2 * i.f2, 6) AS score

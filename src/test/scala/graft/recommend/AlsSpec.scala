@@ -21,7 +21,8 @@ class AlsSpec extends SparkSpec {
 
   test("gram-trick half-step equals the dense all-cells normal equation") {
     val lambda = 0.1
-    val got = ImplicitAls.half(rawConf, "user", "item", itemFactors, lambda)
+    val got = ImplicitAls.half(rawConf, "user", "item", itemFactors, lambda,
+      d = 2)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2)))
       .toMap
     // independent dense replay: A_u = Σ_ALL items c_ui·y yᵀ + λI with
@@ -50,23 +51,24 @@ class AlsSpec extends SparkSpec {
 
   test("loss is non-increasing across half-steps") {
     val lambda = ImplicitAls.Lambda
+    val d = 2
     var items = ImplicitAls.initFactors(
-      rawConf.select(col("item").as("id")).distinct(), "alsi")
-    var users = ImplicitAls.half(rawConf, "user", "item", items, lambda)
-    var prev = ImplicitAls.loss(rawConf, users, items, lambda)
+      rawConf.select(col("item").as("id")).distinct(), d, "alsi")
+    var users = ImplicitAls.half(rawConf, "user", "item", items, lambda, d)
+    var prev = ImplicitAls.loss(rawConf, users, items, d, lambda)
     for (_ <- 1 to 3) {
-      items = ImplicitAls.half(rawConf, "item", "user", users, lambda)
-      val l1 = ImplicitAls.loss(rawConf, users, items, lambda)
+      items = ImplicitAls.half(rawConf, "item", "user", users, lambda, d)
+      val l1 = ImplicitAls.loss(rawConf, users, items, d, lambda)
       assert(l1 <= prev + 1e-6, s"item step must not increase: $prev -> $l1")
-      users = ImplicitAls.half(rawConf, "user", "item", items, lambda)
-      val l2 = ImplicitAls.loss(rawConf, users, items, lambda)
+      users = ImplicitAls.half(rawConf, "user", "item", items, lambda, d)
+      val l2 = ImplicitAls.loss(rawConf, users, items, d, lambda)
       assert(l2 <= l1 + 1e-6, s"user step must not increase: $l1 -> $l2")
       prev = l2
     }
   }
 
   test("fit is deterministic and covers both roles") {
-    def run() = ImplicitAls.fit(rawConf, 2).collect()
+    def run() = ImplicitAls.fit(rawConf, d = 2).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
         r.getDouble(3))).sortBy(t => (t._2, t._1)).toSeq
     val a = run(); val b = run()
@@ -75,7 +77,7 @@ class AlsSpec extends SparkSpec {
   }
 
   test("recommendTopK excludes seen items, ranks by (score desc, id)") {
-    val factors = ImplicitAls.fit(rawConf, 2)
+    val factors = ImplicitAls.fit(rawConf, d = 2)
     val probe = Seq(1L, 2L).toDF("user")
     val recs = ImplicitAls.recommendTopK(factors, rawConf, probe, 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
