@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: `runMain graft.Explain <query>[,<query>…] [sfDir]`
   * prints each query's formatted physical plan — the same surface the
   * per-round plan audits and PlanRegressionSpec read. With no args it
   * audits every registered query; a failure in one query is reported and
-  * the audit continues.
+  * the audit continues. Runs on [[SparkEntry.localSession]] with
+  * SPARK_GRAFT_CPUS cores (default 4).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -14,13 +13,7 @@ object Explain {
       if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(defaultCpus = 4)
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try SparkEntry.queries(name)(spark, dir).explain("formatted")

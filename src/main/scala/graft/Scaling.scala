@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling-exponent harness: generates deterministic corpora
   * at 1×/4×/16× of sf0.1 row counts ([[graft.datasets.ScaleData]] —
   * pure xxhash64 projections under /tmp, the driver testdata is never
@@ -172,18 +170,7 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scaling")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver heap cannot be set here — this main runs inside an
-      // already-started JVM (sbt/spark-submit client mode), so size it
-      // at launch (e.g. `sbt -J-Xmx16g "runMain graft.Scaling"`)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(defaultCpus = 32)
 
     factors.foreach { f =>
       val dir = s"$baseDir/x$f"

@@ -27,6 +27,23 @@ object SparkEntry {
     graft.wrappers.ModelQueries
   )
 
+  /** The session every main runs on: `local[cpus]` with `cpus` shuffle
+    * partitions, UTC, no UI, Spark logging at ERROR. `cpus` is
+    * SPARK_GRAFT_CPUS, else the calling main's default. The driver heap
+    * is fixed at JVM launch (build.sbt's -Xmx), so it is not set here.
+    */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The end-to-end LLM training-data pipeline (quality/language filter →
     * fingerprint dedup → content-hash split → context-window chunks) —

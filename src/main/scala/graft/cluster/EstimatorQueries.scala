@@ -3,7 +3,7 @@ package graft.cluster
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryPack, Tables}
+import graft.core.{Memos, QueryPack, Tables}
 import graft.decomposition.PCA
 import graft.linear.LinearRegression
 import graft.modelselection.Splits
@@ -38,9 +38,7 @@ object EstimatorQueries extends QueryPack {
 
   /** The seeded MLlib k-means|| fit gated by q_kmeans_fit_invariants.
     * The memo holds only the fitted model (k·d center doubles — never
-    * data or a DataFrame); keys assume the dir's data is immutable for
-    * the JVM session (see [[graft.core.Memos]]; Bench clears between
-    * passes).
+    * data or a DataFrame).
     *
     * Bench rep-spread note (r13 directive #6, measured r14): the
     * first bench rep of both k-means gates is reliably hot and later
@@ -61,50 +59,41 @@ object EstimatorQueries extends QueryPack {
     * rounds, the k-means|| init passes, and the invariant aggregates
     * read a compact cached frame instead of re-decoding parquet.
     * Projection-only — row order and partitioning match the raw scan,
-    * so both fits' trajectories are unchanged. Unpersisted by
-    * Memos.clearAll between Bench passes (CachedFrameMap).
+    * so both fits' trajectories are unchanged.
     */
-  private val featMemo = graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private def kmeansFeatures(s: SparkSession, dir: String): DataFrame =
-    featMemo.computeIfAbsent(dir, _ => {
-      val f = Tables.lineitem(s, dir).select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("double").as("l_quantity"),
-        col("l_extendedprice").cast("double").as("l_extendedprice"),
-        col("l_discount").cast("double").as("l_discount"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f
-    })
+  private val kmeansFeatures = Memos.memo { (s, dir) =>
+    Memos.persist(Tables.lineitem(s, dir).select(
+      col("l_orderkey"), col("l_linenumber"),
+      col("l_quantity").cast("double").as("l_quantity"),
+      col("l_extendedprice").cast("double").as("l_extendedprice"),
+      col("l_discount").cast("double").as("l_discount")))
+  }
 
-  private val kmeansMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, KMeansModel]())
-  private def fittedKMeans(s: SparkSession, dir: String): KMeansModel =
-    kmeansMemo.computeIfAbsent(dir, _ =>
-      // r15: fan the single-row-group projection out before the MLlib
-      // fit — every k-means|| init pass and Lloyd round ran as ONE task
-      // (the r14 FanOut finding; ~30 single-core jobs profiled). The
-      // trajectory changes with the partition layout (k-means|| samples
-      // per partition), which is exactly what this gate tolerates: its
-      // oracle checks seed-independent INVARIANTS (partition counts,
-      // the Lloyd fixed point, the single-cluster baseline, inertia
-      // consistency), not centers. The EXACT trajectory gate
-      // (q_kmeans_fit / fitLloydDeterministic) keeps the raw memo frame
-      // — only this seeded fit fans out.
-      new KMeans(fitFeatures, nClusters = 4, seed = 42)
-        .fit(graft.core.FanOut.byKey(kmeansFeatures(s, dir), "l_orderkey")))
+  private val fittedKMeans = Memos.memo { (s, dir) =>
+    // r15: fan the single-row-group projection out before the MLlib
+    // fit — every k-means|| init pass and Lloyd round ran as ONE task
+    // (the r14 FanOut finding; ~30 single-core jobs profiled). The
+    // trajectory changes with the partition layout (k-means|| samples
+    // per partition), which is exactly what this gate tolerates: its
+    // oracle checks seed-independent INVARIANTS (partition counts,
+    // the Lloyd fixed point, the single-cluster baseline, inertia
+    // consistency), not centers. The EXACT trajectory gate
+    // (q_kmeans_fit / fitLloydDeterministic) keeps the raw memo frame
+    // — only this seeded fit fans out.
+    new KMeans(fitFeatures, nClusters = 4, seed = 42)
+      .fit(graft.core.FanOut.byKey(kmeansFeatures(s, dir), "l_orderkey"))
+  }
 
   /** The deterministic Lloyd fit behind the EXACT q_kmeans_fit gate:
     * fit once per dir (the trajectory's step count parameterizes the
     * generated oracle — see [[lloydFitOracle]]). Memo holds init + final
     * centers + sizes, a few dozen doubles.
     */
-  private val lloydMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, LloydFitResult]())
-  private def lloydFit(s: SparkSession, dir: String): LloydFitResult =
-    lloydMemo.computeIfAbsent(dir, _ =>
-      KMeans.fitLloydDeterministic(kmeansFeatures(s, dir),
-        Seq("l_quantity", "l_extendedprice"),
-        Seq("l_orderkey", "l_linenumber"), k = 3, maxIter = 40))
+  private val lloydFit = Memos.memo { (s, dir) =>
+    KMeans.fitLloydDeterministic(kmeansFeatures(s, dir),
+      Seq("l_quantity", "l_extendedprice"),
+      Seq("l_orderkey", "l_linenumber"), k = 3, maxIter = 40)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -928,7 +917,7 @@ object EstimatorQueries extends QueryPack {
     * arithmetic would diverge from Spark's IEEE doubles.
     */
   private def bpeMixtureOracle: Map[String, String] =
-    graft.llmdata.Bpe.memoized match {
+    graft.llmdata.Bpe.trained.values match {
       case merges :: Nil =>
         val cte = graft.llmdata.Bpe.bpeCteSql(merges)
         Map(
@@ -979,8 +968,7 @@ object EstimatorQueries extends QueryPack {
     * rows-only check.
     */
   private def lloydFitOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    lloydMemo.values.asScala.toList match {
+    lloydFit.values match {
       case f :: Nil => Map("q_kmeans_fit" -> lloydFitOracleSql(f.nIter))
       case _ => Map.empty
     }

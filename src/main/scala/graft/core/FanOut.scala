@@ -63,23 +63,20 @@ object FanOut {
     else df
   }
 
-  /** Persist + EAGERLY materialize a subframe consumed by several plan
-    * branches (guide §5 caching; r14 profiling finding): Spark does
-    * not dedup common subplans, and AQE runs sibling branches as
-    * CONCURRENT stages — against a lazily-populated cache each branch
-    * re-runs the shared scan/aggregation in parallel (2–8 duplicated
-    * equal-length jobs in the profiles). One eager pass here, then
-    * every branch reads cached blocks. Registered with
-    * [[Memos.tracked]] so Bench's between-pass clearAll releases the
-    * storage; callers pass bounded frames (contingency cells, candidate
-    * pairs), never raw corpus rows.
+  /** [[Memos.persist]] + EAGERLY materialize a subframe consumed by
+    * several plan branches (guide §5 caching; r14 profiling finding):
+    * Spark does not dedup common subplans, and AQE runs sibling
+    * branches as CONCURRENT stages — against a lazily-populated cache
+    * each branch re-runs the shared scan/aggregation in parallel (2–8
+    * duplicated equal-length jobs in the profiles). One eager pass
+    * here, then every branch reads cached blocks. Callers pass bounded
+    * frames (contingency cells, candidate pairs), never raw corpus rows.
     */
-  def shared(tag: String, df: DataFrame): DataFrame = {
+  def shared(df: DataFrame): DataFrame = {
     // streaming frames pass through (persist + count throw on them) —
     // the byKey guard, mirrored here (r15, ADVICE)
     if (df.isStreaming) return df
-    val p = Memos.tracked(tag,
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val p = Memos.persist(df)
     p.count()
     p
   }

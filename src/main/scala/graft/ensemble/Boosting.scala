@@ -43,12 +43,11 @@ object Boosting {
     require(features.nonEmpty && rounds >= 1 && eta > 0 && eta <= 1)
     val names = features.map(_._1)
     val binCols = names.map(n => col(s"__b_$n"))
-    val cells = Memos.tracked("gbt", df.select(
+    val cells = Memos.persist(df.select(
         features.map { case (n, c) => c.cast("int").as(s"__b_$n") } :+
           label.cast("boolean").cast("long").as("__y"): _*)
       .groupBy(binCols: _*)
-      .agg(count(lit(1)).as("n"), sum("__y").as("sy"))
-      .persist())
+      .agg(count(lit(1)).as("n"), sum("__y").as("sy")))
 
     var cur = cells.withColumn("f", lit(0L))
     val traj = (1 to rounds).map { t =>

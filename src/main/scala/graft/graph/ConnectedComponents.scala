@@ -38,9 +38,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("cc", df)
-
   /** @param pairs columns id_a, id_b (integral); undirected, dupes and
     *   self-loops tolerated.
     */
@@ -50,7 +47,6 @@ object ConnectedComponents {
         col("id_b").cast("long"))).as("id"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    track(nodes)
 
     var e = pairs
       .select(col("id_a").cast("long").as("src"),

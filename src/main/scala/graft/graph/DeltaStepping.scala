@@ -92,8 +92,6 @@ object DeltaStepping {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val heavy = e.filter(col("__l") > delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Memos.tracked("dstep", light)
-    graft.core.Memos.tracked("dstep", heavy)
     val nodes = e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct()
     val seedIds = seeds.select(col(seeds.columns.head).cast("long")

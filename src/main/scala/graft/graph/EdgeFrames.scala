@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *    straight off the per-__s row counts.
   *
   * Callers that serve several gates should persist the result once
-  * (via [[graft.core.Memos.tracked]] or a per-dir memo) and hand it to
-  * the algorithms' `…On` variants.
+  * (via [[graft.core.Memos.persist]], usually inside a
+  * [[graft.core.Memos.Memo]]) and hand it to the algorithms' `…On`
+  * variants.
   */
 object EdgeFrames {
 

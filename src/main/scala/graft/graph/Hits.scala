@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** HITS hubs & authorities (Kleinberg, "Authoritative sources in a
   * hyperlinked environment", JACM 1999) — the directional counterpart
@@ -27,9 +28,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Hits {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("hits", df)
-
   /** @param edges directed weighted edges; multi-edges add.
     * @return (node, hub, authority) for every node on either edge end,
     *   both scores L1-normalized and quantized.
@@ -37,13 +35,11 @@ object Hits {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int = 10, quantize: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = track(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
-        col(weightCol).cast("double").as("__w"))
-      .groupBy("__s", "__t").agg(sum("__w").as("__w"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val nodes = track(e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val e = Memos.persist(edges.select(col(srcCol).as("__s"),
+        col(dstCol).as("__t"), col(weightCol).cast("double").as("__w"))
+      .groupBy("__s", "__t").agg(sum("__w").as("__w")))
+    val nodes = Memos.persist(e.select(col("__s").as("__n"))
+      .union(e.select(col("__t").as("__n"))).distinct())
     val n = nodes.count() // bounded: one long
     // r14 optimization round, two output-identical restructures:
     //  1. score frames in the LOOP are sparse — a node absent from a

@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** k-core decomposition via iterated neighborhood h-index (Lü, Zhou,
   * Zhang & Stanley, "The H-index of a network node and its relation to
@@ -42,9 +43,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object KCore {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("kcore", df)
-
   /** @param pairs undirected edge list, columns `id_a`, `id_b`
     *   (integral). Multiplicity is IGNORED (coreness is a simple-graph
     *   notion: distinct neighbors); self-loops are dropped.
@@ -57,8 +55,8 @@ object KCore {
     */
   def coreness(pairs: DataFrame, rounds: Int = 8,
       earlyStop: Boolean = true): DataFrame =
-    corenessOn(track(EdgeFrames.symmetrizedWeighted(pairs)
-      .persist(StorageLevel.MEMORY_AND_DISK)), rounds, earlyStop)
+    corenessOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), rounds,
+      earlyStop)
 
   /** [[coreness]] over a shared [[EdgeFrames.symmetrizedWeighted]]
     * frame (weights ignored — coreness is a simple-graph notion and

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Community detection by synchronous label propagation (Raghavan,
   * Albert & Kumara 2007, "Near linear time algorithm to detect
@@ -31,12 +32,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object LabelPropagation {
 
-  /** Persisted intermediates registered with [[graft.core.Memos.tracked]]
-    * so Bench's between-pass clearAll() releases executor storage.
-    */
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("lpa", df)
-
   /** @param pairs undirected edge list, columns `id_a`, `id_b`
     *   (integral). DUPLICATE rows are meaningful: multiplicity is the
     *   edge weight (co-occurrence count). Self-loops are dropped.
@@ -46,8 +41,8 @@ object LabelPropagation {
     *   component minimum (communities are finer than components).
     */
   def labelPropagation(pairs: DataFrame, iters: Int = 5): DataFrame =
-    labelPropagationOn(track(EdgeFrames.symmetrizedWeighted(pairs)
-      .persist(StorageLevel.MEMORY_AND_DISK)), iters)
+    labelPropagationOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)),
+      iters)
 
   /** [[labelPropagation]] over an already-built (and ideally persisted)
     * [[EdgeFrames.symmetrizedWeighted]] frame — the entry point for
@@ -98,8 +93,7 @@ object LabelPropagation {
     *   rounding.
     */
   def modularity(pairs: DataFrame, labels: DataFrame): DataFrame =
-    modularityOn(track(EdgeFrames.symmetrizedWeighted(pairs)
-      .persist(StorageLevel.MEMORY_AND_DISK)), labels)
+    modularityOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), labels)
 
   /** [[modularity]] over a shared [[EdgeFrames.symmetrizedWeighted]]
     * frame. */

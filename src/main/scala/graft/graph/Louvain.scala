@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Full multi-level Louvain community detection (Blondel, Guillaume,
   * Lambiotte & Lefebvre 2008, "Fast unfolding of communities in large
@@ -59,9 +60,6 @@ import org.apache.spark.storage.StorageLevel
   * counts (one scalar each — the KCore convergence convention).
   */
 object Louvain {
-
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("louvain", df)
 
   /** One guarded synchronous sweep.
     *
@@ -168,8 +166,8 @@ object Louvain {
     *   = weight. */
   def louvain(pairs: DataFrame, maxSweeps: Int = 4,
       levels: Int = 2): DataFrame =
-    louvainOn(track(EdgeFrames.symmetrizedWeighted(pairs)
-      .persist(StorageLevel.MEMORY_AND_DISK)), maxSweeps, levels)
+    louvainOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), maxSweeps,
+      levels)
 
   /** Full Louvain over a shared [[EdgeFrames.symmetrizedWeighted]]
     * frame.
@@ -223,19 +221,18 @@ object Louvain {
         // self-weight are filters over its community²-bounded rows.
         // Identical sums: partitioning the rollup by (cs, ct) before
         // the = / ≠ split groups exactly the same integer addends.
-        val contracted = track(sym.join(la, Seq("__s")).join(lb, Seq("__t"))
+        val contracted = Memos.persist(sym.join(la, Seq("__s"))
+          .join(lb, Seq("__t"))
           .groupBy(col("__cs"), col("__ct"))
-          .agg(sum("__w").as("__w"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+          .agg(sum("__w").as("__w")))
         sym = contracted.filter(col("__cs") =!= col("__ct"))
           .select(col("__cs").as("__s"), col("__ct").as("__t"), col("__w"))
         val internal = contracted.filter(col("__cs") === col("__ct"))
           .select(col("__cs").as("__n"), col("__w").as("__sw"))
         val carried = selfW.join(lab, "__n")
           .groupBy(col("__c").as("__n")).agg(sum("__sw").as("__sw"))
-        selfW = track(internal.unionByName(carried)
-          .groupBy("__n").agg(sum("__sw").as("__sw"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+        selfW = Memos.persist(internal.unionByName(carried)
+          .groupBy("__n").agg(sum("__sw").as("__sw")))
         nodes = lab.select(col("__c").as("__n")).distinct()
           .localCheckpoint()
       }

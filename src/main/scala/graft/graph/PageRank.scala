@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Memos
+
 /** Weighted PageRank (Brin & Page 1998) — the link-graph quality
   * signal crawl pipelines attach to documents (Common Crawl publishes
   * exactly this as host-level ranks).
@@ -25,12 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Persisted per-iteration frames, registered so Bench's between-pass
-    * Memos.clearAll() releases executor storage (NgramLm pattern).
-    */
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("pr", df)
-
   /** @param edges (srcCol, dstCol, weightCol) — multi-edges allowed
     *   (weights add); self-loops allowed.
     * @return (node, rank) for every node appearing as src or dst.
@@ -43,19 +39,13 @@ object PageRank {
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
       col(weightCol).cast("double").as("__w"))
     val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
-    val ew = e.join(outw, Seq("__s"))
-      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(ew)
-    val nodes = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(nodes)
+    val ew = Memos.persist(e.join(outw, Seq("__s"))
+      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
+    val nodes = Memos.persist(e.select(col("__s").as("__n"))
+      .union(e.select(col("__t").as("__n"))).distinct())
     // dangling = nodes never appearing as a src; computed once
-    val danglingNodes = nodes.join(outw.select(col("__s").as("__n")),
-        Seq("__n"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(danglingNodes)
+    val danglingNodes = Memos.persist(
+      nodes.join(outw.select(col("__s").as("__n")), Seq("__n"), "left_anti"))
     val n = nodes.count() // bounded: one long
     val base = (1.0 - damping) / n
     var ranks = nodes.select(col("__n"),
@@ -114,10 +104,8 @@ object PageRank {
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
       col(weightCol).cast("double").as("__w"))
     val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
-    val ew = e.join(outw, Seq("__s"))
-      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(ew)
+    val ew = Memos.persist(e.join(outw, Seq("__s"))
+      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
     val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
     val nodes = e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct()
@@ -125,18 +113,14 @@ object PageRank {
     val seedNodes = nodes.join(seedIds, Seq("__n"), "left_semi")
     val ns = seedNodes.count()
     require(ns > 0, "no seed id is present in the graph")
-    val sv = nodes.join(seedIds.select(col("__n"), lit(1).as("__is")),
-        Seq("__n"), "left")
+    val sv = Memos.persist(nodes.join(
+        seedIds.select(col("__n"), lit(1).as("__is")), Seq("__n"), "left")
       .select(col("__n"),
         when(col("__is").isNotNull, lit(1.0) / ns).otherwise(lit(0.0))
-          .as("__sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(sv)
-    val danglingNodes = sv.join(outw.select(col("__s").as("__n")),
+          .as("__sv")))
+    val danglingNodes = Memos.persist(sv.join(outw.select(col("__s").as("__n")),
         Seq("__n"), "left_anti")
-      .select(col("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(danglingNodes)
+      .select(col("__n")))
     var ranks = sv.select(col("__n"), round(col("__sv"), quantize).as("__r"))
     for (_ <- 1 to iters) {
       val contrib = ew.join(ranks, col("__s") === col("__n"))
@@ -201,10 +185,8 @@ object PageRank {
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
       col(weightCol).cast("double").as("__w"))
     val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
-    val ew = e.join(outw, Seq("__s"))
-      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(ew)
+    val ew = Memos.persist(e.join(outw, Seq("__s"))
+      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
     val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
     val nodes = e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct()
@@ -212,15 +194,13 @@ object PageRank {
     require(ns > 0, "no seed id is present in the graph")
     // node-sized static frame: seed-vector value + weighted out-degree
     // (null = dangling), persisted once across rounds
-    val base = nodes
+    val base = Memos.persist(nodes
       .join(seedIds.select(col("__n"), lit(1).as("__is")), Seq("__n"), "left")
       .join(outw.select(col("__s").as("__n"), col("__ow")), Seq("__n"), "left")
       .select(col("__n"),
         when(col("__is").isNotNull, lit(1.0) / ns).otherwise(lit(0.0))
           .as("__sv"),
-        col("__ow"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track(base)
+        col("__ow")))
     val oneMinusA = 1.0 - alpha
     var st = base.select(col("__n"), lit(0.0).as("__p"),
       round(col("__sv"), quantize).as("__r")).localCheckpoint()

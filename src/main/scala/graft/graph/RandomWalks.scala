@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Deterministic uniform random-walk corpus generation (DeepWalk,
   * Perozzi, Al-Rfou & Skiena KDD'14; equals node2vec with p = q = 1,
@@ -44,9 +45,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object RandomWalks {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("walks", df)
-
   /** @param sym   symmetrized edge frame (`__s`, `__t`, `__w`) — the
     *   [[EdgeFrames.symmetrizedWeighted]] contract; (`__s`, `__t`)
     *   unique. Hops are uniform over DISTINCT neighbors (the DeepWalk
@@ -68,16 +66,14 @@ object RandomWalks {
       salt: String = "rw"): DataFrame = {
     require(walksPerNode >= 1 && steps >= 1,
       s"need walksPerNode >= 1 and steps >= 1, got $walksPerNode, $steps")
-    val ranks = track(sym
+    val ranks = Memos.persist(sym
       .select(col("__s").as("__rs"), col("__t").as("__rt"))
       .withColumn("__r",
         (row_number().over(Window.partitionBy("__rs").orderBy("__rt"))
-          - 1).cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val deg = track(sym.groupBy("__s")
+          - 1).cast("long")))
+    val deg = Memos.persist(sym.groupBy("__s")
       .agg(count(lit(1)).as("__deg"))
-      .select(col("__s").as("__ds"), col("__deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .select(col("__s").as("__ds"), col("__deg")))
     var frontier = seeds
       .select(col("__n").cast("long").as("__n")).distinct()
       .select(col("__n"),
@@ -141,21 +137,18 @@ object RandomWalks {
     val wReturn = math.round(1e6 / p)
     val wLocal = 1000000L
     val wOut = math.round(1e6 / q)
-    val edges = track(sym
-      .select(col("__s").as("__es"), col("__t").as("__et"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val deg = track(sym.groupBy("__s")
+    val edges = Memos.persist(sym
+      .select(col("__s").as("__es"), col("__t").as("__et")))
+    val deg = Memos.persist(sym.groupBy("__s")
       .agg(count(lit(1)).as("__deg"))
-      .select(col("__s").as("__ds"), col("__deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .select(col("__s").as("__ds"), col("__deg")))
     // one ranked-neighbor frame serves both the uniform hop (equi-join
     // on the rank) and the biased hops (candidate expansion)
-    val rankIdx = track(sym
+    val rankIdx = Memos.persist(sym
       .select(col("__s").as("__rs"), col("__t").as("__rt"))
       .withColumn("__r",
         (row_number().over(Window.partitionBy("__rs").orderBy("__rt"))
-          - 1).cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+          - 1).cast("long")))
     def hashDraw(i: Int, modulus: org.apache.spark.sql.Column) = pmod(
       conv(substring(md5(concat(lit(salt),
         col("walk_id").cast("string"), lit("-" + i))), 1, 15), 16, 10)

@@ -62,11 +62,10 @@ object Scc {
     // readout is unchanged.
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"))
-    val both = e.select(lit(0).as("__dir"), col("__s"), col("__t"))
-      .unionByName(e.select(lit(1).as("__dir"), col("__t").as("__s"),
-        col("__s").as("__t")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Memos.tracked("scc", both)
+    val both = graft.core.Memos.persist(
+      e.select(lit(0).as("__dir"), col("__s"), col("__t"))
+        .unionByName(e.select(lit(1).as("__dir"), col("__t").as("__s"),
+          col("__s").as("__t"))))
     val nodes = e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct()
     var dist = nodes

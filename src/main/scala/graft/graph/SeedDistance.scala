@@ -38,10 +38,8 @@ object SeedDistance {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"))
-    val nodes = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Memos.tracked("bfs", nodes)
+    val nodes = graft.core.Memos.persist(e.select(col("__s").as("__n"))
+      .union(e.select(col("__t").as("__n"))).distinct())
     val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
     var dist = nodes.join(seedIds.select(col("__n"), lit(0L).as("__d")),
         Seq("__n"), "left")

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Exact triangle counting + local clustering coefficient via
   * degree-ordered wedge joins (Suri & Vassilvitskii, "Counting
@@ -29,19 +30,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object Triangles {
 
-  /** Persisted intermediates registered with [[graft.core.Memos.tracked]]
-    * so Bench's between-pass clearAll() releases executor storage.
-    */
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("tri", df)
-
   /** @param pairs undirected edge list, columns `id_a`, `id_b`
     *   (integral); duplicates and self-loops tolerated (deduped /
     *   dropped).
     */
   def nodeTriangles(pairs: DataFrame): DataFrame =
-    nodeTrianglesOn(track(EdgeFrames.symmetrizedWeighted(pairs)
-      .persist(StorageLevel.MEMORY_AND_DISK)))
+    nodeTrianglesOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)))
 
   /** [[nodeTriangles]] over a shared [[EdgeFrames.symmetrizedWeighted]]
     * frame: the canonical u < v edge set is its __s < __t half, and
@@ -54,9 +48,8 @@ object Triangles {
 
     // true (undirected) degree — consumed by both orientation joins and
     // the final report
-    val deg = track(sym.groupBy("__s").agg(count(lit(1)).as("degree"))
-      .select(col("__s").as("id"), col("degree"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val deg = Memos.persist(sym.groupBy("__s").agg(count(lit(1)).as("degree"))
+      .select(col("__s").as("id"), col("degree")))
 
     // orient each edge low-rank → high-rank, rank = (degree, id);
     // carry the dst rank so wedge ordering needs no further join
@@ -67,11 +60,10 @@ object Triangles {
     }
     val uLow = col("__du") < col("__dv") ||
       (col("__du") === col("__dv") && col("u") < col("v"))
-    val oriented = track(lowFirst.select(
+    val oriented = Memos.persist(lowFirst.select(
         when(uLow, col("u")).otherwise(col("v")).as("src"),
         when(uLow, col("v")).otherwise(col("u")).as("dst"),
-        when(uLow, col("__dv")).otherwise(col("__du")).as("dstDeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        when(uLow, col("__dv")).otherwise(col("__du")).as("dstDeg")))
 
     // wedges pivoting at the lowest-rank corner; the two arms ordered
     // by the same rank so the candidate closing edge (b, c) is already

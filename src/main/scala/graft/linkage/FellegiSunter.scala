@@ -2,7 +2,8 @@ package graft.linkage
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Fellegi–Sunter probabilistic record linkage (JASA 1969; Winkler's
   * EM estimation, and the model behind the public Splink engine) —
@@ -32,9 +33,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object FellegiSunter {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("fs", df)
-
   private val loClamp = 1e-6
   private val hiClamp = 0.999999
 
@@ -59,11 +57,10 @@ object FellegiSunter {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = pairs.sparkSession
     // the ONLY corpus-sized pass: pairs → ≤2^K pattern counts
-    val pat = track(pairs
+    val pat = Memos.persist(pairs
       .groupBy(fields.map(col): _*)
       .agg(count(lit(1)).cast("double").as("cnt"))
-      .coalesce(1)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .coalesce(1))
 
     val init = lit(lambda0).cast("double").as("lam") +:
       (fields.map(f => lit(m0).cast("double").as(s"m_$f")) ++
@@ -178,11 +175,10 @@ object FellegiSunter {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(fields.forall(uFixed.contains), "uFixed must cover every field")
     val spark = pairs.sparkSession
-    val pat = track(pairs
+    val pat = Memos.persist(pairs
       .groupBy(fields.map(col): _*)
       .agg(count(lit(1)).cast("double").as("cnt"))
-      .coalesce(1)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .coalesce(1))
     val init = lit(lambda0).cast("double").as("lam") +:
       fields.map(f => lit(m0).cast("double").as(s"m_$f"))
     var params = spark.range(1).select(init: _*)

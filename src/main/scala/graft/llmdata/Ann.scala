@@ -736,13 +736,12 @@ object Ann {
     // fold would re-run over the whole corpus. Projected to the narrow
     // (id, label, dist) triple BEFORE the persist: both consumers only
     // need those, so the cache never holds the embedding arrays.
-    val dists = df.join(broadcast(centroids), Seq(labelCol))
-      .select(col(idCol), col(labelCol),
-        sqrt(aggregate(zip_with(col(vecCol), col("__cv"),
-          (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-          lit(0.0), (acc, v) => acc + v)).as("dist"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Memos.tracked("outliers", dists)
+    val dists = graft.core.Memos.persist(
+      df.join(broadcast(centroids), Seq(labelCol))
+        .select(col(idCol), col(labelCol),
+          sqrt(aggregate(zip_with(col(vecCol), col("__cv"),
+            (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
+            lit(0.0), (acc, v) => acc + v)).as("dist")))
     val stats = dists.groupBy(col(labelCol))
       .agg(avg(col("dist")).as("__mu"), stddev_pop(col("dist")).as("__sd"))
     dists.join(broadcast(stats), Seq(labelCol))

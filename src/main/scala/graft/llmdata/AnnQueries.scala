@@ -3,7 +3,7 @@ package graft.llmdata
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryPack, Tables}
+import graft.core.{Memos, QueryPack, Tables}
 
 /** ANN / embedding-space operator gates (SURVEY.md LLM-data additions:
   * brute-force, LSH, IVF, PQ, PQ+rerank, IVFPQ, SQ8, SemDeDup,
@@ -15,7 +15,6 @@ import graft.core.{QueryPack, Tables}
   */
 object AnnQueries extends QueryPack {
 
-
   /** Three fixed 64-d centroids (simple deterministic lattice) shared by
     * the q_ann_ivf_fixed query and its generated SQL oracle.
     */
@@ -25,38 +24,28 @@ object AnnQueries extends QueryPack {
   /** q_ann_ivf and q_ann_ivf_recall gate the SAME seed-deterministic
     * quantizer training (identical nList/sample/iters/seed): train once
     * per data dir, gate twice. The memo holds only the centroid matrix
-    * (nList·dim doubles). Registered with [[graft.core.Memos]]: keys
-    * assume the dir's data is immutable for the JVM session; Bench
-    * clears it between passes.
+    * (nList·dim doubles).
     */
-  private val ivfMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]())
-  private def trainedIvfCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
-    ivfMemo.computeIfAbsent(dir, d =>
-      Ann.ivfIndex(Tables.embeddings(s, d), "embedding", nList = 8, dim = 64,
-        sampleSize = 2000, iters = 5, seed = 42))
+  private val trainedIvfCentroids = Memos.memo { (s, dir) =>
+    Ann.ivfIndex(Tables.embeddings(s, dir), "embedding", nList = 8, dim = 64,
+      sampleSize = 2000, iters = 5, seed = 42)
+  }
 
   /** q_ann_pq's product-quantization codebooks: trained once per data
     * dir on the same content-hash uniform sample as the IVF quantizer
-    * (m·ksub·dsub doubles — driver-tiny). Same dir-immutability
-    * contract; Bench clears between passes.
+    * (m·ksub·dsub doubles — driver-tiny).
     */
-  private val pqMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]())
-  private def trainedPqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent(dir, d =>
-      Ann.pqTrain(Tables.embeddings(s, d), "embedding", m = 8, ksub = 16,
-        dim = 64, sampleSize = 2000, iters = 5, seed = 42))
+  private val trainedPqCodebooks = Memos.memo { (s, dir) =>
+    Ann.pqTrain(Tables.embeddings(s, dir), "embedding", m = 8, ksub = 16,
+      dim = 64, sampleSize = 2000, iters = 5, seed = 42)
+  }
 
   /** q_ann_sq8's per-dimension quantization grid: one aggregate pass
-    * per data dir (2·64 driver doubles). Same dir-immutability
-    * contract; Bench clears between passes.
+    * per data dir (2·64 driver doubles).
     */
-  private val sqMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Double])]())
-  private def trainedSqGrid(s: SparkSession, dir: String): (Array[Double], Array[Double]) =
-    sqMemo.computeIfAbsent(dir, d =>
-      Ann.sqTrain(Tables.embeddings(s, d), "embedding", dim = 64))
+  private val trainedSqGrid = Memos.memo { (s, dir) =>
+    Ann.sqTrain(Tables.embeddings(s, dir), "embedding", dim = 64)
+  }
 
 
   /** Generated IVF probe-search oracle for arbitrary literal centroids —
@@ -881,30 +870,29 @@ object AnnQueries extends QueryPack {
     * content-hash sample + seeded driver Lloyd make the centroids a
     * deterministic function of the data dir, so — Verify runs every
     * query BEFORE dumping oracle SQL — the trained centroids sit in
-    * [[ivfMemo]] by generation time and can be embedded as literal
+    * [[trainedIvfCentroids]] by generation time and can be embedded as literal
     * VALUES, the q_ann_ivf_fixed / q_hashing_tf technique. Emitted only
     * when the memo holds exactly one dir (a Verify run); on a subset run
     * that skipped q_ann_ivf the key is omitted and the driver falls back
     * to its rows-only check.
     */
   private def trainedIvfOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    ivfMemo.values.asScala.toList match {
+    trainedIvfCentroids.values match {
       case centroids :: Nil => Map("q_ann_ivf" -> ivfOracleSql(centroids, nProbe = 3))
       case _ => Map.empty
     }
   }
 
   /** EXACT oracle for q_ann_pq, by the same technique: the codebooks
-    * are a deterministic function of the data dir and sit in [[pqMemo]]
-    * by oracle-generation time, so they embed as literal VALUES. The
+    * are a deterministic function of the data dir and sit in
+    * [[trainedPqCodebooks]] by oracle-generation time, so they embed as
+    * literal VALUES. The
     * SQL mirrors the Spark arithmetic term for term: corpus encode
     * distance `s·(−2)+‖c‖²` (first-minimum per subspace), query table
     * entry `‖q_j‖² + (s·(−2)+‖c‖²)`, ADC = Σ_j table(code_j).
     */
   private def trainedPqOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    pqMemo.values.asScala.toList match {
+    trainedPqCodebooks.values match {
       case cbs :: Nil => Map(
         "q_ann_pq" -> pqOracleSql(cbs, k = 3),
         "q_ann_pq_rerank" -> pqRerankOracleSql(cbs, rerank = 20, k = 3))
@@ -920,8 +908,7 @@ object AnnQueries extends QueryPack {
     * oracle; the two meet in the `pairs ⋈ codes ⋈ qd` ADC sum.
     */
   private def trainedIvfPqOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    (ivfMemo.values.asScala.toList, pqMemo.values.asScala.toList) match {
+    (trainedIvfCentroids.values, trainedPqCodebooks.values) match {
       case (cents :: Nil, cbs :: Nil) =>
         Map("q_ann_ivfpq" -> ivfPqOracleSql(cents, cbs, nProbe = 3, k = 3),
           "q_ann_ingest" -> ingestOracleSql(cents, cbs))
@@ -1078,14 +1065,13 @@ object AnnQueries extends QueryPack {
 
   /** EXACT oracle for q_ann_sq8, by the trainedPqOracle technique: the
     * per-dim grid is a deterministic function of the data dir and sits
-    * in [[sqMemo]] by generation time. The SQL mirrors the Spark
+    * in [[trainedSqGrid]] by generation time. The SQL mirrors the Spark
     * arithmetic term for term: encode `clamp(round((x−mn)/sc),0,255)`,
     * decode `mn + code·sc`, asymmetric cosine (exact query · decoded
     * corpus), rank on round(cos, 6) ties by id.
     */
   private def trainedSqOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    sqMemo.values.asScala.toList match {
+    trainedSqGrid.values match {
       case (mins, scales) :: Nil => Map("q_ann_sq8" -> sqOracleSql(mins, scales, k = 3))
       case _ => Map.empty
     }

@@ -100,7 +100,7 @@ object Bitext {
     // candidate cosines feed three branches (both hubness normalizers
     // + the scored join spine) — eager persist so the per-pair dot
     // products run once, not 3× concurrently (FanOut.shared doc)
-    val pairs = graft.core.FanOut.shared("bitext", pairs0)
+    val pairs = graft.core.FanOut.shared(pairs0)
     val ka = topkMean(pairs, "id_a", "id_b", k, "__ma")
     val kb = topkMean(pairs, "id_b", "id_a", k, "__mb")
     val m = pairs.join(ka, "id_a").join(kb, "id_b")

@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memos, Tables}
 import graft.functions.BpeTokenCount
 
 /** In-repo byte-pair-encoding learner (Sennrich et al.,
@@ -97,22 +97,12 @@ object Bpe {
 
   /** Merge table trained once per data dir on the documents table —
     * the trainedPqCodebooks pattern: deterministic function of the dir,
-    * memoized for the JVM session (Bench clears between passes), and
-    * embeddable as oracle VALUES at SQL-generation time.
+    * memoized for the JVM session, and embeddable as oracle VALUES at
+    * SQL-generation time.
     */
   val NumMerges = 48
-  private val bpeMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]())
-  def trained(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", numMerges = NumMerges))
-
-  /** The memoized tables (for oracle generation — emitted only when
-    * exactly one dir has trained, i.e. a Verify run).
-    */
-  def memoized: List[Seq[(String, String)]] = {
-    import scala.jdk.CollectionConverters._
-    bpeMemo.values.asScala.toList
+  val trained = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir), "text", numMerges = NumMerges)
   }
 
   def countExpr(text: Column, merges: Seq[(String, String)]): Column =

@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memos, Tables}
 import graft.functions.ByteBpeEncode
 
 /** Byte-level BPE learner — the fourth production tokenizer family
@@ -40,15 +40,8 @@ object ByteBpe {
     * deterministic function of the dir, embeddable as oracle VALUES).
     */
   val NumMerges = 48
-  private val memo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]())
-  def trained(s: SparkSession, dir: String): Seq[(String, String)] =
-    memo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", numMerges = NumMerges))
-
-  def memoized: List[Seq[(String, String)]] = {
-    import scala.jdk.CollectionConverters._
-    memo.values.asScala.toList
+  val trained = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir), "text", numMerges = NumMerges)
   }
 
   def encodeExpr(text: Column, merges: Seq[(String, String)]): Column =

@@ -3,6 +3,8 @@ package graft.llmdata
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Memos
+
 /** Coreset selection by k-center greedy (farthest-first traversal) —
   * Gonzalez 1985's 2-approximation to the k-center cover, used as the
   * embedding-space data-pruning rule for training sets (Sener &
@@ -34,9 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Coreset {
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("coreset", df)
-
   /** Squared euclidean distance between two array<double> columns as a
     * left-to-right indexed fold — the summation-order convention every
     * embedding gate shares with its oracle.
@@ -52,9 +51,8 @@ object Coreset {
   def kCenterGreedy(df: DataFrame, vecCol: String, idCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val pts = track(df.select(col(idCol).cast("long").as("__id"),
-        col(vecCol).cast("array<double>").as("__v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pts = Memos.persist(df.select(col(idCol).cast("long").as("__id"),
+        col(vecCol).cast("array<double>").as("__v")))
 
     // deterministic seed: the smallest id (1-row broadcast, no collect)
     val seed = pts.orderBy(col("__id")).limit(1)

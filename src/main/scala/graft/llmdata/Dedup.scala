@@ -559,9 +559,9 @@ object Dedup {
     * degenerate boilerplate prefixes — documents whose rarest shingles
     * are shared by >cap documents may lose pairs; prefer minhash there.
     *
-    * The returned frame is persisted (MEMORY_AND_DISK, already
-    * materialized); the CALLER owns the cache and should `.unpersist()`
-    * it when done. Intermediates are released eagerly inside.
+    * The returned frame is materialized and persisted through
+    * [[graft.core.Memos.persist]]; a caller done with it may
+    * `.unpersist()` it early. Intermediates are released eagerly inside.
     */
   def jaccardNearDupPairs(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.8, shingleN: Int = 3,
@@ -626,7 +626,7 @@ object Dedup {
       .union(cands.select(col("id_b").as(idCol))).distinct()
     val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
       .select(col(idCol), shingleSetExpr(textCol, shingleN).as("__shs"))
-    val res = cands
+    val res = graft.core.Memos.persist(cands
       .join(candDocs.select(col(idCol).as("id_a"), col("__shs").as("__sh_a")),
         Seq("id_a"))
       .join(candDocs.select(col(idCol).as("id_b"), col("__shs").as("__sh_b")),
@@ -635,8 +635,7 @@ object Dedup {
       .withColumn("jaccard", col("c").cast("double") /
         (size(col("__sh_a")) + size(col("__sh_b")) - col("c")))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("id_a", "id_b", "jaccard"))
     res.count() // materialize verified pairs, then free the candidate cache
     cands.unpersist(blocking = false)
     res
@@ -669,8 +668,9 @@ object Dedup {
     * minhash first. Verification is pairwise `array_intersect` on the
     * candidates, never a shingle fan-out.
     *
-    * The returned frame is persisted (already materialized); the
-    * CALLER owns the cache and should `.unpersist()` it when done.
+    * The returned frame is materialized and persisted through
+    * [[graft.core.Memos.persist]]; a caller done with it may
+    * `.unpersist()` it early.
     */
   /** @param maxDf shingles appearing in more than `maxDf` documents are
     *   dropped from the CANDIDATE JOIN ONLY (both streams) — the
@@ -715,7 +715,7 @@ object Dedup {
       .union(cands.select(col("id_b").as(idCol))).distinct()
     val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
       .select(col(idCol), shingleSetExpr(textCol, shingleN).as("__shs"))
-    val res = cands
+    val res = graft.core.Memos.persist(cands
       .join(candDocs.select(col(idCol).as("id_a"), col("__shs").as("__sh_a")),
         Seq("id_a"))
       .join(candDocs.select(col(idCol).as("id_b"), col("__shs").as("__sh_b")),
@@ -724,8 +724,7 @@ object Dedup {
       .withColumn("containment",
         col("c").cast("double") / size(col("__sh_a")))
       .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("id_a", "id_b", "containment"))
     res.count() // materialize, then free the candidate cache
     cands.unpersist(blocking = false)
     res
@@ -768,9 +767,10 @@ object Dedup {
     *
     * EAGER: materializes intermediate frames to release their caches as
     * it goes (signatures after banding, candidates after verification).
-    * The returned pair frame is persisted — small by construction
-    * (bounded by the verified candidates) — and callers that are done
-    * with it may `.unpersist()` it.
+    * The returned pair frame is persisted through
+    * [[graft.core.Memos.persist]] — small by construction (bounded by
+    * the verified candidates) — and callers that are done with it may
+    * `.unpersist()` it early.
     */
   def minhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.8, k: Int = 64, rowsPerBand: Int = 4,
@@ -805,8 +805,8 @@ object Dedup {
       .union(cands.select(col("id_b").as(idCol))).distinct()
     val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
     val sh = shingles(candDocs, textCol, idCol, shingleN)
-    val res = jaccard(cands, sh, idCol).filter(col("jaccard") >= threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val res = graft.core.Memos.persist(
+      jaccard(cands, sh, idCol).filter(col("jaccard") >= threshold))
     res.count() // materialize verified pairs, then free the candidate cache
     cands.unpersist(blocking = false)
     res
@@ -836,9 +836,10 @@ object Dedup {
     * pigeonhole band join: split the hash into (maxHamming+1) chunks —
     * any pair within distance must agree on ≥1 chunk exactly.
     *
-    * The returned frame is persisted (MEMORY_AND_DISK, already
-    * materialized); the CALLER owns the cache and should `.unpersist()`
-    * it when done (the simhash intermediate is released eagerly inside).
+    * The returned frame is materialized and persisted through
+    * [[graft.core.Memos.persist]]; a caller done with it may
+    * `.unpersist()` it early (the simhash intermediate is released
+    * eagerly inside).
     */
   def simhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, bits: Int = 60,
@@ -889,12 +890,12 @@ object Dedup {
       col(idCol).as("id_a"), col(hashCol).as("sh_a"))
     val b = banded.select(col("chunk"), col("cv"),
       col(idCol).as("id_b"), col(hashCol).as("sh_b"))
-    val res = a.join(b, Seq("chunk", "cv")).filter(col("id_a") < col("id_b"))
+    val res = graft.core.Memos.persist(a.join(b, Seq("chunk", "cv"))
+      .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("hamming") <= maxHamming))
     res.count() // materialize pairs (small) before callers drop inputs
     res
   }
@@ -957,25 +958,17 @@ object Dedup {
     val wRun = Window.partitionBy(idCol).orderBy("p")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prevEnd = max(col("p") + k).over(wPrev)
-    val spans = marked
+    val spans = graft.core.Memos.persist(marked
       .withColumn("__new", when(prevEnd.isNull || col("p") > prevEnd, 1)
         .otherwise(0))
       .withColumn("__island", sum(col("__new")).over(wRun))
       .groupBy(col(idCol), col("__island"))
       .agg(min(col("p")).as("span_start"), (max(col("p")) + k).as("span_end"))
-      .drop("__island")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("__island"))
     spans.count() // materialize the (bounded, merged) span set ...
     grams.unpersist(blocking = false) // ... then release the anchor cache
-    // The span cache is session-lived but registered, so Memos.clearAll
-    // (Bench between-pass hygiene, or any caller) releases it.
-    spanCache.put(s"spans-${spanCacheSeq.incrementAndGet()}", spans)
     spans
   }
-
-  private val spanCache =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private val spanCacheSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Per-document summary of [[exactSubstrSpans]]: span count, duplicated
     * char total, duplicated fraction of the document. Every input doc

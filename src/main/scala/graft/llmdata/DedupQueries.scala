@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryPack, Tables}
+import graft.core.{Memos, QueryPack, Tables}
 
 /** Deduplication gate family (SURVEY.md LLM-data additions: exact,
   * MinHash+LSH demo and production parameterizations, exact n-gram
@@ -18,109 +18,71 @@ import graft.core.{QueryPack, Tables}
   */
 object DedupQueries extends QueryPack {
 
+  /** A pair gate's result, computed once per dir and served from the
+    * collected (id_a, id_b, `third`) rows: the pair builders hand back a
+    * persisted frame the CALLER owns, so the small verified pair list
+    * (bounded by the near-dup count at gate SF) is collected, the frame
+    * unpersisted at once, and later gates read the memo — never data
+    * or a DataFrame.
+    */
+  private def collectedPairs[T: scala.reflect.runtime.universe.TypeTag](
+      third: String, get: Row => T)(build: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = {
+    val memo = Memos.memo { (s, dir) =>
+      val p = build(s, dir)
+      val out = p.select("id_a", "id_b", third).collect()
+        .map(r => (r.getLong(0), r.getLong(1), get(r)))
+      p.unpersist(blocking = false)
+      out
+    }
+    (s, dir) => {
+      import s.implicits._
+      memo(s, dir).toSeq.toDF("id_a", "id_b", third)
+    }
+  }
 
   /** q_dedup_minhash and q_drop_near_dups gate the SAME oracle-family
     * pipeline (k=8 / rowsPerBand=2 / 3-gram shingles, md5-per-seed):
     * run it once per data dir and gate twice — the fit-once/gate-twice
-    * memo the KMeans gates use. The memo holds only the collected
-    * verified pairs (bounded by the near-dup count at gate SF), never
-    * data or a DataFrame. Registered with [[graft.core.Memos]]: keys
-    * assume the dir's data is immutable for the JVM session; Bench
-    * clears it between passes.
+    * memo the KMeans gates use.
     */
-  private val oraclePairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private[llmdata] def oracleMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = oraclePairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.minhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
+  private[llmdata] val oracleMinhashPairs =
+    collectedPairs("jaccard", _.getDouble(2)) { (s, dir) =>
+      Dedup.minhashNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
         threshold = 0.8, k = 8, rowsPerBand = 2, shingleN = 3,
         oracleCompatible = true)
-      val out = p.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "jaccard")
-  }
+    }
 
-  /** q_dedup_jaccard's exact PPJoin pairs, collected-and-released per
-    * dir (the [[oracleMinhashPairs]] pattern): the builder hands back a
-    * persisted frame the CALLER owns — collect the small verified pair
-    * list, unpersist immediately, and serve later gates from the memo.
-    * Registered with [[graft.core.Memos]] under the same dir-immutable
-    * contract.
-    */
-  private val jaccardPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private def exactJaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = jaccardPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.jaccardNearDupPairs(Tables.documents(s, d), "text", "doc_id",
+  /** q_dedup_jaccard's exact PPJoin pairs. */
+  private val exactJaccardPairs =
+    collectedPairs("jaccard", _.getDouble(2)) { (s, dir) =>
+      Dedup.jaccardNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
         threshold = 0.8, shingleN = 3)
-      val out = p.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "jaccard")
-  }
+    }
 
-  /** q_dedup_containment's exact directed pairs, collected-and-released
-    * per dir (the [[exactJaccardPairs]] pattern).
-    */
-  private val containmentPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private def exactContainmentPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = containmentPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.containmentPairs(Tables.documents(s, d), "text", "doc_id",
+  /** q_dedup_containment's exact directed pairs. */
+  private val exactContainmentPairs =
+    collectedPairs("containment", _.getDouble(2)) { (s, dir) =>
+      Dedup.containmentPairs(Tables.documents(s, dir), "text", "doc_id",
         threshold = 0.8, shingleN = 3)
-      val out = p.select("id_a", "id_b", "containment").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "containment")
-  }
+    }
 
-  /** Same collect-and-unpersist hygiene for the PRODUCTION-family
-    * minhash pipeline (k=64/rowsPerBand=4, cheap mixes) — the builders
-    * hand the caller a persisted frame; without this, every Verify/Bench
-    * invocation of the query leaked one cached result set.
+  /** The PRODUCTION-family minhash pipeline (k=64/rowsPerBand=4, cheap
+    * mixes); without the memo, every Verify/Bench invocation of the
+    * query leaked one cached result set.
     */
-  private val defaultPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Double)]]())
-  private def defaultMinhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = defaultPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.minhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
+  private val defaultMinhashPairs =
+    collectedPairs("jaccard", _.getDouble(2)) { (s, dir) =>
+      Dedup.minhashNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
         threshold = 0.8)
-      val out = p.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "jaccard")
-  }
+    }
 
-  /** And for the simhash pigeonhole pipeline (hamming ≤ 3). */
-  private val simhashPairsMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long, Int)]]())
-  private def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val rows = simhashPairsMemo.computeIfAbsent(dir, d => {
-      val p = Dedup.simhashNearDupPairs(Tables.documents(s, d), "text", "doc_id",
+  /** And the simhash pigeonhole pipeline (hamming ≤ 3). */
+  private val simhashPairs =
+    collectedPairs("hamming", _.getAs[Number](2).intValue) { (s, dir) =>
+      Dedup.simhashNearDupPairs(Tables.documents(s, dir), "text", "doc_id",
         maxHamming = 3)
-      val out = p.select("id_a", "id_b", "hamming").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          r.getAs[Number]("hamming").intValue))
-      p.unpersist(blocking = false)
-      out
-    })
-    import s.implicits._
-    rows.toSeq.toDF("id_a", "id_b", "hamming")
-  }
-
+    }
 
   private[llmdata] val minhashPairCtes: String =
     """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),

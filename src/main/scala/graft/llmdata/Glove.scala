@@ -2,9 +2,8 @@ package graft.llmdata
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{ExactAgg, Hashing}
+import graft.core.{ExactAgg, Hashing, Memos}
 
 /** Distributed GloVe embedding fit by alternating least squares
   * (Pennington, Socher & Manning EMNLP'14 objective; ALS in place of
@@ -36,9 +35,6 @@ import graft.core.{ExactAgg, Hashing}
   * whole trajectory as chained CTEs.
   */
 object Glove {
-
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("glove", df)
 
   val Xmax = 100.0
   val Alpha = 0.75
@@ -103,8 +99,7 @@ object Glove {
       salt: String = "glove"): DataFrame = {
     require(alternations >= 1, s"need alternations >= 1, got $alternations")
     require(d >= 1, s"need d >= 1, got $d")
-    val base = track(weighted(cooc, xmax, alpha)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val base = Memos.persist(weighted(cooc, xmax, alpha))
     var ctx = initFactors(
         base.select(col("context").as("token")).distinct(), d, salt)
       .localCheckpoint()

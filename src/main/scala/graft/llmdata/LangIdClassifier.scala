@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memos, Tables}
 import graft.functions.HashedLinearScore
 
 /** Trained multiclass language identifier — the fastText-langid shape
@@ -222,14 +222,8 @@ object LangIdClassifier {
   /** Per-dir trained model memo (the trained-index pattern: queries
     * run first and populate it; oracle generation reads it back).
     */
-  private val memo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Array[Double], Double)]]())
-  def trained(s: SparkSession, dir: String): Seq[(String, Array[Double], Double)] =
-    memo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", "doc_id", "lang"))
-  def memoized: List[Seq[(String, Array[Double], Double)]] = {
-    import scala.jdk.CollectionConverters._
-    memo.values.asScala.toList
+  val trained = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir), "text", "doc_id", "lang")
   }
 
   /** DuckDB CTE block ending in `lpred(doc_id, pred_lang)`: weights and

@@ -3,7 +3,7 @@ package graft.llmdata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryPack, Tables}
+import graft.core.{Memos, QueryPack, Tables}
 import graft.modelselection.Splits
 
 /** Oracle-verified queries for the LLM-data-pipeline operators: text
@@ -19,102 +19,90 @@ object LlmDataQueries extends QueryPack {
   private val pipelineMixTargets: Map[String, Double] = Map(
     "en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1, "zh" -> 0.1)
 
-  /** The v5 flagship's packed output, built once per dir and persisted
-    * (fit-once/gate-twice convention — q_llm_pipeline_v5 orders it,
-    * q_llm_pipeline_v6 aggregates it into shard manifests; without the
-    * memo v6 would re-run the entire five-stage pipeline). Cleared by
-    * Memos.clearAll between Bench passes.
-    */
   /** Neyman allocation fit once per dir and persisted: the allocation
     * gate orders it, the sample gate joins against it (and collects
     * its max to size the top-k heap) — both plans deterministically
     * read the cached |strata|-row frame instead of racing one gate's
     * eager persist against the other's plan build.
     */
-  private val neymanMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private def neymanAllocMemo(s: SparkSession, dir: String): DataFrame =
-    neymanMemo.computeIfAbsent(dir, d => {
-      val a = Splits.neymanAllocation(Tables.documents(s, d), "source",
-          "n_chars", k = 200)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      a.count() // materialize so both gate plans see the cache
-      a
-    })
+  private val neymanAllocMemo = Memos.memo { (s, dir) =>
+    val a = Memos.persist(Splits.neymanAllocation(Tables.documents(s, dir),
+      "source", "n_chars", k = 200))
+    a.count() // materialize so both gate plans see the cache
+    a
+  }
 
   /** Per-dir DSIR importance weights (n_grams, logw per doc) — the
     * identical ratios+weights computation fed q_dsir_weights,
     * q_dsir_sample AND the v5 pipeline's selection stage; fit-once
-    * memo (r14 optimization, the neymanAllocMemo convention). */
-  private val dsirMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private def dsirWeightsMemo(s: SparkSession, dir: String): DataFrame =
-    dsirMemo.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-      val ratios = Dsir.bucketLogRatios(
-        docs.filter(col("lang") === "en"), docs, "text")
-      val w = Dsir.importanceWeights(docs, "text", "doc_id", ratios)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      w.count()
-      w
-    })
+    * memo (r14 optimization). */
+  private val dsirWeightsMemo = Memos.memo { (s, dir) =>
+    val docs = Tables.documents(s, dir)
+    val ratios = Dsir.bucketLogRatios(
+      docs.filter(col("lang") === "en"), docs, "text")
+    val w = Memos.persist(
+      Dsir.importanceWeights(docs, "text", "doc_id", ratios))
+    w.count()
+    w
+  }
 
-  private val v5Memo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private def v5Packed(s: SparkSession, dir: String): DataFrame =
-    v5Memo.computeIfAbsent(dir, _ => {
-      val t = col("text")
-      val (wts, b) = QualityClassifier.trained(s, dir)
-      val margin = QualityClassifier.marginExpr(t, wts, b)
-      val scored = graft.core.FanOut.byKey(Tables.documents(s, dir), "doc_id").select(
-        col("doc_id"), t, col("source"),
-        (lit(1.0) / (lit(1.0) + exp(margin * lit(-1.0)))).as("p_quality"),
-        margin.as("qmargin"),
-        TextStats.languageId(t).as("lang"),
-        TextStats.fingerprint(t).as("fp"),
-        TextStats.dupNgramCharFrac(t, 2).as("dup2"),
-        TextStats.tokenCount(t).as("n_tokens"),
-        length(t).as("n_chars"))
-        .filter(col("qmargin") > 0 && col("dup2") <= 0.15)
-      val eval3 = Tables.documents(s, dir).filter(col("doc_id") < 3)
-      val clean = Dedup.decontaminate(scored, "text", "doc_id", eval3, "text", n = 3)
-      val deduped = clean.groupBy(col("fp"))
-        .agg(min_by(struct(col("doc_id"), col("source"), col("lang"),
-          col("p_quality"), col("n_tokens"), col("n_chars")), col("doc_id")).as("r"))
-        .select(col("r.doc_id").as("doc_id"), col("r.source").as("source"),
-          col("r.lang").as("lang"), col("r.p_quality").as("p_quality"),
-          col("r.n_tokens").as("n_tokens"), col("r.n_chars").as("n_chars"))
-      val lowDup = Dedup.exactSubstrStats(Tables.documents(s, dir),
-          "text", "doc_id")
-        .filter(col("dup_frac") <= 0.5).select("doc_id")
-      val substrFiltered = deduped.join(lowDup, Seq("doc_id"), "left_semi")
-      val nll = NgramLm.perplexityScore(Tables.documents(s, dir), "text",
-          "doc_id", col("lang") === "en")
-        .select(col("doc_id"), col("nll"))
-      val withNll = substrFiltered.join(broadcast(nll), Seq("doc_id"))
-      // DSIR selection: corpus-wide weights, off-distribution tail out
-      // (the SAME ratios+weights as the q_dsir_* gates — shared memo)
-      val dweights = dsirWeightsMemo(s, dir)
-        .select(col("doc_id"), col("logw"))
-      val selected = withNll.join(broadcast(dweights), Seq("doc_id"))
-        .filter(round(col("logw"), 6) > lit(-0.5))
-      val rates = Splits.mixtureRates(selected, "lang", "n_chars",
-        pipelineMixTargets, unitBudget = 30000)
-      val sampled = Splits.mixtureSample(selected, "doc_id", "lang", rates,
-        salt = "mix5")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("doc_id"))
-      sampled
-        .withColumn("__cum", sum(col("n_tokens")).over(w))
-        .withColumn("pack_id",
-          floor((col("__cum") - col("n_tokens")) / lit(512)).cast("int"))
-        .select(col("doc_id"), col("source"), col("lang"),
-          round(col("p_quality"), 6).as("p_quality"),
-          round(col("nll"), 6).as("nll"),
-          round(col("logw"), 6).as("logw"), col("n_tokens"),
-          col("pack_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  /** The v5 flagship's packed output, built once per dir and persisted
+    * (fit-once/gate-twice convention — q_llm_pipeline_v5 orders it,
+    * q_llm_pipeline_v6 aggregates it into shard manifests; without the
+    * memo v6 would re-run the entire five-stage pipeline).
+    */
+  private val v5Packed = Memos.memo { (s, dir) =>
+    val t = col("text")
+    val (wts, b) = QualityClassifier.trained(s, dir)
+    val margin = QualityClassifier.marginExpr(t, wts, b)
+    val scored = graft.core.FanOut.byKey(Tables.documents(s, dir), "doc_id").select(
+      col("doc_id"), t, col("source"),
+      (lit(1.0) / (lit(1.0) + exp(margin * lit(-1.0)))).as("p_quality"),
+      margin.as("qmargin"),
+      TextStats.languageId(t).as("lang"),
+      TextStats.fingerprint(t).as("fp"),
+      TextStats.dupNgramCharFrac(t, 2).as("dup2"),
+      TextStats.tokenCount(t).as("n_tokens"),
+      length(t).as("n_chars"))
+      .filter(col("qmargin") > 0 && col("dup2") <= 0.15)
+    val eval3 = Tables.documents(s, dir).filter(col("doc_id") < 3)
+    val clean = Dedup.decontaminate(scored, "text", "doc_id", eval3, "text", n = 3)
+    val deduped = clean.groupBy(col("fp"))
+      .agg(min_by(struct(col("doc_id"), col("source"), col("lang"),
+        col("p_quality"), col("n_tokens"), col("n_chars")), col("doc_id")).as("r"))
+      .select(col("r.doc_id").as("doc_id"), col("r.source").as("source"),
+        col("r.lang").as("lang"), col("r.p_quality").as("p_quality"),
+        col("r.n_tokens").as("n_tokens"), col("r.n_chars").as("n_chars"))
+    val lowDup = Dedup.exactSubstrStats(Tables.documents(s, dir),
+        "text", "doc_id")
+      .filter(col("dup_frac") <= 0.5).select("doc_id")
+    val substrFiltered = deduped.join(lowDup, Seq("doc_id"), "left_semi")
+    val nll = NgramLm.perplexityScore(Tables.documents(s, dir), "text",
+        "doc_id", col("lang") === "en")
+      .select(col("doc_id"), col("nll"))
+    val withNll = substrFiltered.join(broadcast(nll), Seq("doc_id"))
+    // DSIR selection: corpus-wide weights, off-distribution tail out
+    // (the SAME ratios+weights as the q_dsir_* gates — shared memo)
+    val dweights = dsirWeightsMemo(s, dir)
+      .select(col("doc_id"), col("logw"))
+    val selected = withNll.join(broadcast(dweights), Seq("doc_id"))
+      .filter(round(col("logw"), 6) > lit(-0.5))
+    val rates = Splits.mixtureRates(selected, "lang", "n_chars",
+      pipelineMixTargets, unitBudget = 30000)
+    val sampled = Splits.mixtureSample(selected, "doc_id", "lang", rates,
+      salt = "mix5")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("source")).orderBy(col("doc_id"))
+    Memos.persist(sampled
+      .withColumn("__cum", sum(col("n_tokens")).over(w))
+      .withColumn("pack_id",
+        floor((col("__cum") - col("n_tokens")) / lit(512)).cast("int"))
+      .select(col("doc_id"), col("source"), col("lang"),
+        round(col("p_quality"), 6).as("p_quality"),
+        round(col("nll"), 6).as("nll"),
+        round(col("logw"), 6).as("logw"), col("n_tokens"),
+        col("pack_id")))
+  }
 
   /** Shared BM25 term set and oracle CTE block (q_bm25, q_bm25_topk):
     * `bm(doc_id, lang, dl, bm25)` with the score already rounded to 6.
@@ -2939,7 +2927,7 @@ object LlmDataQueries extends QueryPack {
     * the same rounded-margin argmax with class-asc tie break.
     */
   private def trainedLangIdOracle: Map[String, String] =
-    LangIdClassifier.memoized match {
+    LangIdClassifier.trained.values match {
       case models :: Nil => Map(
         "q_langid_trained" ->
           s"""WITH ${LangIdClassifier.predictCteSql(models)}
@@ -3011,7 +2999,7 @@ object LlmDataQueries extends QueryPack {
   }
 
   private def trainedQualityOracle: Map[String, String] =
-    QualityClassifier.memoized match {
+    QualityClassifier.trained.values match {
       case (w, b) :: Nil =>
         val base = Map(
         "q_quality_classifier" ->
@@ -3272,7 +3260,7 @@ object LlmDataQueries extends QueryPack {
     * arithmetic.
     */
   private def trainedBpeOracle: Map[String, String] =
-    Bpe.memoized match {
+    Bpe.trained.values match {
       case merges :: Nil => Map(
         "q_bpe_tokens" ->
           s"""WITH RECURSIVE ${Bpe.bpeCteSql(merges)}
@@ -3307,7 +3295,7 @@ object LlmDataQueries extends QueryPack {
     * it ran.
     */
   private def trainedUnigramOracle: Map[String, String] = {
-    val uni = Unigram.memoized match {
+    val uni = Unigram.trained.values match {
       case model :: Nil => Map(
         "q_unigram_encode" ->
           s"""WITH RECURSIVE ${Unigram.unigramCteSql(model)}
@@ -3319,7 +3307,7 @@ object LlmDataQueries extends QueryPack {
              |ORDER BY doc_id""".stripMargin)
       case _ => Map.empty[String, String]
     }
-    val cov = Unigram.memoizedEn match {
+    val cov = Unigram.trainedEn.values match {
       case model :: Nil => Map(
         "q_tokenizer_coverage" ->
           s"""WITH RECURSIVE ${Unigram.unigramCteSql(model)}
@@ -3334,8 +3322,8 @@ object LlmDataQueries extends QueryPack {
              |GROUP BY d.lang ORDER BY d.lang""".stripMargin)
       case _ => Map.empty[String, String]
     }
-    val fert = (Bpe.memoized, Unigram.memoized, WordPiece.memoized,
-        ByteBpe.memoized) match {
+    val fert = (Bpe.trained.values, Unigram.trained.values,
+        WordPiece.trained.values, ByteBpe.trained.values) match {
       case (merges :: Nil, model :: Nil, wp :: Nil, bb :: Nil) => Map(
         "q_bpe_fertility" ->
           s"""WITH RECURSIVE ${Bpe.bpeCteSql(merges)},
@@ -3386,7 +3374,7 @@ object LlmDataQueries extends QueryPack {
     * 256-char surrogate map, then the same per-rank replace recursion).
     */
   private def trainedByteBpeOracle: Map[String, String] =
-    ByteBpe.memoized match {
+    ByteBpe.trained.values match {
       case bb :: Nil => Map(
         "q_byte_bpe" ->
           s"""WITH RECURSIVE ${ByteBpe.byteBpeCteSql(bb)}
@@ -3402,7 +3390,7 @@ object LlmDataQueries extends QueryPack {
     * over the same '#'-sanitized text the gate reads).
     */
   private def trainedWordPieceOracle: Map[String, String] =
-    WordPiece.memoized match {
+    WordPiece.trained.values match {
       case wp :: Nil => Map(
         "q_wordpiece_encode" ->
           s"""WITH RECURSIVE ${WordPiece.wordPieceCteSql(wp,

@@ -101,8 +101,7 @@ object NgramLm {
     val t = docs.select(col(keyCol), toks(col(textCol)).as("t"))
     val uni0 = t.select(col(keyCol), explode(col("t")).as("w"))
       .groupBy(keyCol, "w").agg(count(lit(1)).as("cw"))
-    val uni = uni0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    uniCache.put(s"uni-${uniCacheSeq.incrementAndGet()}", uni)
+    val uni = graft.core.Memos.persist(uni0)
     val bi = t.filter(size(col("t")) >= 2)
       .select(col(keyCol), explode(transform(sequence(lit(1), size(col("t")) - 1),
         i => concat_ws(" ", col("t")(i - 1), col("t")(i)))).as("bg"))
@@ -169,8 +168,7 @@ object NgramLm {
       .select(col("g.prev").as("prev"), col("g.w").as("w"))
       .groupBy("prev", "w").agg(count(lit(1)).as("cb"))
     // feeds ctx, cont, totals AND the per-token join — one aggregation
-    val bi = bi0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    uniCache.put(s"kn-${uniCacheSeq.incrementAndGet()}", bi)
+    val bi = graft.core.Memos.persist(bi0)
     val ctx = bi.groupBy("prev")
       .agg(sum("cb").cast("long").as("cctx"), count(lit(1)).as("n1f"))
     val cont = bi.groupBy("w").agg(count(lit(1)).as("n1b"))
@@ -208,9 +206,8 @@ object NgramLm {
     val (uni0, bi, totals) = train(docs.filter(refFilter), textCol)
     // uni feeds THREE broadcasts (unigram join, prev-count join, totals);
     // persist the vocab-sized count table so training is genuinely one
-    // pass, and register it so Memos.clearAll releases the cache.
-    val uni = uni0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    uniCache.put(s"uni-${uniCacheSeq.incrementAndGet()}", uni)
+    // pass.
+    val uni = graft.core.Memos.persist(uni0)
     score(docs, textCol, idCol, uni, bi, totals)
   }
 
@@ -238,11 +235,10 @@ object NgramLm {
     // The scored frame feeds both the cutoff aggregate and the final
     // join — persist the (id, key, n_tokens, nll) projection so the
     // scoring DAG runs once (bounded: 4 narrow columns per doc).
-    val scored = perplexityScoreByKey(docs, textCol, idCol, keyCol)
-      .select(col(idCol), col(keyCol), col("n_tokens"),
-        round(col("nll"), 6).as("nll"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    uniCache.put(s"buckets-${uniCacheSeq.incrementAndGet()}", scored)
+    val scored = graft.core.Memos.persist(
+      perplexityScoreByKey(docs, textCol, idCol, keyCol)
+        .select(col(idCol), col(keyCol), col("n_tokens"),
+          round(col("nll"), 6).as("nll")))
     val cuts = scored.groupBy(keyCol).agg(
       round(expr("percentile(nll, 0.3333333333333333D)"), 6).as("__c1"),
       round(expr("percentile(nll, 0.6666666666666666D)"), 6).as("__c2"))
@@ -254,8 +250,4 @@ object NgramLm {
       .select(col(idCol), col(keyCol), col("n_tokens"), col("nll"),
         col("bucket"))
   }
-
-  private val uniCache =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private val uniCacheSeq = new java.util.concurrent.atomic.AtomicLong()
 }

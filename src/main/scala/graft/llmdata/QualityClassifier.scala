@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memos, Tables}
 import graft.functions.HashedLinearScore
 
 /** Trained document-quality classifier — the component real pipelines
@@ -80,15 +80,8 @@ object QualityClassifier {
     * are a deterministic function of the dir, embeddable as oracle
     * VALUES at SQL-generation time.
     */
-  private val qcMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]())
-  def trained(s: SparkSession, dir: String): (Array[Double], Double) =
-    qcMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text", "doc_id"))
-
-  def memoized: List[(Array[Double], Double)] = {
-    import scala.jdk.CollectionConverters._
-    qcMemo.values.asScala.toList
+  val trained = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir), "text", "doc_id")
   }
 
   /** Margin column (w·x + b) — scan-fused, weights in-plan. */

@@ -87,10 +87,10 @@ object Retrieval {
     require(k >= 1 && lambda >= 0.0 && lambda <= 1.0)
     val spark = cands.sparkSession
     import spark.implicits._
-    var state = graft.core.Memos.tracked("mmr", cands.select(
+    var state = graft.core.Memos.persist(cands.select(
         col(idCol).cast("long").as("id"), col(relCol).as("rel"),
         col(vecCol).as("vec"))
-      .withColumn("maxsim", lit(0.0)).persist())
+      .withColumn("maxsim", lit(0.0)))
     // stops early when candidates run out (k larger than the list)
     val picks = Iterator.from(1).takeWhile(_ <= k).map { step =>
       val scored = state.withColumn("score",
@@ -100,12 +100,11 @@ object Retrieval {
         .collect().headOption.map { best =>
           val bestId = best.getAs[Long]("id")
           val bestVec = best.getAs[scala.collection.Seq[Float]]("vec").toSeq
-          state = graft.core.Memos.tracked("mmr", state
+          state = graft.core.Memos.persist(state
             .where(col("id") =!= bestId)
             .withColumn("maxsim", greatest(col("maxsim"),
               round(graft.functions.VecDot(col("vec"),
-                lit(bestVec.toArray)), 6)))
-            .persist())
+                lit(bestVec.toArray)), 6))))
           (step, bestId, best.getAs[Double]("score"))
         }
     }.takeWhile(_.isDefined).flatten.toSeq

@@ -3,7 +3,8 @@ package graft.llmdata
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Memos
 
 /** Skip-gram training-pair generation with weighted negative sampling
   * (word2vec, Mikolov et al. NIPS'13 "Distributed representations of
@@ -48,8 +49,6 @@ object SkipGram {
 
   import graft.llmdata.TextStats.tokens
 
-  private def track(df: DataFrame): DataFrame =
-    graft.core.Memos.tracked("skipgram", df)
 
   /** Positive skip-gram pairs only: (doc, pos, center, ctx_pos,
     * context). Bounded fan-out 2·window per token, scan-fused.
@@ -140,15 +139,14 @@ object SkipGram {
     // a global window a single-partition sort, so the interval ends
     // come from a range-partitioned two-pass prefix sum (guide §2,
     // r15; long addend, regrouping exact)
-    val cum = track(graft.core.Prefix.cumSums(
+    val cum = Memos.persist(graft.core.Prefix.cumSums(
         df.select(explode(tokens(col(textCol))).as("__w"))
           .groupBy("__w").agg(count(lit(1)).as("__c"))
           .withColumn("__wt",
             round(pow(col("__c").cast("double"), power) * 1e6).cast("long")),
         Seq(col("__w")), Seq((col("__wt"), "__hi", true)))
       .withColumn("__lo", col("__hi") - col("__wt"))
-      .select(col("__w"), col("__lo"), col("__hi"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .select(col("__w"), col("__lo"), col("__hi")))
     val tot = cum.agg(max("__hi")).head().getLong(0)
     val bucket = math.max(1L, (tot + nBuckets - 1) / nBuckets)
     // each vocab interval → the draw-buckets it overlaps (≤ |vocab| +

@@ -757,8 +757,7 @@ object TextStats {
           i => concat_ws(" ",
             (0 until n).map(j => t(i + j - 1)): _*))).as("s"))
       .distinct()
-    val sh = sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    shCache.put(s"xsrc-${shCacheSeq.incrementAndGet()}", sh)
+    val sh = graft.core.Memos.persist(sh0)
     val sz = sh.groupBy("g").agg(count(lit(1)).as("n_sh"))
     val ix = sh.join(sh.select(col("g").as("g2"), col("s")), "s")
       .filter(col("g") < col("g2"))
@@ -771,10 +770,6 @@ object TextStats {
           (col("n_sh") + col("n_b") - col("inter")).cast("double"))
           .as("jaccard"))
   }
-
-  private val shCache =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap)
-  private val shCacheSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** C4 cleaning preset (Raffel et al., arXiv:1910.10683 §2.2 — the
     * public rule list behind the C4 corpus), composed as ONE scan-fused

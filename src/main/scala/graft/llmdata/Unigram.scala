@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memos, Tables}
 import graft.functions.{UnigramEncode, UnigramModel}
 
 /** In-repo unigram-LM subword tokenizer trainer (Kudo, arXiv:1804.10959
@@ -196,31 +196,16 @@ object Unigram {
     * the [[Bpe.trained]] pattern: deterministic function of the dir,
     * memoized for the JVM session, embeddable as oracle VALUES.
     */
-  private val uniMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, UnigramModel]())
-  def trained(s: SparkSession, dir: String): UnigramModel =
-    uniMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text"))
-
-  def memoized: List[UnigramModel] = {
-    import scala.jdk.CollectionConverters._
-    uniMemo.values.asScala.toList
+  val trained = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir), "text")
   }
 
   /** English-only-trained variant (the coverage-gap probe: a tokenizer
     * trained on one language is evaluated for out-of-vocabulary rate
     * on every other — q_tokenizer_coverage). Same memo contract.
     */
-  private val uniEnMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, UnigramModel]())
-  def trainedEn(s: SparkSession, dir: String): UnigramModel =
-    uniEnMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d)
-        .filter(col("lang") === "en"), "text"))
-
-  def memoizedEn: List[UnigramModel] = {
-    import scala.jdk.CollectionConverters._
-    uniEnMemo.values.asScala.toList
+  val trainedEn = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir).filter(col("lang") === "en"), "text")
   }
 
   def encodeExpr(text: Column, model: UnigramModel): Column =

@@ -1,9 +1,9 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memos, Tables}
 import graft.functions.{WordPieceEncode, WordPieceModel}
 
 /** In-repo WordPiece trainer (Schuster & Nakajima, "Japanese and Korean
@@ -134,15 +134,8 @@ object WordPiece {
     * [[Bpe.trained]] pattern: deterministic function of the dir,
     * memoized for the JVM session, embeddable as oracle VALUES.
     */
-  private val wpMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, WordPieceModel]())
-  def trained(s: SparkSession, dir: String): WordPieceModel =
-    wpMemo.computeIfAbsent(dir, d =>
-      train(Tables.documents(s, d), "text"))
-
-  def memoized: List[WordPieceModel] = {
-    import scala.jdk.CollectionConverters._
-    wpMemo.values.asScala.toList
+  val trained = Memos.memo { (s, dir) =>
+    train(Tables.documents(s, dir), "text")
   }
 
   def encodeExpr(text: Column, model: WordPieceModel): Column =

@@ -520,10 +520,9 @@ object Splits {
       valueCol: String, k: Int, salt: String = "neyman"): DataFrame = {
     // persisted: consumed by the bounded capMax collect AND the lazy
     // broadcast join — without it the corpus-sized stratum aggregate
-    // would run twice. Tracked so Bench's Memos.clearAll releases it.
-    val alloc = graft.core.Memos.tracked("neyman",
-      neymanAllocation(df, stratumCol, valueCol, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // would run twice.
+    val alloc = graft.core.Memos.persist(
+      neymanAllocation(df, stratumCol, valueCol, k))
     neymanSampleFrom(df, stratumCol, idCol, alloc, salt)
   }
 

@@ -36,7 +36,7 @@ object FeatureSelection {
     val names = features.map(_._1)
     // shared by four branches (margins ×3 + the join spine) — eager
     // persist kills the concurrent duplicate scans (FanOut.shared doc)
-    val withName = graft.core.FanOut.shared("fsel",
+    val withName = graft.core.FanOut.shared(
       cells.withColumn("feature",
         element_at(array(names.map(lit): _*), col("__f") + 1)))
     // margins off the contingency frame (tiny): per-feature bin totals,
@@ -100,7 +100,7 @@ object FeatureSelection {
       features(i)._2.cast("string").as("ba"),
       features(j)._2.cast("string").as("bb"))
     // shared by four branches — eager persist (FanOut.shared doc)
-    val cells = graft.core.FanOut.shared("fsel", df
+    val cells = graft.core.FanOut.shared(df
       .select(explode(array(pairStructs: _*)).as("__e"))
       .select(col("__e.p").as("pair"), col("__e.ba").as("ba"),
         col("__e.bb").as("bb"))

@@ -3,7 +3,7 @@ package graft.preprocessing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryPack, Tables}
+import graft.core.{Memos, QueryPack, Tables}
 
 /** Oracle-verified queries for the preprocessing estimators
   * (SURVEY.md §2.1/§2.2). Each runs the real fit→transform flow on the
@@ -27,25 +27,19 @@ object PreprocessingQueries extends QueryPack {
   /** GBT fit memo (fit-once/gate-twice, Memos contract: driver-side
     * summaries only — the trajectory plus the ≤Π|bins| cell frame
     * collected as tuples). */
-  private val gbtMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Seq[graft.ensemble.Boosting.BoostRound],
-        Seq[(Int, Int, Int, Long, Long, Long)])]())
-
-  private def gbtFit(s: SparkSession, dir: String) =
-    gbtMemo.computeIfAbsent(dir, _ => {
-      val (traj, cells) = graft.ensemble.Boosting.fitBinned(
-        Tables.lineitem(s, dir),
-        Seq(
-          "ship_year" -> year(col("l_shipdate")),
-          "quantity_bucket" -> floor(col("l_quantity") / 10).cast("int"),
-          "discount_pct" -> round(col("l_discount") * 100).cast("int")),
-        label = col("l_returnflag") === "R", rounds = 3, eta = 0.5)
-      (traj, cells.collect().map(r => (
-        r.getAs[Int]("__b_ship_year"), r.getAs[Int]("__b_quantity_bucket"),
-        r.getAs[Int]("__b_discount_pct"), r.getAs[Long]("n"),
-        r.getAs[Long]("sy"), r.getAs[Long]("f_micro"))).toSeq)
-    })
+  private val gbtFit = Memos.memo { (s, dir) =>
+    val (traj, cells) = graft.ensemble.Boosting.fitBinned(
+      Tables.lineitem(s, dir),
+      Seq(
+        "ship_year" -> year(col("l_shipdate")),
+        "quantity_bucket" -> floor(col("l_quantity") / 10).cast("int"),
+        "discount_pct" -> round(col("l_discount") * 100).cast("int")),
+      label = col("l_returnflag") === "R", rounds = 3, eta = 0.5)
+    (traj, cells.collect().map(r => (
+      r.getAs[Int]("__b_ship_year"), r.getAs[Int]("__b_quantity_bucket"),
+      r.getAs[Int]("__b_discount_pct"), r.getAs[Long]("n"),
+      r.getAs[Long]("sy"), r.getAs[Long]("f_micro"))).toSeq)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

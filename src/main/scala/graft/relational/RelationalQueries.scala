@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryPack, Tables}
+import graft.core.{Memos, QueryPack, Tables}
 
 /** Relational operator coverage (SURVEY.md §2.9): scans with
   * pushdown/pruning, hash + broadcast joins, semi/anti joins, hash
@@ -82,13 +82,6 @@ object RelationalQueries extends QueryPack {
       .as("g_len"),
     when(col("pfx_a") === col("pfx_b"), 1).otherwise(0).as("g_prefix"))
 
-  /** Fit-once memos for the linkage family: the blocked pair join is
-    * the corpus-sized cost and THREE gates consume it (params, scored
-    * pairs, entity clusters) — pairs (a narrow 6-column projection)
-    * and the 1-row EM params are persisted once per dir and shared,
-    * the v5Packed/neymanAllocMemo convention. Cleared by
-    * Memos.clearAll between Bench passes.
-    */
   /** Per-dir shared frames for the graph family (VERDICT r9 nit #4):
     * before round 10, KCore/LPA/modularity/Triangles each re-built and
     * re-persisted their own symmetrized copy of the SAME part
@@ -97,48 +90,39 @@ object RelationalQueries extends QueryPack {
     * [[graft.graph.EdgeFrames.symmetrizedWeighted]] frame (and one
     * 25-node trade edge frame) now serves the family; LPA labels are
     * memoized too because q_label_prop and q_modularity share them.
-    * Cleared by Memos.clearAll between Bench passes.
     */
-  private val linkageMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private val graphMemo =
-    graft.core.Memos.register(new graft.core.Memos.CachedFrameMap())
-  private def coPurchaseSymMemo(s: SparkSession, dir: String): DataFrame =
-    graphMemo.computeIfAbsent(s"copurchase:$dir", _ => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val pairs = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("id_a"), col("b.pk").as("id_b"))
-      // persisted PRE-PARTITIONED on __s (r14 optimization, guide §2.4
-      // "share one exchange"): the family's per-round joins broadcast
-      // the node-sized side, so the join output keeps this
-      // partitioning, and every groupBy(__s, …) / per-__s window
-      // downstream is then exchange-free (HashPartitioning(__s)
-      // satisfies any clustering that CONTAINS __s) — one exchange at
-      // memo build instead of one per round per consumer. The
-      // production analog is bucketing the edge table by source id.
-      val nParts = s.sessionState.conf.numShufflePartitions
-      val sym = graft.graph.EdgeFrames.symmetrizedWeighted(pairs)
-        .repartition(nParts, col("__s"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      sym
-    })
-  private def tradeEdgesMemo(s: SparkSession, dir: String): DataFrame =
-    graphMemo.computeIfAbsent(s"trade:$dir", _ => {
-      val e = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.customer(s, dir)),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.supplier(s, dir)),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      e
-    })
+  private val coPurchaseSymMemo = Memos.memo { (s, dir) =>
+    val li = Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+    val pairs = li.as("a").join(li.as("b"),
+        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+      .select(col("a.pk").as("id_a"), col("b.pk").as("id_b"))
+    // persisted PRE-PARTITIONED on __s (r14 optimization, guide §2.4
+    // "share one exchange"): the family's per-round joins broadcast
+    // the node-sized side, so the join output keeps this
+    // partitioning, and every groupBy(__s, …) / per-__s window
+    // downstream is then exchange-free (HashPartitioning(__s)
+    // satisfies any clustering that CONTAINS __s) — one exchange at
+    // memo build instead of one per round per consumer. The
+    // production analog is bucketing the edge table by source id.
+    val nParts = s.sessionState.conf.numShufflePartitions
+    val sym = Memos.persist(graft.graph.EdgeFrames.symmetrizedWeighted(pairs)
+      .repartition(nParts, col("__s")))
+    sym.count()
+    sym
+  }
+  private val tradeEdgesMemo = Memos.memo { (s, dir) =>
+    val e = Memos.persist(Tables.lineitem(s, dir)
+      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables.customer(s, dir)),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.supplier(s, dir)),
+        col("l_suppkey") === col("s_suppkey"))
+      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
+      .agg(count(lit(1)).as("w")))
+    e.count()
+    e
+  }
   /** Inverse-volume trade edge frame (src, dst, len) — the weighted
     * graph the q_weighted_* family ranks; one projection shared so the
     * three gates provably score the SAME lengths. */
@@ -155,55 +139,45 @@ object RelationalQueries extends QueryPack {
     * q_weighted_betweenness: pivots 0, 1; q_weighted_harmonic: pivots
     * 0, 1, 2). Exact SSSP is schedule-independent, so each seed's
     * slice is bit-identical to its own single-seed run — the oracles
-    * (chained Bellman–Ford CTEs) are unchanged. Fit-once memo under
-    * the [[lpaLabelsMemo]] convention; cleared between Bench passes.
+    * (chained Bellman–Ford CTEs) are unchanged.
     */
-  private def tradeWeightedDistMemo(s: SparkSession, dir: String): DataFrame = {
-    val e = tradeWeightedEdges(s, dir)
-    graphMemo.computeIfAbsent(s"wsssp:$dir", _ => {
-      import s.implicits._
-      val d = graft.graph.DeltaStepping.shortestPathsMulti(e,
-          "src", "dst", "len", Seq(0L, 1L, 2L).toDF("__seed"),
-          delta = 4096L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      d
-    })
+  private val tradeWeightedDistMemo = Memos.memo { (s, dir) =>
+    import s.implicits._
+    val d = Memos.persist(graft.graph.DeltaStepping.shortestPathsMulti(
+        tradeWeightedEdges(s, dir), "src", "dst", "len",
+        Seq(0L, 1L, 2L).toDF("__seed"), delta = 4096L))
+    d.count()
+    d
   }
   /** Per-dir DeepWalk corpus memo: q_random_walks, q_walk_skipgram and
     * q_glove_walks all generate the IDENTICAL trajectory set (seeds
     * ≤ 30, 2 walks × 4 hops, salt "rw") — one generation serves all
-    * three (r14 optimization; the lpaLabelsMemo convention). */
-  private def walksMemo(s: SparkSession, dir: String): DataFrame = {
+    * three (r14 optimization). */
+  private val walksMemo = Memos.memo { (s, dir) =>
     val sym = coPurchaseSymMemo(s, dir)
-    graphMemo.computeIfAbsent(s"walks:$dir", _ => {
-      val seeds = sym.select(col("__s")).distinct()
-        .filter(col("__s") <= 30).select(col("__s").as("__n"))
-      val w = graft.graph.RandomWalks.uniformWalksOn(sym, seeds,
-          walksPerNode = 2, steps = 4, salt = "rw")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      w.count()
-      w
-    })
+    val seeds = sym.select(col("__s")).distinct()
+      .filter(col("__s") <= 30).select(col("__s").as("__n"))
+    val w = Memos.persist(graft.graph.RandomWalks.uniformWalksOn(sym, seeds,
+        walksPerNode = 2, steps = 4, salt = "rw"))
+    w.count()
+    w
   }
-  private def lpaLabelsMemo(s: SparkSession, dir: String): DataFrame = {
-    // resolve the edge memo BEFORE computeIfAbsent (no nested updates
-    // on one map — the linkageParamsMemo convention)
-    val sym = coPurchaseSymMemo(s, dir)
-    graphMemo.computeIfAbsent(s"lpa:$dir", _ => {
-      val l = graft.graph.LabelPropagation.labelPropagationOn(sym, 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      l.count()
-      l
-    })
+  private val lpaLabelsMemo = Memos.memo { (s, dir) =>
+    val l = Memos.persist(graft.graph.LabelPropagation.labelPropagationOn(
+      coPurchaseSymMemo(s, dir), 5))
+    l.count()
+    l
   }
-  private[graft] def linkagePairsMemo(s: SparkSession, dir: String): DataFrame =
-    linkageMemo.computeIfAbsent(s"pairs:$dir", _ => {
-      val p = linkagePairs(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    })
+  /** Fit-once memos for the linkage family: the blocked pair join is
+    * the corpus-sized cost and THREE gates consume it (params, scored
+    * pairs, entity clusters) — pairs (a narrow 6-column projection)
+    * and the 1-row EM params are persisted once per dir and shared.
+    */
+  private[graft] val linkagePairsMemo = Memos.memo { (s, dir) =>
+    val p = Memos.persist(linkagePairs(s, dir))
+    p.count()
+    p
+  }
   /** Per-dir u-estimates from DETERMINISTIC random pairs (Splink's
     * estimate_u_using_random_sampling; FellegiSunter.uFromRandomPairs)
     * — the counterpart the union-blocked candidates need: fine
@@ -212,20 +186,17 @@ object RelationalQueries extends QueryPack {
     * non-match-dominated by construction. Stores the collected 1-row
     * map (4 bounded doubles — the weights-in-plan convention).
     */
-  private val linkageUMemo = graft.core.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Double]]())
-  private def linkageU(s: SparkSession, dir: String): Map[String, Double] =
-    linkageUMemo.computeIfAbsent(dir, d => {
-      val docs = Tables.documents(s, d).select(col("doc_id"),
-        substring(col("text"), 1, 32).as("pfx"),
-        col("lang"), col("source"), col("n_chars"))
-      val n = docs.count()
-      val row = graft.linkage.FellegiSunter.uFromRandomPairs(
-        docs, "doc_id", Seq("pfx", "lang", "source", "n_chars"),
-        j => j.select(linkageAgreementCols: _*), linkageFields,
-        nBuckets = math.max(n / 4, 1L)).collect()(0)
-      linkageFields.map(f => f -> row.getAs[Double](s"u_$f")).toMap
-    })
+  private val linkageU = Memos.memo { (s, dir) =>
+    val docs = Tables.documents(s, dir).select(col("doc_id"),
+      substring(col("text"), 1, 32).as("pfx"),
+      col("lang"), col("source"), col("n_chars"))
+    val n = docs.count()
+    val row = graft.linkage.FellegiSunter.uFromRandomPairs(
+      docs, "doc_id", Seq("pfx", "lang", "source", "n_chars"),
+      j => j.select(linkageAgreementCols: _*), linkageFields,
+      nBuckets = math.max(n / 4, 1L)).collect()(0)
+    linkageFields.map(f => f -> row.getAs[Double](s"u_$f")).toMap
+  }
 
   /** The u-estimator CTEs as SQL (relations `ub`, `upairs`,
     * `uparams`) — the same h60 bucket draw, agreement expressions,
@@ -244,19 +215,11 @@ object RelationalQueries extends QueryPack {
         "g_prefix" -> "CASE WHEN a.pfx = b.pfx THEN 1 ELSE 0 END"),
       nBucketsExpr = "SELECT greatest(count(*) // 4, 1) FROM documents")
 
-  private def linkageParamsMemo(s: SparkSession, dir: String): DataFrame = {
-    // resolve the pairs memo BEFORE entering computeIfAbsent: a
-    // mapping function must not modify the same ConcurrentHashMap
-    // (nested computeIfAbsent on one map risks a "Recursive update"
-    // IllegalStateException when the keys share a bin)
-    val pairs = linkagePairsMemo(s, dir)
-    linkageMemo.computeIfAbsent(s"params:$dir", _ => {
-      val pm = graft.linkage.FellegiSunter.emFit(pairs, linkageFields,
-          iters = 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pm.count()
-      pm
-    })
+  private val linkageParamsMemo = Memos.memo { (s, dir) =>
+    val pm = Memos.persist(graft.linkage.FellegiSunter.emFit(
+      linkagePairsMemo(s, dir), linkageFields, iters = 5))
+    pm.count()
+    pm
   }
 
   /** The identical pair construction as SQL CTEs (relations
@@ -2574,41 +2537,34 @@ object RelationalQueries extends QueryPack {
     * strengths off lineitem⋈orders, confidence quantized at
     * construction (ImplicitAls.confidences).
     */
-  /** Per-dir rank-2 ALS factors (fit-once memo, the lpaLabelsMemo
-    * convention): q_als_implicit gates the factors and q_als_recs
-    * scores recommendations off the SAME fit — before r14 each ran its
-    * own full 2-alternation fit on identical inputs. */
-  private def alsFactorsMemo(s: SparkSession, dir: String): DataFrame = {
-    val conf = alsConfidences(s, dir)
-    graphMemo.computeIfAbsent(s"alsf2:$dir", _ => {
-      val f = graft.recommend.ImplicitAls.fit(conf, d = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f.count()
-      f
-    })
+  /** Per-dir rank-2 ALS factors (fit-once memo): q_als_implicit gates
+    * the factors and q_als_recs scores recommendations off the SAME fit
+    * — before r14 each ran its own full 2-alternation fit on identical
+    * inputs. */
+  private val alsFactorsMemo = Memos.memo { (s, dir) =>
+    val f = Memos.persist(
+      graft.recommend.ImplicitAls.fit(alsConfidences(s, dir), d = 2))
+    f.count()
+    f
   }
 
   /** The confidence frame persisted per dir (r15): three consumers —
     * the rank-2 fit memo, the d=8 fit, and q_als_recs' probe/anti-join
     * — each re-paid the lineitem⋈orders build (one corpus join +
     * rollup per fit, plus every half-step re-reading it without this
-    * cache). Persist + eager count once; Memos.clearAll releases it
-    * between bench passes.
+    * cache). Persist + eager count once.
     */
-  private def alsConfidences(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    graphMemo.computeIfAbsent(s"alsconf:$dir", _ => {
-      val c = graft.recommend.ImplicitAls.confidences(
-        Tables.lineitem(s, dir)
-          .join(Tables.orders(s, dir),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_custkey").as("user"), col("l_partkey").as("item"))
-          .agg(sum(col("l_quantity")).as("x")),
-        "user", "item", "x")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
-    })
+  private val alsConfidences = Memos.memo { (s, dir) =>
+    val c = Memos.persist(graft.recommend.ImplicitAls.confidences(
+      Tables.lineitem(s, dir)
+        .join(Tables.orders(s, dir),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_custkey").as("user"), col("l_partkey").as("item"))
+        .agg(sum(col("l_quantity")).as("x")),
+      "user", "item", "x"))
+    c.count()
+    c
+  }
 
   /** The ALS confidence frame as a DuckDB CTE `ac(u_id, i_id, c)` —
     * mirrors [[alsConfidences]] sum-then-round. */

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling main (guide §1): per-JOB wall breakdown of named
   * queries under the exact Bench session config, so the gap between a
@@ -20,15 +19,7 @@ object ProfileQuery {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession(defaultCpus = 32)
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]()
     val jobs = new ConcurrentLinkedQueue[JobRec]()
