@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * running sums with a two-pass range-partitioned plan:
   *
   *  1. range-repartition by the order key and pin the layout with ONE
-  *     localCheckpoint (the per-row partition id must be STABLE across
+  *     checkpoint (the per-row partition id must be STABLE across
   *     the two consumers below — a re-executed range exchange may
   *     sample different boundaries);
   *  2. per-partition totals (≤ #partitions rows) get their own running
@@ -60,15 +60,15 @@ object Prefix {
     // the sample, once for the exchange (measured ~1 s per call on the
     // Mann–Whitney gate). After this checkpoint both passes read cached
     // partitions.
-    val once = df.select(col("*") +: vals: _*).localCheckpoint()
+    val once = Rounds.materialize(df.select(col("*") +: vals: _*))
     // the range exchange is sampled; the second checkpoint pins
     // row→partition so the offsets branch and the window branch see
     // the same layout (a re-executed sampled exchange may pick
-    // different boundaries)
-    val marked = once
+    // different boundaries). Only `marked` is read after this.
+    val marked = Rounds.materialize(once
       .repartitionByRange(n, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("__pid", spark_partition_id()))
+    Rounds.release(once)
     val offs = marked.groupBy("__pid")
       .agg(sums.indices.map(i => sum(col(s"__pv$i")).as(s"__pt$i")).head,
         sums.indices.map(i => sum(col(s"__pv$i")).as(s"__pt$i")).tail: _*)

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Rounds
+
 /** Sampled-pivot betweenness centrality (Brandes, "A faster algorithm
   * for betweenness centrality", J. Math. Soc. 2001; pivot sampling per
   * Brandes & Pich, "Centrality estimation in large networks", 2007 —
@@ -56,31 +58,30 @@ object Betweenness {
     // forward: levels(l) = (__p, __n, __sigma), per pivot disjoint by
     // construction across levels
     val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var frontier = pivots.map(p => (p, p, 1L)).toDF("__p", "__n", "__sigma")
-      .localCheckpoint()
+    var frontier = Rounds.materialize(
+      pivots.map(p => (p, p, 1L)).toDF("__p", "__n", "__sigma"))
     levels += frontier
     // settled = union of checkpointed level frames: shallow lineage, no
     // checkpoint of its own
     var settled = frontier.select(col("__p"), col("__n"))
     for (_ <- 1 to maxDepth) {
-      frontier = frontier.join(sym, col("__n") === col("__s"))
+      frontier = Rounds.materialize(frontier
+        .join(sym, col("__n") === col("__s"))
         .select(col("__p"), col("__t"), col("__sigma"))
         .join(settled.select(col("__p").as("__dp"), col("__n").as("__done")),
           col("__p") === col("__dp") && col("__t") === col("__done"),
           "left_anti")
         .groupBy(col("__p"), col("__t"))
         .agg(sum("__sigma").as("__sigma"))
-        .select(col("__p"), col("__t").as("__n"), col("__sigma"))
-        .localCheckpoint()
+        .select(col("__p"), col("__t").as("__n"), col("__sigma")))
       levels += frontier
       settled = settled.unionByName(frontier.select(col("__p"), col("__n")))
     }
     // backward: deepest level seeds delta 0, each shallower level
     // accumulates from its children through one edge join
     val deltas = new Array[DataFrame](maxDepth + 1)
-    deltas(maxDepth) = levels(maxDepth)
-      .select(col("__p"), col("__n"), lit(0.0).as("__delta"))
-      .localCheckpoint()
+    deltas(maxDepth) = Rounds.materialize(levels(maxDepth)
+      .select(col("__p"), col("__n"), lit(0.0).as("__delta")))
     for (l <- maxDepth - 1 to 0 by -1) {
       val child = levels(l + 1)
         .select(col("__p").as("__pc"), col("__n").as("__cw"),
@@ -97,10 +98,9 @@ object Betweenness {
           (col("__sv").cast("double") / col("__sw").cast("double")
             * (lit(1.0) + col("__delta"))).as("__x"))
         .groupBy("__p", "__v").agg(round(sum("__x"), quantize).as("__nd"))
-      deltas(l) = cur.join(agg, Seq("__p", "__v"), "left")
+      deltas(l) = Rounds.materialize(cur.join(agg, Seq("__p", "__v"), "left")
         .select(col("__p"), col("__v").as("__n"),
-          coalesce(col("__nd"), lit(0.0)).as("__delta"))
-        .localCheckpoint()
+          coalesce(col("__nd"), lit(0.0)).as("__delta")))
     }
     (1 to maxDepth).map(deltas(_)).reduce(_ unionByName _)
   }
@@ -190,7 +190,7 @@ object Betweenness {
     // membership a pure equality — one edge join against two
     // (pivot, node)-keyed sides. Columns pre-renamed (__dgp, __dgs,
     // __dgt) so the wave joins below are unambiguous.
-    val dag = e
+    val dag = Rounds.materialize(e
       .join(reached.select(col("seed").as("__ps"), col("id").as("__ds_n"),
           col("dist").as("__ds")),
         col("__s") === col("__ds_n"))
@@ -199,41 +199,29 @@ object Betweenness {
         col("__ps") === col("__pt") && col("__t") === col("__dt_n"))
       .where(col("__ds") + col("__l") === col("__dt"))
       .select(col("__ps").as("__dgp"), col("__s").as("__dgs"),
-        col("__t").as("__dgt"))
-      .localCheckpoint()
+        col("__t").as("__dgt")))
     // forward: c_k = #k-hop DAG paths from each pivot; σ = Σ_k c_k
-    val waves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var c = dist.select(col("seed")).distinct()
+    val c0 = dist.select(col("seed")).distinct()
       .select(col("seed").as("__p"), col("seed").as("__n"),
         lit(1L).as("__c"))
-      .localCheckpoint()
-    waves += c
-    for (_ <- 1 to maxHops) {
-      c = c.join(dag,
+    val waves = Seq.iterate(Rounds.materialize(c0), maxHops + 1)(c =>
+      Rounds.materialize(c.join(dag,
           col("__p") === col("__dgp") && col("__n") === col("__dgs"))
         .groupBy(col("__dgp"), col("__dgt")).agg(sum("__c").as("__c"))
-        .select(col("__dgp").as("__p"), col("__dgt").as("__n"), col("__c"))
-        .localCheckpoint()
-      waves += c
-    }
-    val sigma = waves.reduce(_ unionByName _)
-      .groupBy("__p", "__n").agg(sum("__c").as("__sigma"))
-      .localCheckpoint()
+        .select(col("__dgp").as("__p"), col("__dgt").as("__n"), col("__c"))))
+    val sigma = Rounds.materialize(waves.reduce(_ unionByName _)
+      .groupBy("__p", "__n").agg(sum("__c").as("__sigma")))
     // backward: b_0 = 1/σ on every reached node, b_k rolls one DAG
     // hop toward the pivot with a round-`quantize` handoff
-    val bWaves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var b = sigma.select(col("__p"), col("__n"),
+    val b0 = sigma.select(col("__p"), col("__n"),
       (lit(1.0) / col("__sigma")).as("__b"))
-      .localCheckpoint()
-    for (_ <- 1 to maxHops) {
-      b = b.join(dag,
+    val bWaves = Seq.iterate(Rounds.materialize(b0), maxHops + 1)(b =>
+      Rounds.materialize(b.join(dag,
           col("__p") === col("__dgp") && col("__n") === col("__dgt"))
         .groupBy(col("__dgp"), col("__dgs"))
         .agg(round(sum("__b"), quantize).as("__b"))
-        .select(col("__dgp").as("__p"), col("__dgs").as("__n"), col("__b"))
-        .localCheckpoint()
-      bWaves += b
-    }
+        .select(col("__dgp").as("__p"), col("__dgs").as("__n"), col("__b"))))
+      .tail
     val phi = bWaves.reduce(_ unionByName _)
       .groupBy("__p", "__n").agg(sum("__b").as("__phi"))
     sigma.where(col("__n") =!= col("__p"))

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.Rounds
 
 /** Connected components by alternating large-star / small-star
   * (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
@@ -30,8 +31,8 @@ import org.apache.spark.storage.StorageLevel
   * component's least id (paper Thms 1-2). Convergence is detected by
   * set equality of successive edge frames — checked with one
   * union-distinct count (edge frames are pair-graph-sized, far
-  * smaller than the corpus that produced them). Lineage is truncated
-  * every round with localCheckpoint, as in [[PageRank]].
+  * smaller than the corpus that produced them). Each round is a
+  * [[Rounds.iterate]] round, as in [[PageRank]].
   *
   * Output matches clusterNearDuplicates exactly: (id, cluster) for
   * every id appearing in `pairs`, cluster = least id reachable.
@@ -46,18 +47,16 @@ object ConnectedComponents {
       .select(explode(array(col("id_a").cast("long"),
         col("id_b").cast("long"))).as("id"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var e = pairs
+    val e0 = Rounds.materialize(pairs
       .select(col("id_a").cast("long").as("src"),
         col("id_b").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("dst2"),
         greatest(col("src"), col("dst")).as("src"))
       .select(col("src"), col("dst2").as("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    var eCount = e.count()
+      .distinct())
+    var eCount = e0.count()
 
     // large-star: neighbors over BOTH directions; the strictly-larger
     // ones re-link to the neighborhood minimum
@@ -86,26 +85,20 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var it = 0
-    var converged = eCount == 0L
-    while (!converged && it < maxIter) {
-      // large-star output orientation: (v, m) with v > m already
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      val nextCount = next.count()
-      // set equality: same cardinality and |A ∪ B| == |A|
-      converged = nextCount == eCount &&
-        next.union(e).distinct().count() == eCount
-      e = next
+    // set equality: same cardinality and |A ∪ B| == |A|
+    def converged(prev: DataFrame, next: DataFrame): Boolean = {
+      val (prevCount, nextCount) = (eCount, next.count())
       eCount = nextCount
-      it += 1
+      nextCount == prevCount && next.union(prev).distinct().count() == prevCount
     }
+    // large-star output orientation: (v, m) with v > m already
+    val e = Rounds.iterate(e0, if (eCount == 0L) 0 else maxIter, converged)(
+      (e, _) => smallStar(largeStar(e)))
 
     // fixpoint is a star forest (src > dst = root); roots and isolated
     // nodes (self-loop-only inputs) label themselves
-    val out = nodes
+    nodes
       .join(e.withColumnRenamed("src", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("dst"), col("id")).as("cluster"))
-    nodes.unpersist(blocking = false)
-    out
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Rounds
+
 /** Weighted single-source shortest paths by delta-stepping (Meyer &
   * Sanders, "Δ-stepping: a parallelizable shortest path algorithm",
   * J. Algorithms 2003) — the bucketed Dijkstra that makes weighted
@@ -99,11 +101,10 @@ object DeltaStepping {
     // (seed, node) tentative distances: 0 on the diagonal, else null.
     // The seed set is bounded by caller contract (pivot sampling), so
     // the cross join broadcasts it and the frame is k·|V| rows.
-    var dist = nodes.crossJoin(broadcast(seedIds))
+    var dist = Rounds.materialize(nodes.crossJoin(broadcast(seedIds))
       .select(col("__seed"), col("__n"),
         when(col("__n") === col("__seed"), lit(0L))
-          .otherwise(lit(null).cast("long")).as("__d"))
-      .localCheckpoint()
+          .otherwise(lit(null).cast("long")).as("__d")))
 
     // integer division on the long column (SQL `div` → IntegralDivide):
     // distances are non-negative longs, so this IS floor division — and
@@ -162,44 +163,35 @@ object DeltaStepping {
       // strictly decrease on every improvement. Frontiers derive LAZILY
       // off the checkpointed improvement frame — the only materializing
       // actions per iteration are the improvement checkpoint and the
-      // merged-distance checkpoint.
-      // Superseded checkpoints are released as soon as their successor
-      // materializes (the HyperBall O(1)-in-rounds storage convention):
-      // a distance frame is dead once the merged successor exists, an
-      // improvement frame once the NEXT improvement frame exists (the
-      // live frontier derives lazily from it until then).
-      var frontier = dist
-        .where(col("__d").isNotNull && bucketOf(col("__d")) === b)
-      var prevImp: DataFrame = null
-      var more = true
-      while (more) {
-        val imp = improvements(frontier, light).localCheckpoint()
-        if (prevImp != null) prevImp.unpersist(blocking = false)
-        if (imp.isEmpty) {
-          imp.unpersist(blocking = false)
-          prevImp = null
-          more = false
-        } else {
-          val prevDist = dist
-          dist = merged(imp).localCheckpoint()
-          prevDist.unpersist(blocking = false)
-          frontier = imp.where(bucketOf(col("__nd")) === b)
+      // merged-distance checkpoint. A distance frame is released once
+      // its merged successor exists, an improvement frame once the NEXT
+      // improvement frame exists (the frontier reads it until then).
+      var imp = Rounds.materialize(improvements(
+        dist.where(col("__d").isNotNull && bucketOf(col("__d")) === b),
+        light))
+      while (!imp.isEmpty) {
+        val prevDist = dist
+        dist = Rounds.materialize(merged(imp))
+        Rounds.release(prevDist)
+        val prevImp = imp
+        imp = Rounds.materialize(improvements(
+          imp.where(bucketOf(col("__nd")) === b)
             .select(col("__seed"), col("__u").as("__n"),
-              col("__nd").as("__d"))
-          prevImp = imp
-        }
+              col("__nd").as("__d")),
+          light))
+        Rounds.release(prevImp)
       }
+      Rounds.release(imp)
       // heavy edges once, from the settled bucket membership
       val settled = dist
         .where(col("__d").isNotNull && bucketOf(col("__d")) === b)
-      val impH = improvements(settled, heavy).localCheckpoint()
-      if (prevImp != null) prevImp.unpersist(blocking = false)
+      val impH = Rounds.materialize(improvements(settled, heavy))
       if (!impH.isEmpty) {
         val prevDist = dist
-        dist = merged(impH).localCheckpoint()
-        prevDist.unpersist(blocking = false)
+        dist = Rounds.materialize(merged(impH))
+        Rounds.release(prevDist)
       }
-      impH.unpersist(blocking = false)
+      Rounds.release(impH)
       b = nextBucket(b + 1)
     }
     light.unpersist(blocking = false)

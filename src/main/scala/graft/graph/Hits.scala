@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** HITS hubs & authorities (Kleinberg, "Authoritative sources in a
   * hyperlinked environment", JACM 1999) — the directional counterpart
@@ -49,24 +49,25 @@ object Hits {
     //     so the per-iteration nodes left-join that materialized the
     //     zero rows was two node-sized joins per iteration of pure
     //     plan weight; zeros are re-attached ONCE at the readout;
-    //  2. one localCheckpoint per ITERATION (on hub, whose plan
-    //     contains auth's) instead of one per half-step — same total
-    //     compute, half the materialization barriers; the final auth
-    //     readout recomputes one edge join off the last checkpointed
-    //     hub.
-    var hub = nodes.select(col("__n"),
+    //  2. one checkpoint per ITERATION (on hub, whose plan contains
+    //     auth's) instead of one per half-step — same total compute,
+    //     half the materialization barriers. The readout's authority
+    //     derives lazily from hub n−1, so n−1 rounds run through
+    //     Rounds.iterate and the last against its returned state.
+    def authOf(hub: DataFrame): DataFrame = l1(
+      e.join(hub, col("__s") === col("__n"))
+        .groupBy(col("__t")).agg(sum(col("__w") * col("__h")).as("__r")),
+      "__t", quantize)
+    def hubOf(auth: DataFrame): DataFrame = l1(
+      e.join(auth.select(col("__n"), col("__a")), col("__t") === col("__n"))
+        .groupBy(col("__s")).agg(sum(col("__w") * col("__a")).as("__r")),
+      "__s", quantize).select(col("__n"), col("__a").as("__h"))
+    val init = nodes.select(col("__n"),
       round(lit(1.0) / n, quantize).as("__h"))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      val aRaw = e.join(hub, col("__s") === col("__n"))
-        .groupBy(col("__t")).agg(sum(col("__w") * col("__h")).as("__r"))
-      auth = l1(aRaw, "__t", quantize)
-      val hRaw = e.join(auth.select(col("__n"), col("__a")),
-          col("__t") === col("__n"))
-        .groupBy(col("__s")).agg(sum(col("__w") * col("__a")).as("__r"))
-      hub = l1(hRaw, "__s", quantize)
-        .select(col("__n"), col("__a").as("__h")).localCheckpoint()
-    }
+    val prevHub =
+      Rounds.iterate(init, iters - 1)((hub, _) => hubOf(authOf(hub)))
+    val auth = authOf(prevHub)
+    val hub = Rounds.materialize(hubOf(auth))
     nodes.join(hub, Seq("__n"), "left").join(auth, Seq("__n"), "left")
       .select(col("__n").as("node"),
         coalesce(col("__h"), lit(0.0)).as("hub"),

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Hashing
+import graft.core.{Hashing, Rounds}
 
 /** HyperBall / ANF: the HyperLogLog neighborhood function (Boldi,
   * Rosa & Vigna, "HyperANF: approximating the neighbourhood function
@@ -25,9 +25,9 @@ import graft.core.Hashing
   * edge-keyed equi-join + ONE groupBy(node) whose 2^p per-register
   * `max` aggregates all combine map-side — never a pair frame, never
   * node² state, and (unlike a (node, register) row layout) never a
-  * 2^p× row-count multiplier on the shuffle. The frame is
-  * localCheckpoint'ed per round so the k-round plan never re-executes
-  * prefix rounds. That is the HyperBall cost model: at 100 TB, p stays
+  * 2^p× row-count multiplier on the shuffle. The frame is materialized
+  * per round ([[Rounds]]) so the k-round plan never re-executes prefix
+  * rounds. That is the HyperBall cost model: at 100 TB, p stays
   * 4–6 and rounds stop at the effective diameter.
   *
   * Register indices, ranks, and the integer power-sum estimate are the
@@ -37,11 +37,12 @@ import graft.core.Hashing
   */
 object HyperBall {
 
-  /** Packed init: one row per node, regs(i) = rank of the node's own
-    * h60 draw if i is its register, else 0. h60-split semantics match
-    * [[graft.relational.Sketches.hllGroupedRegisters]] exactly.
+  /** Packed init: one row per node of `sym`, regs(i) = rank of the
+    * node's own h60 draw if i is its register, else 0. h60-split
+    * semantics match [[graft.relational.Sketches.hllGroupedRegisters]]
+    * exactly.
     */
-  private def packedInit(nodes: DataFrame, p: Int, salt: String): DataFrame = {
+  private def packedInit(sym: DataFrame, p: Int, salt: String): DataFrame = {
     require(p >= 4 && p <= 16, s"p out of range: $p")
     val m = 1 << p
     val lowBits = 60 - p
@@ -50,7 +51,7 @@ object HyperBall {
     val low = h.bitwiseAND(lit((1L << lowBits) - 1))
     val rank = when(low === 0L, lit(maxRank))
       .otherwise(instr(lpad(bin(low), lowBits, "0"), "1")).cast("int")
-    nodes
+    sym.select(col("__s").as("g")).distinct()
       .select(col("g"), shiftright(h, lowBits).cast("int").as("__reg"),
         rank.as("__rank"))
       .select(col("g"),
@@ -122,15 +123,9 @@ object HyperBall {
       salt: String = "hb"): Seq[DataFrame] = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val m = 1 << p
-    val nodes = sym.select(col("__s").as("g")).distinct()
-    var regs = packedInit(nodes, p, salt).localCheckpoint()
-    val out = Seq.newBuilder[DataFrame]
-    out += unpack(regs)
-    for (_ <- 1 to rounds) {
-      regs = mergeRound(sym, regs, m).localCheckpoint()
-      out += unpack(regs)
-    }
-    out.result()
+    Seq.iterate(Rounds.materialize(packedInit(sym, p, salt)), rounds + 1)(
+        regs => Rounds.materialize(mergeRound(sym, regs, m)))
+      .map(unpack)
   }
 
   /** Neighborhood function N(r) = Σ_v |ball(v, r)|-estimate for
@@ -147,26 +142,19 @@ object HyperBall {
     val spark = sym.sparkSession
     import spark.implicits._
     val m = 1 << p
-    // Memory is O(1) in rounds, not O(rounds): each round's scalar
-    // N(r) is materialized EAGERLY off the live packed frame and the
-    // previous round's checkpoint is released — retaining every
-    // round's |V| frame wastes block-manager memory. The collected
-    // values re-enter the plan as literals, so the readout arithmetic
-    // below is unchanged.
+    // each round's scalar N(r) is collected as soon as the round exists,
+    // so no packed frame outlives the loop; the collected values
+    // re-enter the plan as literals
     def nfOf(packed: DataFrame): Double =
       packedEstimates(packed, p)
         .agg(round(sum("estimate"), 6).as("nf"))
         .head().getDouble(0)
-    val nodes = sym.select(col("__s").as("g")).distinct()
-    var regs = packedInit(nodes, p, salt).localCheckpoint()
-    val nfs = scala.collection.mutable.ArrayBuffer(nfOf(regs))
-    for (_ <- 1 to rounds) {
-      val next = mergeRound(sym, regs, m).localCheckpoint()
-      nfs += nfOf(next)
-      regs.unpersist(blocking = false)
-      regs = next
-    }
-    regs.unpersist(blocking = false)
+    val init = Rounds.materialize(packedInit(sym, p, salt))
+    val nfs = scala.collection.mutable.ArrayBuffer(nfOf(init))
+    val last = Rounds.iterate(init, rounds,
+        stop = (_, next) => { nfs += nfOf(next); false })(
+      (regs, _) => mergeRound(sym, regs, m))
+    Rounds.release(last)
     val all = nfs.toSeq.zipWithIndex
       .map { case (nf, i) => (i, nf) }.toDF("r", "nf")
     val fin = broadcast(all.filter(col("r") === rounds)
@@ -187,19 +175,16 @@ object HyperBall {
     * scale path.
     */
   def exactNeighborhoodFunction(sym: DataFrame, rounds: Int): DataFrame = {
-    val nodes = sym.select(col("__s")).distinct()
-    var reach = nodes.select(col("__s").as("__v"), col("__s").as("__u"))
-      .localCheckpoint()
-    val out = Seq.newBuilder[DataFrame]
-    out += reach.agg(count(lit(1)).as("nf_true"))
-      .select(lit(0).as("r"), col("nf_true"))
-    for (i <- 1 to rounds) {
+    val init = sym.select(col("__s")).distinct()
+      .select(col("__s").as("__v"), col("__s").as("__u"))
+    val reaches = Seq.iterate(Rounds.materialize(init), rounds + 1) { reach =>
       val via = reach.join(sym, col("__u") === col("__s"))
         .select(col("__v"), col("__t").as("__u"))
-      reach = reach.unionByName(via).distinct().localCheckpoint()
-      out += reach.agg(count(lit(1)).as("nf_true"))
-        .select(lit(i).as("r"), col("nf_true"))
+      Rounds.materialize(reach.unionByName(via).distinct())
     }
-    out.result().reduce(_ unionByName _)
+    reaches.zipWithIndex.map { case (reach, r) =>
+      reach.agg(count(lit(1)).as("nf_true"))
+        .select(lit(r).as("r"), col("nf_true"))
+    }.reduce(_ unionByName _)
   }
 }

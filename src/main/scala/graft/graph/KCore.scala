@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** k-core decomposition via iterated neighborhood h-index (Lü, Zhou,
   * Zhang & Stanley, "The H-index of a network node and its relation to
@@ -31,10 +31,9 @@ import graft.core.Memos
   * global order, never a materialized neighbor array — hub neighborhoods
   * spill to the sorter, not to a collect_list). Integer arithmetic
   * throughout — rounds replay bit-for-bit on any engine. The simple
-  * symmetrized edge frame is built once and persisted; lineage is
-  * truncated per round (localCheckpoint — production swaps reliable
-  * checkpoint()), which also keeps the round-internal window out of the
-  * returned plan.
+  * symmetrized edge frame is built once and persisted; every round is
+  * a [[Rounds.iterate]] round, which also keeps the round-internal
+  * window out of the returned plan.
   *
   * Determinism under early stop: the h-operator is idempotent at its
   * fixpoint, so stopping when a round changes nothing yields the same
@@ -49,37 +48,29 @@ object KCore {
     * @param rounds h-index iterations (each non-increasing; converged =
     *   coreness — real-world graphs converge in a handful of rounds,
     *   the pathological bound is the graph diameter).
-    * @param earlyStop stop once a round changes no node (safe: the
-    *   operator is idempotent at the fixpoint).
     * @return (id, coreness) — the value after the last round run.
     */
-  def coreness(pairs: DataFrame, rounds: Int = 8,
-      earlyStop: Boolean = true): DataFrame =
-    corenessOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), rounds,
-      earlyStop)
+  def coreness(pairs: DataFrame, rounds: Int = 8): DataFrame =
+    corenessOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), rounds)
 
   /** [[coreness]] over a shared [[EdgeFrames.symmetrizedWeighted]]
     * frame (weights ignored — coreness is a simple-graph notion and
     * the frame's (__s, __t) set is exactly the distinct neighbor
     * relation). */
-  def corenessOn(sym: DataFrame, rounds: Int = 8,
-      earlyStop: Boolean = true): DataFrame = {
+  def corenessOn(sym: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val und = sym.select(col("__s"), col("__t"))
 
-    var h = und.groupBy("__s").agg(count(lit(1)).as("__h"))
-      .select(col("__s").as("__n"), col("__h"))
-      .localCheckpoint()
+    val init = Rounds.materialize(und.groupBy("__s")
+      .agg(count(lit(1)).as("__h"))
+      .select(col("__s").as("__n"), col("__h")))
     // convergence by TOTAL h: the operator is non-increasing per node,
     // so an unchanged integer total ⟺ no node changed — one scalar
     // aggregate over the checkpointed node frame per round, replacing
     // the old node-sized anti-join (which doubled the round's action
     // cost). Sum ≤ 2m, no overflow below ~4.6e18 edge endpoints.
-    var prevSum =
-      if (earlyStop) h.agg(sum("__h")).head().getLong(0) else 0L
-    var round = 0
-    var converged = false
-    while (round < rounds && !converged) {
+    val converged = Rounds.unchanged(init)(_.agg(sum("__h")).head().getLong(0))
+    val h = Rounds.iterate(init, rounds, converged) { (h, _) =>
       // (r14 optimization note: a grouped-distinct-value h-index form
       // — h = max_v min(v, #{≥v}) — was tried to shrink the window's
       // sort input, but the extra (node, value) exchange it needs cost
@@ -89,20 +80,12 @@ object KCore {
       // distinct-value count.)
       val w = Window.partitionBy("__s")
         .orderBy(col("__hv").desc, col("__t").asc)
-      val next = und.join(h, col("__t") === col("__n"))
+      und.join(h, col("__t") === col("__n"))
         .select(col("__s"), col("__t"), col("__h").as("__hv"))
         .withColumn("__rn", row_number().over(w).cast("long"))
         .groupBy("__s")
         .agg(max(least(col("__rn"), col("__hv"))).as("__h"))
         .select(col("__s").as("__n"), col("__h"))
-        .localCheckpoint()
-      if (earlyStop) {
-        val s = next.agg(sum("__h")).head().getLong(0)
-        converged = s == prevSum
-        prevSum = s
-      }
-      h = next
-      round += 1
     }
     h.select(col("__n").as("id"), col("__h").as("coreness"))
   }

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** Community detection by synchronous label propagation (Raghavan,
   * Albert & Kumara 2007, "Near linear time algorithm to detect
@@ -26,9 +26,8 @@ import graft.core.Memos
   * groupBy(node, label) with map-side partial sums; the argmax is an
   * AGGREGATE (min over a (−weight, label) struct), not a window, so no
   * per-node sort materializes. The symmetrized weighted edge frame is
-  * built once and persisted across rounds; lineage is truncated per
-  * round (localCheckpoint — production swaps reliable checkpoint()).
-  * Nothing is ever collected to the driver.
+  * built once and persisted across rounds; each round is a
+  * [[Rounds.iterate]] round. Nothing is ever collected to the driver.
   */
 object LabelPropagation {
 
@@ -51,10 +50,10 @@ object LabelPropagation {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val edges = sym
 
-    var labels = edges.select(col("__s").as("__n")).distinct()
+    val init = edges.select(col("__s").as("__n")).distinct()
       .select(col("__n"), col("__n").as("__l"))
-    for (_ <- 1 to iters) {
-      labels = edges
+    val labels = Rounds.iterate(init, iters) { (labels, _) =>
+      edges
         .join(labels, col("__t") === col("__n"))
         .groupBy(col("__s"), col("__l"))
         .agg(sum("__w").as("__sw"))
@@ -66,7 +65,6 @@ object LabelPropagation {
         .agg(min(struct((-col("__sw")).as("nw"), col("__l").as("l")))
           .as("__m"))
         .select(col("__s").as("__n"), col("__m.l").as("__l"))
-        .localCheckpoint()
     }
     labels.select(col("__n").as("id"), col("__l").as("community"))
   }

@@ -2,8 +2,9 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** Full multi-level Louvain community detection (Blondel, Guillaume,
   * Lambiotte & Lefebvre 2008, "Fast unfolding of communities in large
@@ -142,24 +143,22 @@ object Louvain {
     val sw = selfW.select(col("__n").as("__s"), col("__sw").as("__swv"))
     // degree rides the labels frame across sweeps (see sweep doc) —
     // one build here, zero per-sweep deg joins
-    var labels = nodes.select(col("__n").as("__s"))
+    val init = Rounds.materialize(nodes.select(col("__n").as("__s"))
       .join(symDeg, Seq("__s"), "left")
       .join(sw, Seq("__s"), "left")
       .select(col("__s").as("__n"), col("__s").as("__c"),
         (coalesce(col("__kd"), lit(0L))
-          + coalesce(col("__swv"), lit(0L))).as("__k"))
-      .localCheckpoint()
+          + coalesce(col("__swv"), lit(0L))).as("__k")))
     var zeroRun = 0
-    var t = 1
-    while (t <= maxSweeps && zeroRun < 2) {
-      val next = sweep(sym, m2, labels, down = t % 2 == 1)
-        .localCheckpoint()
+    def fixpoint(prev: DataFrame, next: DataFrame): Boolean = {
       val moved = next.filter(col("__moved")).count()
       zeroRun = if (moved == 0L) zeroRun + 1 else 0
-      labels = next.drop("__moved")
-      t += 1
+      zeroRun == 2
     }
-    labels.select(col("__n"), col("__c"))
+    Rounds.iterate(init, maxSweeps, fixpoint) { (labels, t) =>
+      sweep(sym, m2, labels.select(col("__n"), col("__c"), col("__k")),
+        down = t % 2 == 1)
+    }.select(col("__n"), col("__c"))
   }
 
   /** @param pairs undirected edge list (`id_a`, `id_b`), multiplicity
@@ -183,6 +182,10 @@ object Louvain {
       levels: Int = 2): DataFrame = {
     require(maxSweeps >= 1 && levels >= 1,
       s"need maxSweeps >= 1 and levels >= 1, got $maxSweeps, $levels")
+    // the scores are exact integer arithmetic only over integer weights
+    val wType = sym0.schema("__w").dataType
+    require(wType == LongType,
+      s"louvainOn needs a bigint weight column __w, got ${wType.sql}")
     val spark = sym0.sparkSession
     import spark.implicits._
     // 2m is level-invariant: contraction moves weight between the
@@ -201,12 +204,13 @@ object Louvain {
     var assign: DataFrame = null
     for (level <- 1 to levels) {
       val lab = phase1(sym, selfW, m2, nodes, maxSweeps)
-      assign =
-        if (assign == null) lab.select(col("__n").as("id"),
+      val prev = assign
+      assign = Rounds.materialize(
+        if (prev == null) lab.select(col("__n").as("id"),
           col("__c").as("community"))
-        else assign.join(lab, assign("community") === lab("__n"))
-          .select(col("id"), col("__c").as("community"))
-      assign = assign.localCheckpoint()
+        else prev.join(lab, prev("community") === lab("__n"))
+          .select(col("id"), col("__c").as("community")))
+      if (prev != null) Rounds.release(prev)
       if (level < levels) {
         // phase 2: contract. Inter-community edges keep the
         // symmetrized convention; internal weight (both directions)
@@ -233,8 +237,7 @@ object Louvain {
           .groupBy(col("__c").as("__n")).agg(sum("__sw").as("__sw"))
         selfW = Memos.persist(internal.unionByName(carried)
           .groupBy("__n").agg(sum("__sw").as("__sw")))
-        nodes = lab.select(col("__c").as("__n")).distinct()
-          .localCheckpoint()
+        nodes = Rounds.materialize(lab.select(col("__c").as("__n")).distinct())
       }
     }
     assign

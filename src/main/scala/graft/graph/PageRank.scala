@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** Weighted PageRank (Brin & Page 1998) — the link-graph quality
   * signal crawl pipelines attach to documents (Common Crawl publishes
@@ -48,26 +48,24 @@ object PageRank {
       nodes.join(outw.select(col("__s").as("__n")), Seq("__n"), "left_anti"))
     val n = nodes.count() // bounded: one long
     val base = (1.0 - damping) / n
-    var ranks = nodes.select(col("__n"),
+    val init = nodes.select(col("__n"),
       round(lit(1.0) / n, quantize).as("__r"))
-    for (_ <- 1 to iters) {
+    // each iteration references the previous one twice (contribution +
+    // dangling mass): without the per-round checkpoint the logical plan
+    // grows 2^iters
+    val ranks = Rounds.iterate(init, iters) { (ranks, _) =>
       val contrib = ew.join(ranks, col("__s") === col("__n"))
         .groupBy(col("__t"))
         .agg(sum(col("__frac") * col("__r")).as("__m"))
       val dangling = ranks.join(danglingNodes, Seq("__n"), "left_semi")
         .agg(coalesce(sum("__r"), lit(0.0)).as("__dm"))
-      ranks = nodes
+      nodes
         .join(contrib, col("__n") === col("__t"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("__n"),
           round(lit(base) + lit(damping) *
             (coalesce(col("__m"), lit(0.0)) + col("__dm") / n),
             quantize).as("__r"))
-        // eager lineage truncation: each iteration references the
-        // previous one twice (contribution + dangling mass), so an
-        // un-truncated loop's logical plan grows 2^iters. Production
-        // swaps this for reliable checkpoint(); same plan semantics.
-        .localCheckpoint()
     }
     ranks.select(col("__n").as("node"), col("__r").as("rank"))
   }
@@ -121,23 +119,20 @@ object PageRank {
     val danglingNodes = Memos.persist(sv.join(outw.select(col("__s").as("__n")),
         Seq("__n"), "left_anti")
       .select(col("__n")))
-    var ranks = sv.select(col("__n"), round(col("__sv"), quantize).as("__r"))
-    for (_ <- 1 to iters) {
+    val init = sv.select(col("__n"), round(col("__sv"), quantize).as("__r"))
+    val ranks = Rounds.iterate(init, iters) { (ranks, _) =>
       val contrib = ew.join(ranks, col("__s") === col("__n"))
         .groupBy(col("__t"))
         .agg(sum(col("__frac") * col("__r")).as("__m"))
       val dangling = ranks.join(danglingNodes, Seq("__n"), "left_semi")
         .agg(coalesce(sum("__r"), lit(0.0)).as("__dm"))
-      ranks = sv
+      sv
         .join(contrib, col("__n") === col("__t"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("__n"),
           round(lit(1.0 - damping) * col("__sv") + lit(damping) *
             (coalesce(col("__m"), lit(0.0)) + col("__dm") * col("__sv")),
             quantize).as("__r"))
-        // same lineage truncation as pageRank: each round references
-        // the previous twice
-        .localCheckpoint()
     }
     ranks.select(col("__n").as("node"), col("__r").as("rank"))
   }
@@ -202,9 +197,9 @@ object PageRank {
           .as("__sv"),
         col("__ow")))
     val oneMinusA = 1.0 - alpha
-    var st = base.select(col("__n"), lit(0.0).as("__p"),
-      round(col("__sv"), quantize).as("__r")).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val init = Rounds.materialize(base.select(col("__n"), lit(0.0).as("__p"),
+      round(col("__sv"), quantize).as("__r")))
+    val st = Rounds.iterate(init, rounds) { (st, _) =>
       val cur = base.join(st, Seq("__n"))
       val isFrontier = col("__r") > 0 &&
         col("__r") >= lit(eps) * coalesce(col("__ow"), lit(0.0))
@@ -216,7 +211,7 @@ object PageRank {
       val dang = frontier.filter(col("__ow").isNull)
         .agg(coalesce(sum(lit(oneMinusA) * col("__r")), lit(0.0))
           .as("__dm"))
-      st = cur
+      cur
         .join(contrib, col("__n") === col("__t"), "left")
         .crossJoin(broadcast(dang))
         .select(col("__n"),
@@ -225,7 +220,6 @@ object PageRank {
           round(when(isFrontier, lit(0.0)).otherwise(col("__r"))
             + coalesce(col("__m"), lit(0.0)) + col("__dm") * col("__sv"),
             quantize).as("__r"))
-        .localCheckpoint()
     }
     st.select(col("__n").as("node"), round(col("__p"), 6).as("rank_push"),
       round(col("__r"), 6).as("residual"))

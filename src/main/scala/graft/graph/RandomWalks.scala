@@ -1,10 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** Deterministic uniform random-walk corpus generation (DeepWalk,
   * Perozzi, Al-Rfou & Skiena KDD'14; equals node2vec with p = q = 1,
@@ -66,43 +66,62 @@ object RandomWalks {
       salt: String = "rw"): DataFrame = {
     require(walksPerNode >= 1 && steps >= 1,
       s"need walksPerNode >= 1 and steps >= 1, got $walksPerNode, $steps")
-    val ranks = Memos.persist(sym
-      .select(col("__s").as("__rs"), col("__t").as("__rt"))
-      .withColumn("__r",
-        (row_number().over(Window.partitionBy("__rs").orderBy("__rt"))
-          - 1).cast("long")))
-    val deg = Memos.persist(sym.groupBy("__s")
-      .agg(count(lit(1)).as("__deg"))
-      .select(col("__s").as("__ds"), col("__deg")))
-    var frontier = seeds
+    val ranks = rankedNeighbors(sym)
+    val deg = degrees(sym)
+    val start = Rounds.materialize(walkStarts(seeds, walksPerNode))
+    // every hop's frontier is kept: the walk corpus reads them all
+    corpus((1 to steps).scanLeft(start)((frontier, i) => Rounds.materialize(
+      uniformHop(frontier, deg, ranks, salt, i).drop("__prev"))))
+  }
+
+  /** (walk_id, __cur) at step 0: `walksPerNode` walkers per distinct
+    * seed, walk_id = seed · walksPerNode + rep. */
+  private def walkStarts(seeds: DataFrame, walksPerNode: Int): DataFrame =
+    seeds
       .select(col("__n").cast("long").as("__n")).distinct()
       .select(col("__n"),
         explode(sequence(lit(0L), lit((walksPerNode - 1).toLong)))
           .as("__rep"))
       .select((col("__n") * walksPerNode + col("__rep")).as("walk_id"),
         col("__n").as("__cur"))
-      .localCheckpoint()
-    val out = Seq.newBuilder[DataFrame]
-    out += frontier.select(col("walk_id"), lit(0).as("step"),
-      col("__cur").as("node"))
-    for (i <- 1 to steps) {
-      val draw = pmod(
-        conv(substring(md5(concat(lit(salt),
-          col("walk_id").cast("string"), lit("-" + i))), 1, 15), 16, 10)
-          .cast("long"),
-        col("__deg"))
-      frontier = frontier
-        .join(deg, col("__cur") === col("__ds"))
-        .withColumn("__draw", draw)
-        .join(ranks, col("__cur") === col("__rs")
-          && col("__draw") === col("__r"))
-        .select(col("walk_id"), col("__rt").as("__cur"))
-        .localCheckpoint()
-      out += frontier.select(col("walk_id"), lit(i).as("step"),
+
+  /** (__rs, __rt, __r): each node's neighbors ranked by ascending id. */
+  private def rankedNeighbors(sym: DataFrame): DataFrame = Memos.persist(sym
+    .select(col("__s").as("__rs"), col("__t").as("__rt"))
+    .withColumn("__r",
+      (row_number().over(Window.partitionBy("__rs").orderBy("__rt"))
+        - 1).cast("long")))
+
+  /** (__ds, __deg): distinct-neighbor degree per node. */
+  private def degrees(sym: DataFrame): DataFrame = Memos.persist(sym
+    .groupBy("__s").agg(count(lit(1)).as("__deg"))
+    .select(col("__s").as("__ds"), col("__deg")))
+
+  /** Hop `i`'s draw of walk `walk_id`, in [0, modulus). */
+  private def hashDraw(salt: String, i: Int, modulus: Column): Column = pmod(
+    conv(substring(md5(concat(lit(salt),
+      col("walk_id").cast("string"), lit("-" + i))), 1, 15), 16, 10)
+      .cast("long"),
+    modulus)
+
+  /** Hop `i` of every walker on (walk_id, __cur), uniform over cur's
+    * neighbors: (walk_id, __prev, __cur). */
+  private def uniformHop(frontier: DataFrame, deg: DataFrame,
+      ranks: DataFrame, salt: String, i: Int): DataFrame =
+    frontier
+      .join(deg, col("__cur") === col("__ds"))
+      .withColumn("__draw", hashDraw(salt, i, col("__deg")))
+      .join(ranks, col("__cur") === col("__rs")
+        && col("__draw") === col("__r"))
+      .select(col("walk_id"), col("__cur").as("__prev"),
+        col("__rt").as("__cur"))
+
+  /** (walk_id, step, node) rows of the per-step frontiers. */
+  private def corpus(frontiers: Seq[DataFrame]): DataFrame =
+    frontiers.zipWithIndex.map { case (frontier, i) =>
+      frontier.select(col("walk_id"), lit(i).as("step"),
         col("__cur").as("node"))
-    }
-    out.result().reduce(_ unionByName _)
-  }
+    }.reduce(_ unionByName _)
 
   /** node2vec biased walks (Grover & Leskovec KDD'16): hop 1 is
     * uniform (no previous node yet), every later hop scores cur's
@@ -139,48 +158,19 @@ object RandomWalks {
     val wOut = math.round(1e6 / q)
     val edges = Memos.persist(sym
       .select(col("__s").as("__es"), col("__t").as("__et")))
-    val deg = Memos.persist(sym.groupBy("__s")
-      .agg(count(lit(1)).as("__deg"))
-      .select(col("__s").as("__ds"), col("__deg")))
+    val deg = degrees(sym)
     // one ranked-neighbor frame serves both the uniform hop (equi-join
     // on the rank) and the biased hops (candidate expansion)
-    val rankIdx = Memos.persist(sym
-      .select(col("__s").as("__rs"), col("__t").as("__rt"))
-      .withColumn("__r",
-        (row_number().over(Window.partitionBy("__rs").orderBy("__rt"))
-          - 1).cast("long")))
-    def hashDraw(i: Int, modulus: org.apache.spark.sql.Column) = pmod(
-      conv(substring(md5(concat(lit(salt),
-        col("walk_id").cast("string"), lit("-" + i))), 1, 15), 16, 10)
-        .cast("long"),
-      modulus)
+    val rankIdx = rankedNeighbors(sym)
+    val start = Rounds.materialize(walkStarts(seeds, walksPerNode))
     // hop 1: uniform over cur's neighbors (the paper's start)
-    var frontier = seeds
-      .select(col("__n").cast("long").as("__n")).distinct()
-      .select(col("__n"),
-        explode(sequence(lit(0L), lit((walksPerNode - 1).toLong)))
-          .as("__rep"))
-      .select((col("__n") * walksPerNode + col("__rep")).as("walk_id"),
-        col("__n").as("__cur"))
-      .localCheckpoint()
-    val out = Seq.newBuilder[DataFrame]
-    out += frontier.select(col("walk_id"), lit(0).as("step"),
-      col("__cur").as("node"))
-    frontier = frontier
-      .join(deg, col("__cur") === col("__ds"))
-      .withColumn("__draw", hashDraw(1, col("__deg")))
-      .join(rankIdx, col("__cur") === col("__rs")
-        && col("__draw") === col("__r"))
-      .select(col("walk_id"), col("__cur").as("__prev"),
-        col("__rt").as("__cur"))
-      .localCheckpoint()
-    out += frontier.select(col("walk_id"), lit(1).as("step"),
-      col("__cur").as("node"))
+    val hop1 = Rounds.materialize(uniformHop(start, deg, rankIdx, salt, 1))
     val wWalk = Window.partitionBy("walk_id").orderBy("__rt")
     val wTot = Window.partitionBy("walk_id")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    for (i <- 2 to steps) {
-      frontier = frontier
+    // every hop's frontier is kept: the walk corpus reads them all
+    val hops = (2 to steps).scanLeft(hop1) { (frontier, i) =>
+      Rounds.materialize(frontier
         .join(rankIdx, col("__cur") === col("__rs"))
         .join(edges, col("__prev") === col("__es")
           && col("__rt") === col("__et"), "left")
@@ -191,15 +181,12 @@ object RandomWalks {
         .withColumn("__hi", sum("__wt").over(
           wWalk.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .withColumn("__tot", sum("__wt").over(wTot))
-        .withColumn("__draw", hashDraw(i, col("__tot")))
+        .withColumn("__draw", hashDraw(salt, i, col("__tot")))
         .filter(col("__draw") >= col("__hi") - col("__wt")
           && col("__draw") < col("__hi"))
         .select(col("walk_id"), col("__cur").as("__prev"),
-          col("__rt").as("__cur"))
-        .localCheckpoint()
-      out += frontier.select(col("walk_id"), lit(i).as("step"),
-        col("__cur").as("node"))
+          col("__rt").as("__cur")))
     }
-    out.result().reduce(_ unionByName _)
+    corpus(start +: hops)
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.{Memos, Rounds}
+
 /** Strongly-connected-component primitives for directed link graphs
   * (web crawls, citation/trade flows).
   *
@@ -62,29 +64,27 @@ object Scc {
     // readout is unchanged.
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"))
-    val both = graft.core.Memos.persist(
+    val both = Memos.persist(
       e.select(lit(0).as("__dir"), col("__s"), col("__t"))
         .unionByName(e.select(lit(1).as("__dir"), col("__t").as("__s"),
           col("__s").as("__t"))))
     val nodes = e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct()
-    var dist = nodes
+    val init = Rounds.materialize(nodes
       .select(col("__n"), explode(array(lit(0), lit(1))).as("__dir"))
       .select(col("__dir"), col("__n"),
         when(col("__n") === pivot, lit(0L))
-          .otherwise(lit(null).cast("long")).as("__d"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+          .otherwise(lit(null).cast("long")).as("__d")))
+    val dist = Rounds.iterate(init, rounds) { (dist, _) =>
       val relaxed = both.join(dist.where(col("__d").isNotNull)
             .select(col("__dir").as("__rd"), col("__n"), col("__d")),
           col("__dir") === col("__rd") && col("__s") === col("__n"))
         .groupBy(col("__dir"), col("__t")).agg(min(col("__d") + 1).as("__nd"))
         .select(col("__dir").as("__rd"), col("__t"), col("__nd"))
-      dist = dist.join(relaxed,
+      dist.join(relaxed,
           col("__dir") === col("__rd") && col("__n") === col("__t"), "left")
         .select(col("__dir"), col("__n"),
           least(col("__d"), col("__nd")).as("__d"))
-        .localCheckpoint()
     }
     val f = dist.where(col("__dir") === 0)
       .select(col("__n").as("id"), col("__d").as("hops_fwd"))

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.{Memos, Rounds}
+
 /** Bulk-synchronous BFS hop distance from a seed set — the crawl-depth
   * signal link pipelines attach to every page (Common Crawl publishes
   * exactly this as host-level "distance from seed list"; quality decays
@@ -38,19 +40,17 @@ object SeedDistance {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"))
-    val nodes = graft.core.Memos.persist(e.select(col("__s").as("__n"))
+    val nodes = Memos.persist(e.select(col("__s").as("__n"))
       .union(e.select(col("__t").as("__n"))).distinct())
     val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
-    var dist = nodes.join(seedIds.select(col("__n"), lit(0L).as("__d")),
-        Seq("__n"), "left")
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val init = Rounds.materialize(nodes.join(
+      seedIds.select(col("__n"), lit(0L).as("__d")), Seq("__n"), "left"))
+    val dist = Rounds.iterate(init, rounds) { (dist, _) =>
       val relaxed = e.join(dist.where(col("__d").isNotNull),
           col("__s") === col("__n"))
         .groupBy(col("__t")).agg(min(col("__d") + 1).as("__nd"))
-      dist = dist.join(relaxed, col("__n") === col("__t"), "left")
+      dist.join(relaxed, col("__n") === col("__t"), "left")
         .select(col("__n"), least(col("__d"), col("__nd")).as("__d"))
-        .localCheckpoint()
     }
     dist.select(col("__n").as("id"), col("__d").as("hops"))
   }

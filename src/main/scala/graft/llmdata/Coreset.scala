@@ -3,7 +3,7 @@ package graft.llmdata
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Memos
+import graft.core.{Memos, Rounds}
 
 /** Coreset selection by k-center greedy (farthest-first traversal) —
   * Gonzalez 1985's 2-approximation to the k-center cover, used as the
@@ -58,25 +58,29 @@ object Coreset {
     val seed = pts.orderBy(col("__id")).limit(1)
     var centers = seed.select(col("__id").as("step_id"), lit(0).as("step"),
       lit(0.0).as("radius"))
-    // state: min squared distance to the selected set so far
-    var state = pts
-      .crossJoin(broadcast(seed.select(col("__v").as("__cv"))))
-      .select(col("__id"), col("__v"), sqDist(col("__v"), col("__cv")).as("__d"))
-      .localCheckpoint()
-    for (step <- 1 until k) {
-      val top = state
-        .orderBy(round(col("__d"), 6).desc, col("__id").asc).limit(1)
-        .localCheckpoint() // evaluated once; feeds both output and update
+    // the farthest point from the selected set, appended to `centers`;
+    // materialized once, it feeds both the output and the next state
+    def pick(state: DataFrame, step: Int): DataFrame = {
+      val top = Rounds.materialize(state
+        .orderBy(round(col("__d"), 6).desc, col("__id").asc).limit(1))
       centers = centers.unionByName(top.select(col("__id").as("step_id"),
         lit(step).as("step"), round(col("__d"), 6).as("radius")))
-      if (step < k - 1) {
-        state = state
-          .crossJoin(broadcast(top.select(col("__v").as("__cv"))))
-          .select(col("__id"), col("__v"),
-            least(col("__d"), sqDist(col("__v"), col("__cv"))).as("__d"))
-          .localCheckpoint()
-      }
+      top
     }
+    // state: min squared distance to the selected set so far
+    val init = Rounds.materialize(pts
+      .crossJoin(broadcast(seed.select(col("__v").as("__cv"))))
+      .select(col("__id"), col("__v"),
+        sqDist(col("__v"), col("__cv")).as("__d")))
+    val last = Rounds.iterate(init, k - 2) { (state, step) =>
+      val top = pick(state, step)
+      state
+        .crossJoin(broadcast(top.select(col("__v").as("__cv"))))
+        .select(col("__id"), col("__v"),
+          least(col("__d"), sqDist(col("__v"), col("__cv"))).as("__d"))
+    }
+    if (k > 1) pick(last, k - 1)
+    Rounds.release(last)
     centers.select(col("step").cast("int").as("step"),
       col("step_id").as("center_id"), col("radius"))
   }

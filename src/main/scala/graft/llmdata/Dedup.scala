@@ -3,6 +3,8 @@ package graft.llmdata
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Rounds
+
 /** Deduplication operators for LLM training-data pipelines: exact,
   * fingerprint, MinHash+LSH near-dup, and SimHash. All are
   * expression-based (no UDFs) and shuffle only on the keys that
@@ -1045,9 +1047,8 @@ object Dedup {
     * large-star/small-star variant only pays off at web-graph
     * diameters). Convergence is detected by the monotone invariant:
     * labels only ever decrease, so an unchanged sum(label) IS the
-    * fixpoint — one cheap agg instead of a change-count join. Lineage
-    * is truncated each round with localCheckpoint (on a real cluster
-    * with lineage-critical recovery, swap for reliable checkpointing).
+    * fixpoint — one cheap agg instead of a change-count join. Each
+    * round is a [[Rounds.iterate]] round.
     */
   /** @param driverThreshold pair counts at or below this finish on the
     *   driver with union-find (microseconds, zero Spark jobs after the
@@ -1105,30 +1106,21 @@ object Dedup {
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.groupBy(col("src").as("id"))
+    val init = Rounds.materialize(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("__mn"))
-      .select(col("id"), least(col("id"), col("__mn")).as("label"))
-      .localCheckpoint(true)
+      .select(col("id"), least(col("id"), col("__mn")).as("label")))
     // sum over an empty label frame is null — treat as 0 so an empty
     // pair list converges immediately instead of NPE-ing
     def labelSum(l: DataFrame): Long =
       Option(l.agg(sum(col("label"))).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-    var prevSum = labelSum(labels)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
+    val labels = Rounds.iterate(init, maxIter,
+        Rounds.unchanged(init)(labelSum)) { (labels, _) =>
       val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("__pl"))
-      val next = labels.join(prop, Seq("id"), "left")
+      labels.join(prop, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("__pl"), col("label"))).as("label"))
-        .localCheckpoint(true)
-      val s = labelSum(next)
-      labels = next
-      converged = s == prevSum
-      prevSum = s
-      it += 1
     }
     edges.unpersist(blocking = false)
     labels.withColumnRenamed("label", "cluster")

@@ -3,7 +3,7 @@ package graft.llmdata
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{ExactAgg, Hashing, Memos}
+import graft.core.{ExactAgg, Hashing, Memos, Rounds}
 
 /** Distributed GloVe embedding fit by alternating least squares
   * (Pennington, Socher & Manning EMNLP'14 objective; ALS in place of
@@ -25,8 +25,8 @@ import graft.core.{ExactAgg, Hashing, Memos}
   * frame (vocab-pair-bounded, never corpus-sized) against the BROADCAST
   * opposite factor table (vocab-bounded); d(d+1)/2 + d aggregate
   * columns of map-side-combined partial sums. No driver math beyond
-  * plan construction; alternations are separate bounded jobs with
-  * localCheckpoint lineage cuts.
+  * plan construction; half-steps are separate bounded jobs, one
+  * [[graft.core.Rounds]] round each.
   *
   * Exactness (the PageRank/GBT quantized-trajectory convention): f and
   * y = ln x are rounded to 6 decimals at construction, every solved
@@ -100,16 +100,16 @@ object Glove {
     require(alternations >= 1, s"need alternations >= 1, got $alternations")
     require(d >= 1, s"need d >= 1, got $d")
     val base = Memos.persist(weighted(cooc, xmax, alpha))
-    var ctx = initFactors(
-        base.select(col("context").as("token")).distinct(), d, salt)
-      .localCheckpoint()
-    var cen: DataFrame = null
-    for (_ <- 1 to alternations) {
-      cen = half(base, "center", "context", ctx, lambda, d)
-        .localCheckpoint()
-      ctx = half(base, "context", "center", cen, lambda, d)
-        .localCheckpoint()
+    val ctx0 = Rounds.materialize(initFactors(
+      base.select(col("context").as("token")).distinct(), d, salt))
+    // half-steps 1..2a−1 alternate centers (odd) and contexts (even);
+    // the last, contexts from the returned centers, runs after the loop
+    val cen = Rounds.iterate(ctx0, 2 * alternations - 1) { (f, r) =>
+      if (r % 2 == 1) half(base, "center", "context", f, lambda, d)
+      else half(base, "context", "center", f, lambda, d)
     }
+    val ctx =
+      Rounds.materialize(half(base, "context", "center", cen, lambda, d))
     val fCols = (1 to d).map(i => col(s"f$i"))
     cen.select((col("token") +: lit("center").as("role") +: fCols): _*)
       .unionByName(

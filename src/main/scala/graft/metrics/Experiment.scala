@@ -211,9 +211,8 @@ object Experiment {
     // labels derive from the ≤ 2·|distinct values| frame, checkpointed
     // so its two consumers (the broadcast guard and the count pivot)
     // don't re-run the corpus rollup.
-    val perVV = base.groupBy("__v", "__var")
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
+    val perVV = graft.core.Rounds.materialize(base.groupBy("__v", "__var")
+      .agg(count(lit(1)).as("__n")))
     // two-sample semantics: min/max as a/b is only sound with EXACTLY
     // two distinct variants — one variant would self-compare (every
     // row counted into both n_a and n_b), three+ would silently drop

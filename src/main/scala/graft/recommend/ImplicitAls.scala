@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{ExactAgg, Hashing}
+import graft.core.{ExactAgg, Hashing, Rounds}
 
 /** Implicit-feedback matrix factorization by alternating least squares
   * (Hu, Koren & Volinsky, "Collaborative filtering for implicit
@@ -124,19 +124,19 @@ object ImplicitAls {
     require(d >= 1, s"need d >= 1, got $d")
     val base = conf.select(conf.columns.map(col).toIndexedSeq: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var items = initFactors(
-        base.select(col("item").as("id")).distinct(), d, s"${salt}i")
-      .localCheckpoint()
-    var users: DataFrame = null
-    for (_ <- 1 to alternations) {
-      users = half(base, "user", "item", items, lambda, d)
-        .localCheckpoint()
-      items = half(base, "item", "user", users, lambda, d)
-        .localCheckpoint()
+    val items0 = Rounds.materialize(initFactors(
+      base.select(col("item").as("id")).distinct(), d, s"${salt}i"))
+    // half-steps 1..2a−1 alternate users (odd) and items (even); the
+    // last, items from the returned users, runs after the loop
+    val users = Rounds.iterate(items0, 2 * alternations - 1) { (f, r) =>
+      if (r % 2 == 1) half(base, "user", "item", f, lambda, d)
+      else half(base, "item", "user", f, lambda, d)
     }
-    // factors are localCheckpoint'ed — lineage no longer needs the
-    // cached confidence frame, so release it (repeat fits in one
-    // session must not accumulate cached copies)
+    val items =
+      Rounds.materialize(half(base, "item", "user", users, lambda, d))
+    // factors are materialized — lineage no longer needs the cached
+    // confidence frame, so release it (repeat fits in one session must
+    // not accumulate cached copies)
     base.unpersist(blocking = false)
     val fCols = (1 to d).map(i => col(s"f$i"))
     users.select((col("id") +: lit("user").as("role") +: fCols): _*)

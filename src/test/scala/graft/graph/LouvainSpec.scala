@@ -108,4 +108,11 @@ class LouvainSpec extends SparkSpec {
     val q2 = q(planted, lab) // same inputs -> bit-identical
     assert(q1 == q2 && q1 > 0.3, s"Q = $q1")
   }
+
+  test("a non-integer weight column is rejected, naming the column") {
+    val dbl = sym(planted).withColumn("__w",
+      org.apache.spark.sql.functions.col("__w").cast("double"))
+    val e = intercept[IllegalArgumentException](Louvain.louvainOn(dbl))
+    assert(e.getMessage.contains("__w"), e.getMessage)
+  }
 }
