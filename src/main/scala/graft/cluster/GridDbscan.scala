@@ -13,7 +13,7 @@ import graft.graph.ConnectedComponents
   * ONE groupBy, calls a cell DENSE when it holds ≥ minPts points, and
   * clusters dense cells by 8-neighborhood connectivity — an edge-sized
   * CC problem over the CELL graph (≪ points), solved by the shared
-  * large-star/small-star engine. Points label via their 3×3 cell
+  * [[ConnectedComponents.connectedComponents]]. Points label via their 3×3 cell
   * neighborhood (the border-point approximation: membership within one
   * cell ≈ within eps·√2); cells with no adjacent dense cell are noise.
   *

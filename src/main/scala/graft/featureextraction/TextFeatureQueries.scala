@@ -176,7 +176,7 @@ object TextFeatureQueries extends QueryPack {
     // graph with a recursive CTE, so full component membership is
     // hash-gated.
     "q_image_dedup_clusters" -> ((s, dir) =>
-      graft.llmdata.Dedup.clusterNearDuplicates(
+      graft.graph.ConnectedComponents.connectedComponents(
           phashPairs(s, dir).select(col("id_a"), col("id_b")))
         .select(col("id").as("doc_id"), col("cluster"))
         .orderBy("doc_id")),

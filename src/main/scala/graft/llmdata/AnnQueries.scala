@@ -121,7 +121,7 @@ object AnnQueries extends QueryPack {
 
     // Grid-cell DBSCAN (cluster/GridDbscan.scala) on the 2D fixed-basis
     // projection: eps=0.4 cells, minPts=6, dense-cell 8-neighborhood CC
-    // via the shared large-star engine; per-point labels (least dense
+    // via the shared connectedComponents; per-point labels (least dense
     // cell id, −1 noise) replayed by a recursive-CTE oracle.
     "q_grid_dbscan" -> ((s, dir) => {
       val p = Ann.projectExpr(col("embedding"), fixedIvfCentroids.take(2))

@@ -3,25 +3,34 @@ package graft.llmdata
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Rounds
+import graft.core.FanOut
+import graft.graph.ConnectedComponents.connectedComponents
 
 /** Deduplication operators for LLM training-data pipelines: exact,
-  * fingerprint, MinHash+LSH near-dup, and SimHash. All are
-  * expression-based (no UDFs) and shuffle only on the keys that
-  * actually need co-location:
+  * fingerprint, MinHash+LSH near-dup, and SimHash. Everything is
+  * expression-based except the MinHash signature pass (one per-row
+  * UDF, see [[minhashSignatures]]), and each operator shuffles only on
+  * the keys that actually need co-location:
   *
   *  - exact/fingerprint: one hash-shuffle on the (hashed) content key —
   *    at 100 TB, hash keys (16-byte md5) shuffle instead of documents.
-  *  - MinHash LSH: shuffle on shingle (signature build), then on band
-  *    hash (bucket join). Candidate pairs ≪ n²; only candidates pay the
-  *    exact-Jaccard verification join. This is the standard
+  *  - MinHash LSH: a map-side signature pass (no shuffle), then a
+  *    shuffle on band hash (bucket join). Candidate pairs ≪ n²; only
+  *    candidates pay exact-Jaccard verification. This is the standard
   *    shingle→minhash→band→bucket-join design (Broder; MMDS ch.3).
   *  - SimHash: one aggregate per doc, then a 4-chunk pigeonhole
   *    self-join for hamming≤3 candidates (Charikar; Manku et al. WWW'07).
   *
-  * Hash family: md5(seed ‖ value) — deterministic, engine-independent
-  * (reproducible in the DuckDB oracle), uniformly distributed; the min
-  * over lexicographic md5 hex strings is a valid min-wise permutation.
+  * Every exact pair builder (minhash, PPJoin Jaccard, containment)
+  * ends in one verifier, [[verifyPairs]]: in-row `array_intersect`
+  * over the candidates' shingle sets. Single-link clusters over any
+  * pair list come from
+  * [[graft.graph.ConnectedComponents.connectedComponents]].
+  *
+  * Hash families are deterministic and engine-independent (reproducible
+  * in the DuckDB oracle): md5-derived 60-bit values with cheap per-seed
+  * mixes by default, md5(seed ‖ shingle) for the oracle-compatible
+  * minhash family (see [[minhashSignatures]]).
   */
 object Dedup {
 
@@ -52,12 +61,6 @@ object Dedup {
     */
   def exact(df: DataFrame, cols: Seq[String], idCol: String): DataFrame =
     df.groupBy(cols.map(col): _*)
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
-
-  /** Fingerprint (normalized-text) duplicate groups. */
-  def byFingerprint(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.withColumn("fingerprint", TextStats.fingerprint(col(textCol)))
-      .groupBy("fingerprint")
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
 
   /** MinHash-LSH band planning (the S-curve analysis, Leskovec/Rajaraman
@@ -152,11 +155,6 @@ object Dedup {
         coalesce(col("text_dedup"), lit("")).as("text_dedup"))
   }
 
-  /** Raw (multiset) word n-gram shingles per document: (id, shingle).
-    * No distinct — downstream min-aggregates are duplicate-invariant,
-    * and set semantics are applied only where required (Jaccard), so
-    * the corpus-wide distinct shuffle never happens.
-    */
   /** The (multiset) n-gram shingle array of one document, in-row.
     *
     * Built with zip_with over SHIFTED SLICES of the token array, not
@@ -175,10 +173,6 @@ object Dedup {
       zip_with(acc, slice(t, lit(o + 1), len), (a, b) => concat_ws(" ", a, b)))
   }
 
-  private def rawShingles(df: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame =
-    df.select(col(idCol), explode(shingleArrayExpr(textCol, n)).as("shingle"))
-
   /** The DISTINCT shingle set of one document as an in-row array —
     * set semantics computed map-side (array_distinct is a row-local
     * hash set bounded by document length), no shuffle.
@@ -192,7 +186,7 @@ object Dedup {
     * full (id, shingle) stream just to remove within-document repeats.
     */
   def shingles(df: DataFrame, textCol: String, idCol: String, n: Int = 3): DataFrame =
-    graft.core.FanOut.byKey(df, idCol)
+    FanOut.byKey(df, idCol)
       .select(col(idCol), explode(shingleSetExpr(textCol, n)).as("shingle"))
 
   /** Incremental-ingest exact dedup: drop arriving documents whose
@@ -343,22 +337,15 @@ object Dedup {
     * Both emit 32-hex-char (oracle) / 15-hex-char (cheap) string
     * signature columns; downstream banding only needs equality.
     */
-  /** @param digestCounter optional accumulator incremented once per
-    *   md5 digest — lets specs assert the families' work ratio
-    *   (oracle = k digests/shingle, cheap = 1) as a deterministic
-    *   counter instead of a load-sensitive wall-clock compare.
-    */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-      k: Int = 8, shingleN: Int = 3, oracleCompatible: Boolean = false,
-      digestCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+      k: Int = 8, shingleN: Int = 3, oracleCompatible: Boolean = false): DataFrame = {
     val kk = k; val n = shingleN
-    val ctr = digestCounter
     val sig =
       if (oracleCompatible) udf { (text: String) =>
         if (text == null) null
         else {
           // limit -1 keeps trailing empty tokens, matching Spark's
-          // split(text, " ") in rawShingles and SQL string_split — the
+          // split(text, " ") in shingleArrayExpr and SQL string_split — the
           // default Java split would drop them, skewing signatures for
           // trailing-space documents
           val toks = text.split(" ", -1)
@@ -366,7 +353,6 @@ object Dedup {
           else {
             val md = md5Local.get()
             val mins = Array.fill(kk)("￿")
-            var nd = 0L
             var i = 0
             while (i <= toks.length - n) {
               val sb = new java.lang.StringBuilder(toks(i))
@@ -376,14 +362,12 @@ object Dedup {
               var s = 0
               while (s < kk) {
                 val bytes = md.digest((s.toString + "|" + shingle).getBytes("UTF-8"))
-                nd += 1
                 val hex = Dedup.toHex(bytes)
                 if (hex.compareTo(mins(s)) < 0) mins(s) = hex
                 s += 1
               }
               i += 1
             }
-            ctr.foreach(_.add(nd))
             mins.toSeq
           }
         }
@@ -398,14 +382,12 @@ object Dedup {
             else {
               val md = md5Local.get()
               val mins = Array.fill(kk)(Long.MaxValue)
-              var nd = 0L
               var i = 0
               while (i <= toks.length - n) {
                 val sb = new java.lang.StringBuilder(toks(i))
                 var o = 1
                 while (o < n) { sb.append(' ').append(toks(i + o)); o += 1 }
                 val bytes = md.digest(sb.toString.getBytes("UTF-8"))
-                nd += 1
                 var h64 = 0L
                 var bi = 0
                 while (bi < 8) { h64 = (h64 << 8) | (bytes(bi) & 0xffL); bi += 1 }
@@ -419,13 +401,12 @@ object Dedup {
                 }
                 i += 1
               }
-              ctr.foreach(_.add(nd))
               mins.toSeq.map(v => f"${v}%015x")
             }
           }
         }
       }
-    val withSig = graft.core.FanOut.byKey(df, idCol)
+    val withSig = FanOut.byKey(df, idCol)
       .select(col(idCol), sig(col(textCol)).as("__sig"))
       .filter(col("__sig").isNotNull)
     withSig.select(col(idCol) +:
@@ -480,26 +461,43 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Exact Jaccard over shingle sets for the given pairs only.
+  /** Exact verification of candidate pairs (id_a, id_b) — the tail of
+    * every exact pair builder. PAIRWISE, so shingles never explode into
+    * rows: semi-join the corpus down to candidate docs (broadcast —
+    * bounded by the filtered candidates), attach each candidate doc's
+    * in-row shingle SET, and compute c = |a ∩ b| via array_intersect —
+    * two id-key joins of the (small) pair list plus map-only set
+    * arithmetic, instead of fanning every pair out to its shingles.
+    * `measure(c, set_a, set_b)` becomes column `measureName`; pairs
+    * below `threshold` are dropped.
     *
-    * Join order matters at scale: shingle⊗shingle first would square the
-    * hot-shingle frequencies (a shingle in d docs yields d² rows) before
-    * the candidate filter could prune. Instead the candidate pairs fan
-    * out to (id_a, id_b, shingle) via id_a, then the intersection is a
-    * join on the near-unique composite (id_b, shingle) — no hot keys.
+    * `cands` is a [[FanOut.shared]] frame, released once the verified
+    * pairs are materialized. The returned frame is persisted through
+    * [[graft.core.Memos.persist]]; a caller done with it may
+    * `.unpersist()` it early.
     */
-  def jaccard(pairs: DataFrame, sh: DataFrame, idCol: String): DataFrame = {
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(sh.select(col(idCol).as("id_a"), col("shingle")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("c"))
-    inter
-      .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard", col("c") / (col("sz_a") + col("sz_b") - col("c")))
-      .select("id_a", "id_b", "jaccard")
+  private def verifyPairs(cands: DataFrame, df: DataFrame, textCol: String,
+      idCol: String, shingleN: Int, threshold: Double, measureName: String)(
+      measure: (Column, Column, Column) => Column): DataFrame = {
+    val ids = cands.select(col("id_a").as(idCol))
+      .union(cands.select(col("id_b").as(idCol))).distinct()
+    val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
+      .select(col(idCol), shingleSetExpr(textCol, shingleN).as("__shs"))
+    val res = FanOut.shared(cands
+      .join(candDocs.select(col(idCol).as("id_a"), col("__shs").as("__sh_a")),
+        Seq("id_a"))
+      .join(candDocs.select(col(idCol).as("id_b"), col("__shs").as("__sh_b")),
+        Seq("id_b"))
+      .withColumn("c", size(array_intersect(col("__sh_a"), col("__sh_b"))))
+      .withColumn(measureName, measure(col("c"), col("__sh_a"), col("__sh_b")))
+      .filter(col(measureName) >= threshold)
+      .select("id_a", "id_b", measureName))
+    cands.unpersist(blocking = false)
+    res
   }
+
+  private def jaccardOf(c: Column, a: Column, b: Column): Column =
+    c.cast("double") / (size(a) + size(b) - c)
 
   /** EXACT n-gram-Jaccard similarity self-join via prefix filtering
     * (SSJoin, Chaudhuri et al. ICDE'06; All-Pairs, Bayardo et al.
@@ -534,57 +532,21 @@ object Dedup {
     * (map-side combined — (shingle, count) rows, never documents), one
     * shingle-key join back, one groupBy(id) packing each document's
     * ordered set (bounded by document length), the prefix equi-join,
-    * then exact-Jaccard verification on candidates only. No window
-    * functions: per-document ordering is a sort_array over the doc's
-    * own (df, shingle) structs.
-    *
-    * `dfSampleFraction`: the two full shingle-stream shuffles above pay
-    * for EXACT document frequencies — but the prefix lemma only needs a
-    * CONSISTENT total order (Bayardo WWW'07 §3 — any fixed order is
-    * complete; df-ascending merely minimizes candidates). With
-    * `Some(f)`, frequencies are estimated on a deterministic f-fraction
-    * content-hash sample of the documents, and only shingles seen ≥2
-    * times in the sample keep their estimate (the singleton tail —
-    * the vast majority of distinct shingles — defaults to df 1). That
-    * small frequent-shingle table BROADCASTS, so the order join-back is
-    * map-side: both full-stream shuffles collapse to one f-fraction
-    * groupBy. Ties (and all df-1 shingles) order by shingle string, so
-    * the order stays total and consistent → the result is STILL EXACT,
-    * at slightly larger candidate counts when the estimate misranks.
-    *
-    * `maxBucketSize` defaults to UNCAPPED: this is the exact API, and
-    * dropping an oversized prefix-shingle bucket can lose a true pair
-    * (the pair's globally-least common shingle is the one the
-    * completeness proof needs; if its bucket is capped, the remaining
-    * shared prefix rows may all fail the positional bound). Setting a
-    * finite cap is an EXPLICIT recall tradeoff for corpora with
-    * degenerate boilerplate prefixes — documents whose rarest shingles
-    * are shared by >cap documents may lose pairs; prefer minhash there.
+    * then [[verifyPairs]] on candidates only. No window functions:
+    * per-document ordering is a sort_array over the doc's own
+    * (df, shingle) structs. Prefix buckets are never capped: dropping
+    * one can lose the globally-least common shingle the completeness
+    * proof needs.
     *
     * The returned frame is materialized and persisted through
     * [[graft.core.Memos.persist]]; a caller done with it may
     * `.unpersist()` it early. Intermediates are released eagerly inside.
     */
   def jaccardNearDupPairs(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, shingleN: Int = 3,
-      maxBucketSize: Int = Int.MaxValue,
-      dfSampleFraction: Option[Double] = None): DataFrame = {
+      threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
     val sh = shingles(df, textCol, idCol, shingleN)
-    val packedIn = dfSampleFraction match {
-      case None =>
-        val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        sh.join(dfreq, "shingle")
-      case Some(f) =>
-        require(f > 0 && f <= 1, s"dfSampleFraction must be in (0,1], got $f")
-        val dfreqS = shingles(
-          graft.modelselection.Splits.hashSample(df, idCol, f, salt = "jacdf"),
-          textCol, idCol, shingleN)
-          .groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2)
-        sh.join(broadcast(dfreqS), Seq("shingle"), "left")
-          .withColumn("df", coalesce(col("df"), lit(1L)))
-    }
-    val packed = packedIn
+    val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    val packed = sh.join(dfreq, "shingle")
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("df"), col("shingle")))).as("ordered"))
       .withColumn("sz", size(col("ordered")))
@@ -595,52 +557,22 @@ object Dedup {
         posexplode(slice(col("ordered"), lit(1), col("plen"))).as(Seq("i", "p")))
       .select(col(idCol), col("sz"), (col("i") + 1).as("pos"),
         col("p.shingle").as("shingle"))
-    // uncapped (the default) skips the cap's count+anti-join entirely —
-    // the prefix join is already bounded by the df-ordered prefix sizes
-    val capped =
-      if (maxBucketSize == Int.MaxValue) prefixes
-      else dropOversized(prefixes, Seq("shingle"), maxBucketSize)
-    val a = capped.select(col("shingle"), col(idCol).as("id_a"),
+    val a = prefixes.select(col("shingle"), col(idCol).as("id_a"),
       col("sz").as("sz_a"), col("pos").as("pos_a"))
-    val b = capped.select(col("shingle"), col(idCol).as("id_b"),
+    val b = prefixes.select(col("shingle"), col(idCol).as("id_b"),
       col("sz").as("sz_b"), col("pos").as("pos_b"))
-    // EAGER like minhashNearDupPairs: the candidate list is read three
-    // times (two id projections + verification) — persist it (small by
-    // the prefix/length/positional filters) so the prefix-join pipeline
-    // runs once
-    val cands = a.join(b, Seq("shingle"))
+    // the candidate list is read three times (two id projections +
+    // verification) — share it (small by the prefix/length/positional
+    // filters) so the prefix-join pipeline runs once
+    val cands = FanOut.shared(a.join(b, Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
       .filter(col("sz_b") >= col("sz_a") * threshold - 1e-9 &&
         col("sz_a") >= col("sz_b") * threshold - 1e-9)
       .filter(lit(1) +
         least(col("sz_a") - col("pos_a"), col("sz_b") - col("pos_b")) >=
         (col("sz_a") + col("sz_b")) * (threshold / (1 + threshold)) - 1e-9)
-      .select("id_a", "id_b").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count()
-    // verification is PAIRWISE, so it never explodes shingles into rows:
-    // semi-join the corpus down to candidate docs (broadcast — bounded
-    // by the prefix/length-filtered candidates), attach each candidate
-    // doc's in-row shingle SET, and compute |a ∩ b| via array_intersect
-    // — two id-key joins of the (small) pair list plus map-only set
-    // arithmetic, instead of fanning every pair out to its shingles
-    val ids = cands.select(col("id_a").as(idCol))
-      .union(cands.select(col("id_b").as(idCol))).distinct()
-    val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
-      .select(col(idCol), shingleSetExpr(textCol, shingleN).as("__shs"))
-    val res = graft.core.Memos.persist(cands
-      .join(candDocs.select(col(idCol).as("id_a"), col("__shs").as("__sh_a")),
-        Seq("id_a"))
-      .join(candDocs.select(col(idCol).as("id_b"), col("__shs").as("__sh_b")),
-        Seq("id_b"))
-      .withColumn("c", size(array_intersect(col("__sh_a"), col("__sh_b"))))
-      .withColumn("jaccard", col("c").cast("double") /
-        (size(col("__sh_a")) + size(col("__sh_b")) - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard"))
-    res.count() // materialize verified pairs, then free the candidate cache
-    cands.unpersist(blocking = false)
-    res
+      .select("id_a", "id_b").distinct())
+    verifyPairs(cands, df, textCol, idCol, shingleN, threshold, "jaccard")(jaccardOf)
   }
 
   /** Exact containment (asymmetric-overlap) self-join: DIRECTED pairs
@@ -664,36 +596,19 @@ object Dedup {
     * Cost shape at 100 TB: prefix(a)-stream ⋈ full(b)-stream on the
     * shingle key — inherently heavier than the symmetric join's
     * prefix⋈prefix (the unprefixed side is the price of asymmetry);
-    * bound it in production with a df band (drop shingles above a df
-    * ceiling before the join — stopword-like shingles generate
-    * candidates that verification would reject anyway) or reach for
-    * minhash first. Verification is pairwise `array_intersect` on the
-    * candidates, never a shingle fan-out.
+    * reach for minhash first at that scale. Verification is
+    * [[verifyPairs]] on the candidates, never a shingle fan-out.
     *
     * The returned frame is materialized and persisted through
     * [[graft.core.Memos.persist]]; a caller done with it may
     * `.unpersist()` it early.
     */
-  /** @param maxDf shingles appearing in more than `maxDf` documents are
-    *   dropped from the CANDIDATE JOIN ONLY (both streams) — the
-    *   production df band bounding the unprefixed containing side;
-    *   verification still runs on the FULL sets, so the containment
-    *   values are unchanged. EXPLICIT recall tradeoff: a qualifying
-    *   pair is lost only if every shared shingle in a's prefix is
-    *   above the band. Default uncapped (the exact API).
-    */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, shingleN: Int = 3,
-      maxDf: Long = Long.MaxValue): DataFrame = {
+      threshold: Double = 0.8, shingleN: Int = 3): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     val sh = shingles(df, textCol, idCol, shingleN)
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val banded =
-      if (maxDf == Long.MaxValue) sh.join(dfreq, "shingle")
-      else sh.join(dfreq.filter(col("df") <= maxDf), "shingle")
-    // NOTE with a band, `sz` counts the banded vocabulary for
-    // prefix-length purposes only; verification sizes use the full set
-    val packed = banded
+    val packed = sh.join(dfreq, "shingle")
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("df"), col("shingle")))).as("ordered"))
       .withColumn("sz", size(col("ordered")))
@@ -707,65 +622,17 @@ object Dedup {
       .select(col(idCol).as("id_b"), col("sz").as("sz_b"),
         explode(col("ordered")).as("q"))
       .select(col("id_b"), col("sz_b"), col("q.shingle").as("shingle"))
-    val cands = aPref.join(bFull, Seq("shingle"))
+    val cands = FanOut.shared(aPref.join(bFull, Seq("shingle"))
       .filter(col("id_a") =!= col("id_b"))
       .filter(col("sz_b") >= col("sz_a") * threshold - 1e-9)
-      .select("id_a", "id_b").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count()
-    val ids = cands.select(col("id_a").as(idCol))
-      .union(cands.select(col("id_b").as(idCol))).distinct()
-    val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
-      .select(col(idCol), shingleSetExpr(textCol, shingleN).as("__shs"))
-    val res = graft.core.Memos.persist(cands
-      .join(candDocs.select(col(idCol).as("id_a"), col("__shs").as("__sh_a")),
-        Seq("id_a"))
-      .join(candDocs.select(col(idCol).as("id_b"), col("__shs").as("__sh_b")),
-        Seq("id_b"))
-      .withColumn("c", size(array_intersect(col("__sh_a"), col("__sh_b"))))
-      .withColumn("containment",
-        col("c").cast("double") / size(col("__sh_a")))
-      .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment"))
-    res.count() // materialize, then free the candidate cache
-    cands.unpersist(blocking = false)
-    res
-  }
-
-  /** PRODUCTION preset for containment near-dup detection: the
-    * [[containmentPairs]] join with the df band ON by default — at
-    * 100 TB the uncapped containing-side stream join on raw shingle
-    * keys is the engine's one documented heavy shape, and a caller
-    * should have to OPT INTO it (call [[containmentPairs]] directly for
-    * the exact API), not stumble into it.
-    *
-    * The band is relative, `maxDf = max(2, ⌈maxDfFraction·nDocs⌉)`:
-    * shingles appearing in more than that many documents are dropped
-    * from CANDIDATE GENERATION only (stopword-like shingles whose
-    * candidates verification would mostly reject anyway); surviving
-    * pairs keep their exact containment values because verification
-    * always runs on the full sets, and the band can only LOSE pairs,
-    * never invent them. Measured on the 500-doc gate corpus at
-    * threshold 0.8 (ContainmentBandSpec pins these): the default 10%
-    * band keeps recall 1.0, and so does a band as tight as 1% — real
-    * containment pairs share rare shingles, exactly the SSJoin
-    * intuition the prefix order exploits.
-    *
-    * @param knownDocCount pass the corpus size if already known to
-    *   skip the count() job sizing the band.
-    */
-  def containmentNearDups(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.8, shingleN: Int = 3,
-      maxDfFraction: Double = 0.10, knownDocCount: Long = -1L): DataFrame = {
-    require(maxDfFraction > 0 && maxDfFraction <= 1,
-      s"maxDfFraction in (0,1], got $maxDfFraction")
-    val n = if (knownDocCount >= 0) knownDocCount else df.count()
-    val band = math.max(2L, math.ceil(n * maxDfFraction).toLong)
-    containmentPairs(df, textCol, idCol, threshold, shingleN, maxDf = band)
+      .select("id_a", "id_b").distinct())
+    verifyPairs(cands, df, textCol, idCol, shingleN, threshold, "containment")(
+      (c, a, _) => c.cast("double") / size(a))
   }
 
   /** Full MinHash-LSH near-duplicate pipeline: candidate generation via
-    * banding, then exact-Jaccard verification, keeping pairs ≥ threshold.
+    * banding, then exact-Jaccard verification ([[verifyPairs]]),
+    * keeping pairs ≥ threshold.
     *
     * EAGER: materializes intermediate frames to release their caches as
     * it goes (signatures after banding, candidates after verification).
@@ -778,40 +645,21 @@ object Dedup {
       threshold: Double = 0.8, k: Int = 64, rowsPerBand: Int = 4,
       shingleN: Int = 3, maxBucketSize: Int = 1000,
       oracleCompatible: Boolean = false): DataFrame = {
-    // signature pass is SHUFFLE-FREE (map-side array_min over the
-    // in-row shingle array — see minhashSignatures); only the tiny
+    // the signature pass is SHUFFLE-FREE (one map-side UDF over the
+    // in-row shingles — see minhashSignatures); only the tiny
     // signature/band frames and the candidate verification ever shuffle.
-    // The skew cap scans the band frame twice (count, then anti-join) —
-    // persist the SIGNATURES (k hashes + id per doc, tiny next to the
-    // corpus) so the expensive per-shingle hashing UDF runs exactly once.
-    val sigs = minhashSignatures(df, textCol, idCol, k, shingleN, oracleCompatible)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the signature cache EAGERLY: the candidate plan below
-    // references it from four branches (skew-cap count + anti-join ×
-    // self-join a/b) that AQE runs as CONCURRENT stages — against a
-    // lazily-populated cache each branch re-ran the per-shingle hashing
-    // UDF in parallel (4× the scan work, measured r14); one count pays
-    // the scan once and every branch reads blocks
-    sigs.count()
-    val cands = candidatePairs(bandHashes(sigs, idCol, k, rowsPerBand), idCol,
-      maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count() // materialize candidates, then free the signature cache
+    // The candidate plan reads the SIGNATURES (k hashes + id per doc,
+    // tiny next to the corpus) from four branches (skew-cap count +
+    // anti-join × self-join a/b) that AQE runs as CONCURRENT stages —
+    // against a lazily-populated cache each branch re-ran the
+    // per-shingle hashing UDF in parallel (4× the scan work, measured
+    // r14); sharing them eagerly pays the scan once
+    val sigs = FanOut.shared(
+      minhashSignatures(df, textCol, idCol, k, shingleN, oracleCompatible))
+    val cands = FanOut.shared(candidatePairs(
+      bandHashes(sigs, idCol, k, rowsPerBand), idCol, maxBucketSize))
     sigs.unpersist(blocking = false)
-    // set semantics only where Jaccard needs them: semi-join the DOCS
-    // down to candidate ids first (broadcast map-side filter — the
-    // bucket cap bounds the candidate volume by construction), and only
-    // then explode+distinct the handful of surviving docs. The corpus
-    // is never exploded outside the signature UDF.
-    val ids = cands.select(col("id_a").as(idCol))
-      .union(cands.select(col("id_b").as(idCol))).distinct()
-    val candDocs = df.join(broadcast(ids), Seq(idCol), "left_semi")
-    val sh = shingles(candDocs, textCol, idCol, shingleN)
-    val res = graft.core.Memos.persist(
-      jaccard(cands, sh, idCol).filter(col("jaccard") >= threshold))
-    res.count() // materialize verified pairs, then free the candidate cache
-    cands.unpersist(blocking = false)
-    res
+    verifyPairs(cands, df, textCol, idCol, shingleN, threshold, "jaccard")(jaccardOf)
   }
 
   /** 60-bit SimHash per document, fully expression-based: per token a
@@ -822,7 +670,7 @@ object Dedup {
   def simhash(df: DataFrame, textCol: String, idCol: String,
       bits: Int = 60): DataFrame = {
     require(bits <= 60, "md5-15-hex hash carries 60 bits")
-    val tok = graft.core.FanOut.byKey(df, idCol)
+    val tok = FanOut.byKey(df, idCol)
       .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
       .withColumn("h", conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long"))
     val votes = (0 until bits).map(j =>
@@ -869,7 +717,7 @@ object Dedup {
     * Scale: the corpus never self-joins on raw content — candidates are
     * generated per chunk bucket with the same Manku-style skew cap as
     * the minhash path (a hot chunk value would square inside one task),
-    * and the returned frame is persisted + materialized (caller owns
+    * and the returned frame is a [[FanOut.shared]] frame (caller owns
     * the cache).
     */
   def hammingNearDupPairs(hashes: DataFrame, idCol: String, hashCol: String,
@@ -892,14 +740,12 @@ object Dedup {
       col(idCol).as("id_a"), col(hashCol).as("sh_a"))
     val b = banded.select(col("chunk"), col("cv"),
       col(idCol).as("id_b"), col(hashCol).as("sh_b"))
-    val res = graft.core.Memos.persist(a.join(b, Seq("chunk", "cv"))
+    FanOut.shared(a.join(b, Seq("chunk", "cv"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming))
-    res.count() // materialize pairs (small) before callers drop inputs
-    res
   }
 
   /** Exact-substring duplicated spans (Lee et al. 2021, "Deduplicating
@@ -940,7 +786,7 @@ object Dedup {
     // gram string up front), and only the ~16th that survive the anchor
     // filter are cached: both consumers below (global dup counting and
     // the mark join) then pay the k×-fan-out generation + md5 ONCE.
-    val grams = graft.core.FanOut.byKey(df, idCol)
+    val grams = FanOut.byKey(df, idCol)
       .filter(length(col(textCol)) >= k)
       .select(col(idCol), col(textCol),
         explode(sequence(lit(0), length(col(textCol)) - k)).as("p"))
@@ -1024,106 +870,11 @@ object Dedup {
     * semantics would keep only a. This is the cheap one-join policy
     * appropriate when pairs are near-transitive anyway (high
     * thresholds); for true cluster semantics use
-    * [[clusterNearDuplicates]] + [[dropNearDuplicatesTransitive]].
+    * [[dropNearDuplicatesTransitive]].
     */
   def dropNearDuplicates(df: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
     val toDrop = pairs.select(col("id_b").as(idCol)).distinct()
     df.join(toDrop, Seq(idCol), "left_anti")
-  }
-
-  /** Single-link near-dup clusters: connected components of the pair
-    * graph by min-label propagation to a FIXPOINT. Returns
-    * (id, cluster) for every id that appears in a pair, where cluster
-    * is the least id reachable from it.
-    *
-    * Scale design: each round is one join of the label frame against
-    * the (both-direction) edge list plus a groupBy-min — label frames
-    * carry two longs per node of the PAIR graph (≪ corpus; near-dup
-    * pairs at sane thresholds are a small fraction of documents), and
-    * rounds converge in O(diameter) iterations — near-dup components
-    * are short chains, not long paths, so typically ≤ a handful
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14 — this is the label-propagation baseline; their
-    * large-star/small-star variant only pays off at web-graph
-    * diameters). Convergence is detected by the monotone invariant:
-    * labels only ever decrease, so an unchanged sum(label) IS the
-    * fixpoint — one cheap agg instead of a change-count join. Each
-    * round is a [[Rounds.iterate]] round.
-    */
-  /** @param driverThreshold pair counts at or below this finish on the
-    *   driver with union-find (microseconds, zero Spark jobs after the
-    *   count) instead of paying one join+agg job per propagation round
-    *   — the common case: even at 100 TB corpus scale, near-dup PAIR
-    *   lists at sane thresholds are corpus-fraction-sized, and callers
-    *   hold them materialized already. Set 0 to force the distributed
-    *   loop. Both paths produce identical labels (min reachable id).
-    *   The fast path requires integral id columns; non-numeric ids
-    *   (strings, binary) route to the distributed loop, which is
-    *   id-type-generic. Callers that already know |pairs| (they just
-    *   materialized it) pass `knownPairCount` to skip the count() job.
-    */
-  def clusterNearDuplicates(pairs: DataFrame, maxIter: Int = 50,
-      driverThreshold: Long = 1000000L,
-      knownPairCount: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-    val integralIds = Seq("id_a", "id_b").forall { n =>
-      pairs.schema.fields.find(_.name == n).map(_.dataType) match {
-        case Some(ByteType | ShortType | IntegerType | LongType) => true
-        case _ => false
-      }
-    }
-    val nPairs =
-      if (driverThreshold > 0 && integralIds) {
-        if (knownPairCount >= 0) knownPairCount else pairs.count()
-      } else Long.MaxValue
-    if (driverThreshold > 0 && integralIds && nPairs <= driverThreshold) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val es = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      // union-find with path compression; roots resolve to component min
-      // because union always keeps the smaller id as root
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x
-        while (parent.getOrDefault(c, c) != c) {
-          val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val ids = es.flatMap { case (a, b) => Seq(a, b) }.distinct
-      return ids.map(id => (id, find(id))).toSeq.toDF("id", "cluster")
-    }
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val init = Rounds.materialize(edges.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("__mn"))
-      .select(col("id"), least(col("id"), col("__mn")).as("label")))
-    // sum over an empty label frame is null — treat as 0 so an empty
-    // pair list converges immediately instead of NPE-ing
-    def labelSum(l: DataFrame): Long =
-      Option(l.agg(sum(col("label"))).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val labels = Rounds.iterate(init, maxIter,
-        Rounds.unchanged(init)(labelSum)) { (labels, _) =>
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("__pl"))
-      labels.join(prop, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("__pl"), col("label"))).as("label"))
-    }
-    edges.unpersist(blocking = false)
-    labels.withColumnRenamed("label", "cluster")
   }
 
   /** Single-link dedup: keep exactly ONE representative (the least id)
@@ -1132,7 +883,7 @@ object Dedup {
     */
   def dropNearDuplicatesTransitive(df: DataFrame, pairs: DataFrame,
       idCol: String): DataFrame = {
-    val toDrop = clusterNearDuplicates(pairs)
+    val toDrop = connectedComponents(pairs)
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as(idCol))
     df.join(toDrop, Seq(idCol), "left_anti")
@@ -1177,7 +928,7 @@ object Dedup {
   def dropNearDuplicatesKeepBest(df: DataFrame, pairs: DataFrame,
       idCol: String, scoreCol: String): DataFrame = {
     val labels = broadcast(
-      clusterNearDuplicates(pairs).withColumnRenamed("id", idCol))
+      connectedComponents(pairs).withColumnRenamed("id", idCol))
     val labeled = df.join(labels, Seq(idCol), "left")
     val winners = keepBestByKey(
       labeled.filter(col("cluster").isNotNull), "cluster", scoreCol, idCol)
@@ -1206,7 +957,7 @@ object Dedup {
       lastName: String = "test", mod: Long = 10L): DataFrame = {
     require(bounds.nonEmpty && bounds.map(_._2) == bounds.map(_._2).sorted
       && bounds.last._2 <= mod, s"bad split bounds: $bounds / $mod")
-    val labels = broadcast(clusterNearDuplicates(pairs)
+    val labels = broadcast(connectedComponents(pairs)
       .select(col("id"), col("cluster")))
     val b = graft.core.Hashing.bucket(col("cluster"), salt, mod)
     val splitCol = bounds.foldRight(lit(lastName): Column) {

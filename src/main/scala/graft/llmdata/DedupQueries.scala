@@ -9,7 +9,7 @@ import graft.core.{Memos, QueryPack, Tables}
   * MinHash+LSH demo and production parameterizations, exact n-gram
   * Jaccard (PPJoin), containment, incremental, exact-substring, global
   * line dedup, SimHash, near-dup clusters + quality-aware
-  * representatives, and the shared large-star/small-star
+  * representatives, and the forced large-star/small-star
   * connected-components gate), split out of LlmDataQueries.scala —
   * query names and oracle SQL are byte-identical to their pre-split
   * forms. The verified pair memos and the minhash oracle CTE blocks
@@ -264,12 +264,13 @@ object DedupQueries extends QueryPack {
 
 
     // Single-link clusters over the (memoized) oracle-family minhash
-    // pairs: min-label propagation to fixpoint on the pair graph. The
+    // pairs: connectedComponents (union-find at this pair count). The
     // oracle walks the same graph with a recursive CTE, so every
     // component's full membership — not just per-pair drops — is
     // hash-gated.
     "q_dedup_clusters" -> ((s, dir) =>
-      Dedup.clusterNearDuplicates(oracleMinhashPairs(s, dir))
+      graft.graph.ConnectedComponents
+        .connectedComponents(oracleMinhashPairs(s, dir))
         .select(col("id").as("doc_id"), col("cluster"))
         .orderBy("doc_id")),
 
@@ -305,14 +306,14 @@ object DedupQueries extends QueryPack {
         .orderBy("doc_id")),
 
 
-    // The SAME component semantics through the O(log n)-round
-    // large-star/small-star path (Kiveris SoCC'14) — an independent
-    // algorithm cross-checked against the identical recursive-CTE
-    // oracle, so propagation and alternating-star must agree on every
-    // label.
+    // The SAME component semantics forced through the distributed
+    // O(log n)-round large-star/small-star path (Kiveris SoCC'14),
+    // which connectedComponents only picks above its driver size —
+    // checked against the identical recursive-CTE oracle, so
+    // union-find and alternating-star must agree on every label.
     "q_cc_largestar" -> ((s, dir) =>
       graft.graph.ConnectedComponents
-        .connectedComponents(oracleMinhashPairs(s, dir))
+        .largeStar(oracleMinhashPairs(s, dir))
         .select(col("id").as("doc_id"), col("cluster"))
         .orderBy("doc_id")),
 

@@ -823,8 +823,8 @@ object RelationalQueries extends QueryPack {
         linkageFields, linkageU(s, dir), iters = 5)),
 
     // The ER endgame: FS-matched pairs (posterior ≥ 0.9) resolved
-    // into ENTITIES by transitive closure — the same O(log n)
-    // alternating-star components the dedup clusters use, so the two
+    // into ENTITIES by transitive closure — the same
+    // connectedComponents operator the dedup clusters use, so the two
     // pipelines cross-validate. Output: doc → entity id (least doc_id
     // reachable through match edges).
     "q_entity_clusters" -> ((s, dir) => {

@@ -6,7 +6,8 @@ import graft.SparkSpec
 
 /** Large-star/small-star CC vs a driver union-find oracle, on the
   * graph shapes that distinguish it from label propagation: long
-  * chains (diameter >> rounds), stars, and random forests.
+  * chains (diameter >> rounds), stars, and random forests; plus the
+  * size-selected public entry and its integral-id contract.
   */
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +29,7 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
     ConnectedComponents
-      .connectedComponents(edges.toDF("id_a", "id_b"))
+      .largeStar(edges.toDF("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
 
   test("a 60-node chain resolves to one component (diameter >> rounds)") {
@@ -55,15 +56,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 4L))
   }
 
-  test("agrees with clusterNearDuplicates' propagation path") {
+  test("union-find and large-star paths agree on a random graph") {
     val rnd = new Random(11)
     val edges = Seq.fill(60)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
       .filter { case (a, b) => a != b }
     val pairs = edges.toDF("id_a", "id_b")
     val viaStars = run(edges)
-    val viaProp = graft.llmdata.Dedup
-      .clusterNearDuplicates(pairs, driverThreshold = 0L)
+    // 60 pairs: the public entry resolves them with driver union-find
+    val viaUnionFind = ConnectedComponents.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
-    assert(viaStars == viaProp)
+    assert(viaStars == viaUnionFind)
+  }
+
+  test("string ids are rejected, naming the column") {
+    // "7" and "007" would cast to one long node; the entry refuses them
+    val pairs = Seq(("7", "007"), ("8", "9")).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      ConnectedComponents.connectedComponents(pairs)
+    }
+    assert(e.getMessage.contains("id_a") && e.getMessage.contains("integral"),
+      e.getMessage)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
+import graft.graph.ConnectedComponents
 
 class LlmDataSpec extends SparkSpec {
 
@@ -417,10 +418,13 @@ class LlmDataSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val vocab = Array("aa", "bb", "cc", "dd", "ee")
     (0 until 3).foreach { trial =>
-      val docs = (0L until 30L).map { i =>
+      val base = (0L until 30L).map { i =>
         val len = 3 + rnd.nextInt(12)
         (i, Seq.fill(len)(vocab(rnd.nextInt(vocab.length))).mkString(" "))
       }
+      // random 3-gram sets over this vocab almost never reach J = 0.5,
+      // so plant near-dups: one appended token adds at most one shingle
+      val docs = base ++ base.take(10).map { case (i, d) => (i + 100, d + " aa") }
       val t = 0.5
       def shset(s: String): Set[String] =
         s.split(" ", -1).sliding(3).filter(_.length == 3)
@@ -432,15 +436,23 @@ class LlmDataSpec extends SparkSpec {
         j = (sa & sb).size.toDouble / (sa | sb).size
         if j >= t
       } yield (ia, ib, j)).toSet
-      val got = {
-        val p = Dedup.jaccardNearDupPairs(docs.toDF("doc_id", "text"),
-          "text", "doc_id", threshold = t)
+      def collected(p: org.apache.spark.sql.DataFrame) = {
         val out = p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         p.unpersist(blocking = false)
         out
       }
+      val got = collected(Dedup.jaccardNearDupPairs(docs.toDF("doc_id", "text"),
+        "text", "doc_id", threshold = t))
       assert(got == want,
         s"trial $trial: missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+      // minhash's LSH candidates go through the same exact verifier: a
+      // subset of the brute-force pairs with identical jaccard values
+      // (one-row bands: a pair sharing any of the 64 minhashes is a
+      // candidate, so most pairs, true or not, reach verification)
+      val mh = collected(Dedup.minhashNearDupPairs(docs.toDF("doc_id", "text"),
+        "text", "doc_id", threshold = t, rowsPerBand = 1))
+      assert(want.nonEmpty && mh.nonEmpty && mh.subsetOf(want),
+        s"trial $trial: minhash extra=${(mh -- want).take(3)} (${mh.size} pairs)")
     }
   }
 
@@ -481,24 +493,9 @@ class LlmDataSpec extends SparkSpec {
     assert(capped.count() == 0)
   }
 
-  test("cheap-mix minhash family: exactly k× less digest work, same planted pairs") {
-    // identical corpus, k=64: the cheap family pays ONE md5 per shingle
-    // vs 64 for the oracle family. Assert the work ratio as a
-    // DETERMINISTIC digest counter (incremented at the digest sites, so
-    // it measures the implementation, not the scheduler) instead of a
-    // load-sensitive wall-clock compare.
-    val cheap = spark.sparkContext.longAccumulator("digests-cheap")
-    val oracle = spark.sparkContext.longAccumulator("digests-oracle")
-    Dedup.minhashSignatures(docs, "text", "doc_id", k = 64,
-      digestCounter = Some(cheap))
-      .write.format("noop").mode("overwrite").save()
-    Dedup.minhashSignatures(docs, "text", "doc_id", k = 64,
-      oracleCompatible = true, digestCounter = Some(oracle))
-      .write.format("noop").mode("overwrite").save()
-    assert(cheap.value > 0)
-    assert(oracle.value == 64L * cheap.value,
-      s"oracle family must pay exactly k digests per shingle " +
-        s"(cheap=${cheap.value}, oracle=${oracle.value})")
+  test("cheap-mix minhash family finds the planted pairs") {
+    // the production family (k=64, one md5 per shingle) on the gate
+    // corpus
     val pairs = Dedup.minhashNearDupPairs(docs, "text", "doc_id", threshold = 0.8)
       .collect()
     assert(pairs.length >= 10)
@@ -551,52 +548,20 @@ class LlmDataSpec extends SparkSpec {
     assert(pairs.toSet.subsetOf(Set((1L, 2L))))
   }
 
-  test("sampled-df prefix ordering returns EXACTLY the exact-df pair set") {
-    // the prefix lemma needs only a CONSISTENT total order, so the
-    // sampled-frequency order must not change the result — only the
-    // candidate count. Gate corpus, same threshold as q_dedup_jaccard.
-    val exact = Dedup.jaccardNearDupPairs(docs, "text", "doc_id", threshold = 0.8)
-      .select("id_a", "id_b", "jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val sampled = Dedup.jaccardNearDupPairs(docs, "text", "doc_id",
-      threshold = 0.8, dfSampleFraction = Some(0.3))
-      .select("id_a", "id_b", "jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(exact.nonEmpty, "fixture should contain planted near-dups")
-    assert(sampled == exact, s"sampled-df pairs diverge: " +
-      s"missing=${(exact -- sampled).take(5)} extra=${(sampled -- exact).take(5)}")
-  }
-
-  test("prefix-bucket cap is an explicit recall tradeoff; default is uncapped-exact") {
-    import spark.implicits._
-    // six identical docs: every prefix shingle's bucket holds 6 rows, so
-    // cap=2 drops ALL prefix rows → capped mode finds nothing, while the
-    // uncapped default finds all 15 pairs at J=1.0
-    val d = (1L to 6L).map(i => (i, "p q r s t u v w")).toDF("doc_id", "text")
-    val exact = Dedup.jaccardNearDupPairs(d, "text", "doc_id", threshold = 0.8)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Dedup.jaccardNearDupPairs(d, "text", "doc_id", threshold = 0.8,
-      maxBucketSize = 2)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.size == 15, s"uncapped default must be exact: ${exact.size}")
-    assert(capped.subsetOf(exact) && capped.size < exact.size,
-      s"cap should trade recall: capped=${capped.size}")
-  }
-
-  test("clusterNearDuplicates: min-label propagation reaches the fixpoint on a chain") {
+  test("connectedComponents: both paths reach the fixpoint on a chain") {
     import spark.implicits._
     // path 1-2-3-4-5 (diameter 4: needs >1 round), plus component {7,9},
     // plus the (a,c),(b,c) triangle-free case 10-12, 11-12
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 9L),
       (10L, 12L), (11L, 12L)).toDF("id_a", "id_b")
-    val cc = Dedup.clusterNearDuplicates(pairs).collect()
+    val cc = ConnectedComponents.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert((1L to 5L).forall(cc(_) == 1L), s"chain must collapse to 1: $cc")
     assert(cc(7L) == 7L && cc(9L) == 7L)
     assert(cc(10L) == 10L && cc(11L) == 10L && cc(12L) == 10L)
-    // the distributed propagation loop (driverThreshold=0 forces it)
-    // produces the identical labeling
-    val dist = Dedup.clusterNearDuplicates(pairs, driverThreshold = 0L)
+    // the distributed large-star loop (forced) produces the identical
+    // labeling
+    val dist = ConnectedComponents.largeStar(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(dist == cc, s"driver union-find and distributed loop disagree: $dist vs $cc")
   }
@@ -710,12 +675,6 @@ class LlmDataSpec extends SparkSpec {
     val j = Dedup.jaccardNearDupPairs(docs, "text", "doc_id", threshold = 0.8)
     assert(j.count() == 0)
     j.unpersist(blocking = false)
-    // a df band ABOVE every document frequency changes nothing
-    val banded = Dedup.containmentPairs(docs, "text", "doc_id",
-      threshold = 0.8, maxDf = 1000L)
-    val gotB = banded.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    banded.unpersist(blocking = false)
-    assert(gotB.toSeq == got.toSeq)
   }
 
   test("transitive drop keeps ONE representative per component; pairwise keeps more") {
@@ -732,10 +691,10 @@ class LlmDataSpec extends SparkSpec {
     assert(transitive == Set(1L, 4L))
   }
 
-  test("clusterNearDuplicates: empty pair list yields empty clusters") {
+  test("connectedComponents: empty pair list yields empty clusters") {
     import spark.implicits._
     val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.clusterNearDuplicates(none).count() == 0)
+    assert(ConnectedComponents.connectedComponents(none).count() == 0)
   }
 
   test("semanticNearDupPairs matches brute-force within-cell cosine pairs") {
