@@ -70,7 +70,8 @@ object FanOut {
     * each branch re-runs the shared scan/aggregation in parallel (2–8
     * duplicated equal-length jobs in the profiles). One eager pass
     * here, then every branch reads cached blocks. Callers pass bounded
-    * frames (contingency cells, candidate pairs), never raw corpus rows.
+    * frames (contingency cells, candidate pairs, per-dir memo builds),
+    * never raw corpus rows.
     */
   def shared(df: DataFrame): DataFrame = {
     // streaming frames pass through (persist + count throw on them) —

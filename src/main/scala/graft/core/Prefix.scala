@@ -32,6 +32,10 @@ import org.apache.spark.sql.functions._
   *
   * Order keys must be UNIQUE per row (call sites pass groupBy outputs
   * keyed by the order column), so ROWS/RANGE frame semantics coincide.
+  *
+  * Reserved columns: `__pid`, `__pv<i>`, `__pt<i>` and `__po<i>` are
+  * the helper's own; an input carrying one is rejected (it would be
+  * overwritten and then dropped).
   */
 object Prefix {
 
@@ -47,6 +51,9 @@ object Prefix {
   def cumSums(df: DataFrame, order: Seq[Column],
       sums: Seq[(Column, String, Boolean)]): DataFrame = {
     require(sums.nonEmpty, "Prefix.cumSums needs at least one sum")
+    val reserved = "__pid|__p[vto][0-9]+".r
+    df.columns.foreach(c => require(!reserved.matches(c),
+      s"Prefix.cumSums: input column $c is reserved"))
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism
     // materialize the addends once so per-partition totals and the

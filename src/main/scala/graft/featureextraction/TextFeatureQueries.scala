@@ -50,9 +50,7 @@ object TextFeatureQueries extends QueryPack {
         concat(lit("xxxxx"), substring(col("text"), 6, Int.MaxValue))
           .as("text"))
     val media = Multimodal.binarize(base.union(clones), "text", "image")
-    val p = Memos.persist(Multimodal.nearDuplicateMedia(media, "doc_id"))
-    p.count() // materialize so both gate plans see the cache
-    p
+    graft.core.FanOut.shared(Multimodal.nearDuplicateMedia(media, "doc_id"))
   }
 
   /** murmur3 bucket of each probe word under MLlib HashingTF. */

@@ -94,8 +94,7 @@ object DeltaStepping {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val heavy = e.filter(col("__l") > delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
+    val nodes = EdgeFrames.nodes(e)
     val seedIds = seeds.select(col(seeds.columns.head).cast("long")
       .as("__seed")).distinct()
     // (seed, node) tentative distances: 0 on the diagonal, else null.

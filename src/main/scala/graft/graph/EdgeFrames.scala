@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ONE symmetrized edge frame the whole graph family shares.
+/** The ONE symmetrized edge frame the whole graph family shares, and
+  * the one node-set builder every edge-frame operator starts from.
   *
   * Every algorithm here (coreness, LPA, modularity, triangles) consumes
   * the same co-occurrence pair list, and before round 10 each one
@@ -21,8 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Callers that serve several gates should persist the result once
   * (via [[graft.core.Memos.persist]], usually inside a
-  * [[graft.core.Memos.Memo]]) and hand it to the algorithms' `…On`
-  * variants.
+  * [[graft.core.Memos.Memo]]).
   */
 object EdgeFrames {
 
@@ -38,4 +38,10 @@ object EdgeFrames {
       .filter(col("__s") =!= col("__t"))
       .groupBy("__s", "__t")
       .agg(count(lit(1)).as("__w"))
+
+  /** The node set of an edge frame (`__s`, `__t`): every id on either
+    * end, once, as the one column `__n`. */
+  def nodes(e: DataFrame): DataFrame =
+    e.select(col("__s").as("__n"))
+      .union(e.select(col("__t").as("__n"))).distinct()
 }

@@ -38,8 +38,7 @@ object Hits {
     val e = Memos.persist(edges.select(col(srcCol).as("__s"),
         col(dstCol).as("__t"), col(weightCol).cast("double").as("__w"))
       .groupBy("__s", "__t").agg(sum("__w").as("__w")))
-    val nodes = Memos.persist(e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct())
+    val nodes = Memos.persist(EdgeFrames.nodes(e))
     val n = nodes.count() // bounded: one long
     // r14 optimization round, two output-identical restructures:
     //  1. score frames in the LOOP are sparse — a node absent from a

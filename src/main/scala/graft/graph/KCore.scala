@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Memos, Rounds}
+import graft.core.Rounds
 
 /** k-core decomposition via iterated neighborhood h-index (Lü, Zhou,
   * Zhang & Stanley, "The H-index of a network node and its relation to
@@ -30,8 +30,8 @@ import graft.core.{Memos, Rounds}
   * PARTITIONED window (per-node rank; streams through the sort, never a
   * global order, never a materialized neighbor array — hub neighborhoods
   * spill to the sorter, not to a collect_list). Integer arithmetic
-  * throughout — rounds replay bit-for-bit on any engine. The simple
-  * symmetrized edge frame is built once and persisted; every round is
+  * throughout — rounds replay bit-for-bit on any engine. The caller's
+  * shared symmetrized edge frame is read every round; every round is
   * a [[Rounds.iterate]] round, which also keeps the round-internal
   * window out of the returned plan.
   *
@@ -42,21 +42,15 @@ import graft.core.{Memos, Rounds}
   */
 object KCore {
 
-  /** @param pairs undirected edge list, columns `id_a`, `id_b`
-    *   (integral). Multiplicity is IGNORED (coreness is a simple-graph
-    *   notion: distinct neighbors); self-loops are dropped.
+  /** @param sym shared [[EdgeFrames.symmetrizedWeighted]] frame
+    *   (weights ignored — coreness is a simple-graph notion and the
+    *   frame's (__s, __t) set is exactly the distinct neighbor
+    *   relation).
     * @param rounds h-index iterations (each non-increasing; converged =
     *   coreness — real-world graphs converge in a handful of rounds,
     *   the pathological bound is the graph diameter).
     * @return (id, coreness) — the value after the last round run.
     */
-  def coreness(pairs: DataFrame, rounds: Int = 8): DataFrame =
-    corenessOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), rounds)
-
-  /** [[coreness]] over a shared [[EdgeFrames.symmetrizedWeighted]]
-    * frame (weights ignored — coreness is a simple-graph notion and
-    * the frame's (__s, __t) set is exactly the distinct neighbor
-    * relation). */
   def corenessOn(sym: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val und = sym.select(col("__s"), col("__t"))

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Memos, Rounds}
+import graft.core.Rounds
 
 /** Community detection by synchronous label propagation (Raghavan,
   * Albert & Kumara 2007, "Near linear time algorithm to detect
@@ -25,27 +25,20 @@ import graft.core.{Memos, Rounds}
   * the neighbor id (labels node-sized, edges edge-sized) and one
   * groupBy(node, label) with map-side partial sums; the argmax is an
   * AGGREGATE (min over a (−weight, label) struct), not a window, so no
-  * per-node sort materializes. The symmetrized weighted edge frame is
-  * built once and persisted across rounds; each round is a
+  * per-node sort materializes. Every round reads the caller's shared
+  * symmetrized weighted edge frame; each round is a
   * [[Rounds.iterate]] round. Nothing is ever collected to the driver.
   */
 object LabelPropagation {
 
-  /** @param pairs undirected edge list, columns `id_a`, `id_b`
-    *   (integral). DUPLICATE rows are meaningful: multiplicity is the
-    *   edge weight (co-occurrence count). Self-loops are dropped.
+  /** @param sym shared (ideally persisted)
+    *   [[EdgeFrames.symmetrizedWeighted]] frame; its `__w` — the input
+    *   pairs' multiplicity (co-occurrence count) — is the edge weight.
     * @param iters synchronized rounds (fixed, for replayability).
     * @return (id, community) — community = the label held after the
     *   last round; label ids are node ids, NOT canonicalized to the
     *   component minimum (communities are finer than components).
     */
-  def labelPropagation(pairs: DataFrame, iters: Int = 5): DataFrame =
-    labelPropagationOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)),
-      iters)
-
-  /** [[labelPropagation]] over an already-built (and ideally persisted)
-    * [[EdgeFrames.symmetrizedWeighted]] frame — the entry point for
-    * callers sharing ONE edge frame across the graph family. */
   def labelPropagationOn(sym: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val edges = sym
@@ -85,16 +78,13 @@ object LabelPropagation {
     * broadcast 1-row total; all weights integer until the final
     * quantized division.
     *
-    * @param labels (id, community) as produced by [[labelPropagation]]
+    * @param sym shared [[EdgeFrames.symmetrizedWeighted]] frame
+    * @param labels (id, community) as produced by
+    *   [[labelPropagationOn]]
     * @return (community, n_nodes, internal_w, degree_w, contribution)
     *   with contribution rounded to 6; Q = sum(contribution) up to
     *   rounding.
     */
-  def modularity(pairs: DataFrame, labels: DataFrame): DataFrame =
-    modularityOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), labels)
-
-  /** [[modularity]] over a shared [[EdgeFrames.symmetrizedWeighted]]
-    * frame. */
   def modularityOn(sym: DataFrame, labels: DataFrame): DataFrame = {
     val e = sym
     val la = labels.select(col("id").as("__s"), col("community").as("__cs"))
@@ -147,7 +137,8 @@ object LabelPropagation {
     * broadcast 1-row total. Nothing iterates, nothing collects.
     *
     * @param sym [[EdgeFrames.symmetrizedWeighted]] frame
-    * @param labels (id, community) as produced by [[labelPropagation]]
+    * @param labels (id, community) as produced by
+    *   [[labelPropagationOn]]
     * @return (id, community) — the assignment after one sweep
     */
   def louvainRefine(sym: DataFrame, labels: DataFrame): DataFrame = {

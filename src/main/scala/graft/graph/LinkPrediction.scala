@@ -29,25 +29,7 @@ object LinkPrediction {
   def adamicAdar(pairs: DataFrame, k: Int,
       maxDegree: Option[Int] = None): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val edges = pairs.select(
-        least(col("id_a"), col("id_b")).as("u"),
-        greatest(col("id_a"), col("id_b")).as("v"))
-      .where(col("u") =!= col("v")).distinct()
-    val adj = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(edges.select(col("v").as("src"), col("u").as("dst")))
-    val deg = adj.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
-    val pivots = maxDegree.fold(deg)(cap => deg.where(col("deg") <= cap))
-    val half = adj.join(pivots, adj("src") === pivots("z"))
-      .select(col("z"), col("dst"), col("deg"))
-    val wedges = half.alias("a").join(half.alias("b"),
-        col("a.z") === col("b.z") && col("a.dst") < col("b.dst"))
-      .select(col("a.dst").as("u"), col("b.dst").as("v"),
-        col("a.deg").as("zdeg"))
-    val scored = wedges
-      .join(edges, Seq("u", "v"), "left_anti") // predict NON-edges only
-      .groupBy("u", "v")
-      .agg(count(lit(1)).as("common_neighbors"),
-        round(sum(lit(1.0) / log(col("zdeg"))), 6).as("aa"))
+    val (scored, _) = wedgeScores(pairs, maxDegree)
     scored.orderBy(col("aa").desc, col("u"), col("v")).limit(k)
       .select(col("u").as("id_a"), col("v").as("id_b"),
         col("common_neighbors"), col("aa"))
@@ -73,6 +55,27 @@ object LinkPrediction {
   def linkScores(pairs: DataFrame, k: Int,
       maxDegree: Option[Int] = None): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
+    val (scored, deg) = wedgeScores(pairs, maxDegree)
+    val withDeg = scored
+      .join(deg.select(col("z").as("u"), col("deg").as("__du")), Seq("u"))
+      .join(deg.select(col("z").as("v"), col("deg").as("__dv")), Seq("v"))
+      .select(col("u"), col("v"), col("common_neighbors"), col("aa"),
+        col("ra"),
+        round(col("common_neighbors").cast("double")
+          / (col("__du") + col("__dv") - col("common_neighbors"))
+            .cast("double"), 6).as("jaccard"),
+        (col("__du") * col("__dv")).as("pa"))
+    withDeg.orderBy(col("aa").desc, col("u"), col("v")).limit(k)
+      .select(col("u").as("id_a"), col("v").as("id_b"),
+        col("common_neighbors"), col("jaccard"), col("aa"), col("ra"),
+        col("pa"))
+  }
+
+  /** The one wedge pass: scored non-adjacent pairs (u, v,
+    * common_neighbors, aa, ra) with u < v and both scores rounded 6,
+    * and the degree frame (z, deg). */
+  private def wedgeScores(pairs: DataFrame,
+      maxDegree: Option[Int]): (DataFrame, DataFrame) = {
     val edges = pairs.select(
         least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
@@ -88,23 +91,11 @@ object LinkPrediction {
       .select(col("a.dst").as("u"), col("b.dst").as("v"),
         col("a.deg").as("zdeg"))
     val scored = wedges
-      .join(edges, Seq("u", "v"), "left_anti")
+      .join(edges, Seq("u", "v"), "left_anti") // predict NON-edges only
       .groupBy("u", "v")
       .agg(count(lit(1)).as("common_neighbors"),
         round(sum(lit(1.0) / log(col("zdeg"))), 6).as("aa"),
         round(sum(lit(1.0) / col("zdeg")), 6).as("ra"))
-    val withDeg = scored
-      .join(deg.select(col("z").as("u"), col("deg").as("__du")), Seq("u"))
-      .join(deg.select(col("z").as("v"), col("deg").as("__dv")), Seq("v"))
-      .select(col("u"), col("v"), col("common_neighbors"), col("aa"),
-        col("ra"),
-        round(col("common_neighbors").cast("double")
-          / (col("__du") + col("__dv") - col("common_neighbors"))
-            .cast("double"), 6).as("jaccard"),
-        (col("__du") * col("__dv")).as("pa"))
-    withDeg.orderBy(col("aa").desc, col("u"), col("v")).limit(k)
-      .select(col("u").as("id_a"), col("v").as("id_b"),
-        col("common_neighbors"), col("jaccard"), col("aa"), col("ra"),
-        col("pa"))
+    (scored, deg)
   }
 }

@@ -161,13 +161,6 @@ object Louvain {
     }.select(col("__n"), col("__c"))
   }
 
-  /** @param pairs undirected edge list (`id_a`, `id_b`), multiplicity
-    *   = weight. */
-  def louvain(pairs: DataFrame, maxSweeps: Int = 4,
-      levels: Int = 2): DataFrame =
-    louvainOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)), maxSweeps,
-      levels)
-
   /** Full Louvain over a shared [[EdgeFrames.symmetrizedWeighted]]
     * frame.
     *

@@ -36,13 +36,8 @@ object PageRank {
       quantize: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
-      col(weightCol).cast("double").as("__w"))
-    val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
-    val ew = Memos.persist(e.join(outw, Seq("__s"))
-      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
-    val nodes = Memos.persist(e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct())
+    val (e, outw, ew) = edgeFractions(edges, srcCol, dstCol, weightCol)
+    val nodes = Memos.persist(EdgeFrames.nodes(e))
     // dangling = nodes never appearing as a src; computed once
     val danglingNodes = Memos.persist(
       nodes.join(outw.select(col("__s").as("__n")), Seq("__n"), "left_anti"))
@@ -50,24 +45,9 @@ object PageRank {
     val base = (1.0 - damping) / n
     val init = nodes.select(col("__n"),
       round(lit(1.0) / n, quantize).as("__r"))
-    // each iteration references the previous one twice (contribution +
-    // dangling mass): without the per-round checkpoint the logical plan
-    // grows 2^iters
-    val ranks = Rounds.iterate(init, iters) { (ranks, _) =>
-      val contrib = ew.join(ranks, col("__s") === col("__n"))
-        .groupBy(col("__t"))
-        .agg(sum(col("__frac") * col("__r")).as("__m"))
-      val dangling = ranks.join(danglingNodes, Seq("__n"), "left_semi")
-        .agg(coalesce(sum("__r"), lit(0.0)).as("__dm"))
-      nodes
-        .join(contrib, col("__n") === col("__t"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("__n"),
-          round(lit(base) + lit(damping) *
-            (coalesce(col("__m"), lit(0.0)) + col("__dm") / n),
-            quantize).as("__r"))
-    }
-    ranks.select(col("__n").as("node"), col("__r").as("rank"))
+    powerIterate(ew, nodes, danglingNodes, init, iters, quantize,
+      lit(base) + lit(damping) *
+        (coalesce(col("__m"), lit(0.0)) + col("__dm") / n))
   }
 
   /** Personalized PageRank with a seed teleport set — TrustRank
@@ -99,42 +79,19 @@ object PageRank {
       quantize: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
-      col(weightCol).cast("double").as("__w"))
-    val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
-    val ew = Memos.persist(e.join(outw, Seq("__s"))
-      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
-    val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
-    val nodes = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-    // teleport vector: node-sized, persisted once; |S| is one bounded long
-    val seedNodes = nodes.join(seedIds, Seq("__n"), "left_semi")
-    val ns = seedNodes.count()
-    require(ns > 0, "no seed id is present in the graph")
-    val sv = Memos.persist(nodes.join(
-        seedIds.select(col("__n"), lit(1).as("__is")), Seq("__n"), "left")
-      .select(col("__n"),
-        when(col("__is").isNotNull, lit(1.0) / ns).otherwise(lit(0.0))
-          .as("__sv")))
+    val (e, outw, ew) = edgeFractions(edges, srcCol, dstCol, weightCol)
+    val nodes = EdgeFrames.nodes(e)
+    // teleport vector: node-sized, persisted once
+    val (isSeed, svCol) = seedVector(nodes, seeds)
+    val sv = Memos.persist(nodes.join(isSeed, Seq("__n"), "left")
+      .select(col("__n"), svCol))
     val danglingNodes = Memos.persist(sv.join(outw.select(col("__s").as("__n")),
         Seq("__n"), "left_anti")
       .select(col("__n")))
     val init = sv.select(col("__n"), round(col("__sv"), quantize).as("__r"))
-    val ranks = Rounds.iterate(init, iters) { (ranks, _) =>
-      val contrib = ew.join(ranks, col("__s") === col("__n"))
-        .groupBy(col("__t"))
-        .agg(sum(col("__frac") * col("__r")).as("__m"))
-      val dangling = ranks.join(danglingNodes, Seq("__n"), "left_semi")
-        .agg(coalesce(sum("__r"), lit(0.0)).as("__dm"))
-      sv
-        .join(contrib, col("__n") === col("__t"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("__n"),
-          round(lit(1.0 - damping) * col("__sv") + lit(damping) *
-            (coalesce(col("__m"), lit(0.0)) + col("__dm") * col("__sv")),
-            quantize).as("__r"))
-    }
-    ranks.select(col("__n").as("node"), col("__r").as("rank"))
+    powerIterate(ew, sv, danglingNodes, init, iters, quantize,
+      lit(1.0 - damping) * col("__sv") + lit(damping) *
+        (coalesce(col("__m"), lit(0.0)) + col("__dm") * col("__sv")))
   }
 
   /** Approximate personalized PageRank by BATCH RESIDUAL PUSH
@@ -177,25 +134,15 @@ object PageRank {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
     require(eps > 0, s"eps must be > 0, got $eps")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
-      col(weightCol).cast("double").as("__w"))
-    val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
-    val ew = Memos.persist(e.join(outw, Seq("__s"))
-      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
-    val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
-    val nodes = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-    val ns = nodes.join(seedIds, Seq("__n"), "left_semi").count()
-    require(ns > 0, "no seed id is present in the graph")
+    val (e, outw, ew) = edgeFractions(edges, srcCol, dstCol, weightCol)
+    val nodes = EdgeFrames.nodes(e)
+    val (isSeed, svCol) = seedVector(nodes, seeds)
     // node-sized static frame: seed-vector value + weighted out-degree
     // (null = dangling), persisted once across rounds
     val base = Memos.persist(nodes
-      .join(seedIds.select(col("__n"), lit(1).as("__is")), Seq("__n"), "left")
+      .join(isSeed, Seq("__n"), "left")
       .join(outw.select(col("__s").as("__n"), col("__ow")), Seq("__n"), "left")
-      .select(col("__n"),
-        when(col("__is").isNotNull, lit(1.0) / ns).otherwise(lit(0.0))
-          .as("__sv"),
-        col("__ow")))
+      .select(col("__n"), svCol, col("__ow")))
     val oneMinusA = 1.0 - alpha
     val init = Rounds.materialize(base.select(col("__n"), lit(0.0).as("__p"),
       round(col("__sv"), quantize).as("__r")))
@@ -223,5 +170,55 @@ object PageRank {
     }
     st.select(col("__n").as("node"), round(col("__p"), 6).as("rank_push"),
       round(col("__r"), 6).as("residual"))
+  }
+
+  /** Edges (__s, __t, __w), out-weights (__s, __ow) and the persisted
+    * per-edge fractions (__s, __t, __frac). */
+  private def edgeFractions(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"),
+      col(weightCol).cast("double").as("__w"))
+    val outw = e.groupBy("__s").agg(sum("__w").as("__ow"))
+    val ew = Memos.persist(e.join(outw, Seq("__s"))
+      .select(col("__s"), col("__t"), (col("__w") / col("__ow")).as("__frac")))
+    (e, outw, ew)
+  }
+
+  /** Seed membership (__n, __is) to left-join onto `nodes`, and the
+    * teleport column `__sv` = 1/|S| on seeds, else 0 (|S| counts only
+    * seeds that are nodes: one bounded long). */
+  private def seedVector(nodes: DataFrame,
+      seeds: DataFrame): (DataFrame, Column) = {
+    val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
+    val ns = nodes.join(seedIds, Seq("__n"), "left_semi").count()
+    require(ns > 0, "no seed id is present in the graph")
+    (seedIds.select(col("__n"), lit(1).as("__is")),
+      when(col("__is").isNotNull, lit(1.0) / ns).otherwise(lit(0.0))
+        .as("__sv"))
+  }
+
+  /** The power iteration: per round the in-mass `__m` (one edge⋈rank
+    * join + groupBy(dst)) and the 1-row dangling mass `__dm` meet
+    * `nodes`, and `rank` — the caller's update over those columns — is
+    * quantized into the next `__r`. Returns (node, rank). */
+  private def powerIterate(ew: DataFrame, nodes: DataFrame,
+      danglingNodes: DataFrame, init: DataFrame, iters: Int,
+      quantize: Int, rank: Column): DataFrame = {
+    // each iteration references the previous one twice (contribution +
+    // dangling mass): without the per-round checkpoint the logical plan
+    // grows 2^iters
+    val ranks = Rounds.iterate(init, iters) { (ranks, _) =>
+      val contrib = ew.join(ranks, col("__s") === col("__n"))
+        .groupBy(col("__t"))
+        .agg(sum(col("__frac") * col("__r")).as("__m"))
+      val dangling = ranks.join(danglingNodes, Seq("__n"), "left_semi")
+        .agg(coalesce(sum("__r"), lit(0.0)).as("__dm"))
+      nodes
+        .join(contrib, col("__n") === col("__t"), "left")
+        .crossJoin(broadcast(dangling))
+        .select(col("__n"), round(rank, quantize).as("__r"))
+    }
+    ranks.select(col("__n").as("node"), col("__r").as("rank"))
   }
 }

@@ -59,32 +59,21 @@ object Scc {
     // BFS relaxations over the same node set — running them as two
     // [[SeedDistance]] chains doubled the per-round job count. One
     // direction-KEYED frame (__dir 0 = forward, 1 = reversed edges)
-    // relaxes both in each round's single join+rollup; per direction
-    // the integer arithmetic is exactly the hopDistance round, so the
-    // readout is unchanged.
+    // relaxes both in each round's single join+rollup: the hopDistance
+    // round ([[SeedDistance.relax]]) keyed by __dir.
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"))
     val both = Memos.persist(
       e.select(lit(0).as("__dir"), col("__s"), col("__t"))
         .unionByName(e.select(lit(1).as("__dir"), col("__t").as("__s"),
           col("__s").as("__t"))))
-    val nodes = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-    val init = Rounds.materialize(nodes
+    val init = Rounds.materialize(EdgeFrames.nodes(e)
       .select(col("__n"), explode(array(lit(0), lit(1))).as("__dir"))
       .select(col("__dir"), col("__n"),
         when(col("__n") === pivot, lit(0L))
           .otherwise(lit(null).cast("long")).as("__d")))
     val dist = Rounds.iterate(init, rounds) { (dist, _) =>
-      val relaxed = both.join(dist.where(col("__d").isNotNull)
-            .select(col("__dir").as("__rd"), col("__n"), col("__d")),
-          col("__dir") === col("__rd") && col("__s") === col("__n"))
-        .groupBy(col("__dir"), col("__t")).agg(min(col("__d") + 1).as("__nd"))
-        .select(col("__dir").as("__rd"), col("__t"), col("__nd"))
-      dist.join(relaxed,
-          col("__dir") === col("__rd") && col("__n") === col("__t"), "left")
-        .select(col("__dir"), col("__n"),
-          least(col("__d"), col("__nd")).as("__d"))
+      SeedDistance.relax(both, dist, Seq("__dir"))
     }
     val f = dist.where(col("__dir") === 0)
       .select(col("__n").as("id"), col("__d").as("hops_fwd"))

@@ -1,9 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Memos, Rounds}
+import graft.core.Rounds
 
 /** Bulk-synchronous BFS hop distance from a seed set — the crawl-depth
   * signal link pipelines attach to every page (Common Crawl publishes
@@ -40,18 +40,32 @@ object SeedDistance {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__t"))
-    val nodes = Memos.persist(e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct())
     val seedIds = seeds.select(seeds.columns.head).toDF("__n").distinct()
-    val init = Rounds.materialize(nodes.join(
+    // the node set is read once (by the init checkpoint): not persisted
+    val init = Rounds.materialize(EdgeFrames.nodes(e).join(
       seedIds.select(col("__n"), lit(0L).as("__d")), Seq("__n"), "left"))
-    val dist = Rounds.iterate(init, rounds) { (dist, _) =>
-      val relaxed = e.join(dist.where(col("__d").isNotNull),
-          col("__s") === col("__n"))
-        .groupBy(col("__t")).agg(min(col("__d") + 1).as("__nd"))
-      dist.join(relaxed, col("__n") === col("__t"), "left")
-        .select(col("__n"), least(col("__d"), col("__nd")).as("__d"))
-    }
+    val dist = Rounds.iterate(init, rounds)((dist, _) => relax(e, dist))
     dist.select(col("__n").as("id"), col("__d").as("hops"))
+  }
+
+  /** One BFS round: per key, every node of `dist` (keys…, __n, __d)
+    * takes min(__d, min over in-edges of `e` (keys…, __s, __t) of the
+    * source's __d + 1); null __d = unreached. */
+  private[graph] def relax(e: DataFrame, dist: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    // the reached side's keys are renamed so both join sides keep theirs
+    val rk = keys.map(k => s"__r$k")
+    val renamed = keys.zip(rk).map { case (k, r) => col(k).as(r) }
+    def sameKey(on: Column): Column =
+      keys.zip(rk).foldRight(on) { case ((k, r), c) => col(k) === col(r) && c }
+    val reached = dist.where(col("__d").isNotNull)
+      .select(renamed ++ Seq(col("__n"), col("__d")): _*)
+    val relaxed = e.join(reached, sameKey(col("__s") === col("__n")))
+      .groupBy(keys.map(col) :+ col("__t"): _*)
+      .agg(min(col("__d") + 1).as("__nd"))
+      .select(renamed ++ Seq(col("__t"), col("__nd")): _*)
+    dist.join(relaxed, sameKey(col("__n") === col("__t")), "left")
+      .select(keys.map(col) ++ Seq(col("__n"),
+        least(col("__d"), col("__nd")).as("__d")): _*)
   }
 }

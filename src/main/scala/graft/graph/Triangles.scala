@@ -30,17 +30,11 @@ import graft.core.Memos
   */
 object Triangles {
 
-  /** @param pairs undirected edge list, columns `id_a`, `id_b`
-    *   (integral); duplicates and self-loops tolerated (deduped /
-    *   dropped).
+  /** @param sym shared [[EdgeFrames.symmetrizedWeighted]] frame: the
+    *   canonical u < v edge set is its __s < __t half, and the true
+    *   undirected degree is its per-__s row count (each unordered edge
+    *   appears once per direction).
     */
-  def nodeTriangles(pairs: DataFrame): DataFrame =
-    nodeTrianglesOn(Memos.persist(EdgeFrames.symmetrizedWeighted(pairs)))
-
-  /** [[nodeTriangles]] over a shared [[EdgeFrames.symmetrizedWeighted]]
-    * frame: the canonical u < v edge set is its __s < __t half, and
-    * the true undirected degree is its per-__s row count (each
-    * unordered edge appears once per direction). */
   def nodeTrianglesOn(sym: DataFrame): DataFrame = {
     // canonical undirected edge set (u < v)
     val e = sym.filter(col("__s") < col("__t"))

@@ -26,10 +26,8 @@ object LlmDataQueries extends QueryPack {
     * eager persist against the other's plan build.
     */
   private val neymanAllocMemo = Memos.memo { (s, dir) =>
-    val a = Memos.persist(Splits.neymanAllocation(Tables.documents(s, dir),
+    graft.core.FanOut.shared(Splits.neymanAllocation(Tables.documents(s, dir),
       "source", "n_chars", k = 200))
-    a.count() // materialize so both gate plans see the cache
-    a
   }
 
   /** Per-dir DSIR importance weights (n_grams, logw per doc) — the
@@ -40,10 +38,8 @@ object LlmDataQueries extends QueryPack {
     val docs = Tables.documents(s, dir)
     val ratios = Dsir.bucketLogRatios(
       docs.filter(col("lang") === "en"), docs, "text")
-    val w = Memos.persist(
+    graft.core.FanOut.shared(
       Dsir.importanceWeights(docs, "text", "doc_id", ratios))
-    w.count()
-    w
   }
 
   /** The v5 flagship's packed output, built once per dir and persisted

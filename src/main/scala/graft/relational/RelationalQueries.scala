@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Memos, QueryPack, Tables}
+import graft.core.{FanOut, Memos, QueryPack, Tables}
 
 /** Relational operator coverage (SURVEY.md §2.9): scans with
   * pushdown/pruning, hash + broadcast joins, semi/anti joins, hash
@@ -106,13 +106,11 @@ object RelationalQueries extends QueryPack {
     // memo build instead of one per round per consumer. The
     // production analog is bucketing the edge table by source id.
     val nParts = s.sessionState.conf.numShufflePartitions
-    val sym = Memos.persist(graft.graph.EdgeFrames.symmetrizedWeighted(pairs)
+    FanOut.shared(graft.graph.EdgeFrames.symmetrizedWeighted(pairs)
       .repartition(nParts, col("__s")))
-    sym.count()
-    sym
   }
   private val tradeEdgesMemo = Memos.memo { (s, dir) =>
-    val e = Memos.persist(Tables.lineitem(s, dir)
+    FanOut.shared(Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(s, dir)),
         col("o_custkey") === col("c_custkey"))
@@ -120,8 +118,6 @@ object RelationalQueries extends QueryPack {
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
       .agg(count(lit(1)).as("w")))
-    e.count()
-    e
   }
   /** Inverse-volume trade edge frame (src, dst, len) — the weighted
     * graph the q_weighted_* family ranks; one projection shared so the
@@ -143,11 +139,9 @@ object RelationalQueries extends QueryPack {
     */
   private val tradeWeightedDistMemo = Memos.memo { (s, dir) =>
     import s.implicits._
-    val d = Memos.persist(graft.graph.DeltaStepping.shortestPathsMulti(
-        tradeWeightedEdges(s, dir), "src", "dst", "len",
-        Seq(0L, 1L, 2L).toDF("__seed"), delta = 4096L))
-    d.count()
-    d
+    FanOut.shared(graft.graph.DeltaStepping.shortestPathsMulti(
+      tradeWeightedEdges(s, dir), "src", "dst", "len",
+      Seq(0L, 1L, 2L).toDF("__seed"), delta = 4096L))
   }
   /** Per-dir DeepWalk corpus memo: q_random_walks, q_walk_skipgram and
     * q_glove_walks all generate the IDENTICAL trajectory set (seeds
@@ -157,16 +151,12 @@ object RelationalQueries extends QueryPack {
     val sym = coPurchaseSymMemo(s, dir)
     val seeds = sym.select(col("__s")).distinct()
       .filter(col("__s") <= 30).select(col("__s").as("__n"))
-    val w = Memos.persist(graft.graph.RandomWalks.uniformWalksOn(sym, seeds,
-        walksPerNode = 2, steps = 4, salt = "rw"))
-    w.count()
-    w
+    FanOut.shared(graft.graph.RandomWalks.uniformWalksOn(sym, seeds,
+      walksPerNode = 2, steps = 4, salt = "rw"))
   }
   private val lpaLabelsMemo = Memos.memo { (s, dir) =>
-    val l = Memos.persist(graft.graph.LabelPropagation.labelPropagationOn(
+    FanOut.shared(graft.graph.LabelPropagation.labelPropagationOn(
       coPurchaseSymMemo(s, dir), 5))
-    l.count()
-    l
   }
   /** Fit-once memos for the linkage family: the blocked pair join is
     * the corpus-sized cost and THREE gates consume it (params, scored
@@ -174,9 +164,7 @@ object RelationalQueries extends QueryPack {
     * and the 1-row EM params are persisted once per dir and shared.
     */
   private[graft] val linkagePairsMemo = Memos.memo { (s, dir) =>
-    val p = Memos.persist(linkagePairs(s, dir))
-    p.count()
-    p
+    FanOut.shared(linkagePairs(s, dir))
   }
   /** Per-dir u-estimates from DETERMINISTIC random pairs (Splink's
     * estimate_u_using_random_sampling; FellegiSunter.uFromRandomPairs)
@@ -216,10 +204,8 @@ object RelationalQueries extends QueryPack {
       nBucketsExpr = "SELECT greatest(count(*) // 4, 1) FROM documents")
 
   private val linkageParamsMemo = Memos.memo { (s, dir) =>
-    val pm = Memos.persist(graft.linkage.FellegiSunter.emFit(
+    FanOut.shared(graft.linkage.FellegiSunter.emFit(
       linkagePairsMemo(s, dir), linkageFields, iters = 5))
-    pm.count()
-    pm
   }
 
   /** The identical pair construction as SQL CTEs (relations
@@ -2410,7 +2396,7 @@ object RelationalQueries extends QueryPack {
   /** Coreness mirror: the identical h-index rounds over the simple
     * symmetrized co-purchase graph — h = max(min(rank, v)) over
     * neighbor values sorted (v DESC, neighbor ASC), pure integer
-    * arithmetic (graph/KCore.coreness; early stop is idempotent so the
+    * arithmetic (graph/KCore.corenessOn; early stop is idempotent so the
     * fixed-round replay matches).
     */
   private def corenessOracleSql(rounds: Int = 8): String = {
@@ -2542,10 +2528,8 @@ object RelationalQueries extends QueryPack {
     * — before r14 each ran its own full 2-alternation fit on identical
     * inputs. */
   private val alsFactorsMemo = Memos.memo { (s, dir) =>
-    val f = Memos.persist(
+    FanOut.shared(
       graft.recommend.ImplicitAls.fit(alsConfidences(s, dir), d = 2))
-    f.count()
-    f
   }
 
   /** The confidence frame persisted per dir (r15): three consumers —
@@ -2555,15 +2539,13 @@ object RelationalQueries extends QueryPack {
     * cache). Persist + eager count once.
     */
   private val alsConfidences = Memos.memo { (s, dir) =>
-    val c = Memos.persist(graft.recommend.ImplicitAls.confidences(
+    FanOut.shared(graft.recommend.ImplicitAls.confidences(
       Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey").as("user"), col("l_partkey").as("item"))
         .agg(sum(col("l_quantity")).as("x")),
       "user", "item", "x"))
-    c.count()
-    c
   }
 
   /** The ALS confidence frame as a DuckDB CTE `ac(u_id, i_id, c)` —

@@ -8,7 +8,8 @@ class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def run(edges: Seq[(Long, Long)], rounds: Int = 20): Map[Long, Long] =
-    KCore.coreness(edges.toDF("id_a", "id_b"), rounds)
+    KCore.corenessOn(
+        EdgeFrames.symmetrizedWeighted(edges.toDF("id_a", "id_b")), rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Textbook sequential peel — the ground truth the h-index iteration

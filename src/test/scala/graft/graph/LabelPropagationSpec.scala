@@ -35,7 +35,8 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    LabelPropagation.labelPropagation(edges.toDF("id_a", "id_b"), iters)
+    LabelPropagation.labelPropagationOn(
+        EdgeFrames.symmetrizedWeighted(edges.toDF("id_a", "id_b")), iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def check(edges: Seq[(Long, Long)], iters: Int = 5): Unit =
@@ -108,9 +109,9 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   private def runQ(edges: Seq[(Long, Long)], iters: Int = 5): Double = {
-    val df = edges.toDF("id_a", "id_b")
-    val labels = LabelPropagation.labelPropagation(df, iters)
-    LabelPropagation.modularity(df, labels)
+    val sym = EdgeFrames.symmetrizedWeighted(edges.toDF("id_a", "id_b"))
+    val labels = LabelPropagation.labelPropagationOn(sym, iters)
+    LabelPropagation.modularityOn(sym, labels)
       .collect().map(_.getDouble(4)).sum
   }
 
@@ -132,8 +133,8 @@ class LabelPropagationSpec extends SparkSpec {
   test("modularity matches the driver replay on random multigraphs") {
     val rnd = new Random(23)
     val edges = Seq.fill(150)((rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
-    val df = edges.toDF("id_a", "id_b")
-    val labels = LabelPropagation.labelPropagation(df, 5)
+    val sym = EdgeFrames.symmetrizedWeighted(edges.toDF("id_a", "id_b"))
+    val labels = LabelPropagation.labelPropagationOn(sym, 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = runQ(edges, 5)
     assert(math.abs(got - bruteQ(edges, labels)) < 1e-5)

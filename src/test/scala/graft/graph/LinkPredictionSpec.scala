@@ -63,6 +63,13 @@ class LinkPredictionSpec extends SparkSpec {
       r6(1.0 / math.log(3.0)), r6(1.0 / 3.0), 2L)))
     assert(got((1L, 4L)) === ((1L, r6(1.0 / 2.0),
       r6(1.0 / math.log(3.0)), r6(1.0 / 3.0), 2L)))
+    // adamicAdar is the (id_a, id_b, common_neighbors, aa) projection
+    // of the same wedge pass, capped or not
+    for (cap <- Seq(None, Some(2), Some(3)))
+      assert(LinkPrediction.adamicAdar(edges, k = 10, maxDegree = cap)
+          .collect().toSeq ===
+        LinkPrediction.linkScores(edges, k = 10, maxDegree = cap)
+          .select("id_a", "id_b", "common_neighbors", "aa").collect().toSeq)
   }
 
   test("linkScores: jaccard and PA use FULL degrees, pivots the cap") {

@@ -1,5 +1,7 @@
 package graft.graph
 
+import org.apache.spark.sql.execution.LogicalRDD
+
 import graft.SparkSpec
 
 class SeedDistanceSpec extends SparkSpec {
@@ -48,5 +50,20 @@ class SeedDistanceSpec extends SparkSpec {
     // extra rounds past the fixpoint change nothing
     assert(dist(edges, Seq(1L), rounds = 2) ==
       dist(edges, Seq(1L), rounds = 9))
+  }
+
+  test("hopDistance holds only the returned state's checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = SeedDistance.hopDistance(
+      Seq((1L, 2L), (2L, 3L), (3L, 1L), (7L, 8L)).toDF("s", "t"), "s", "t",
+      Seq(1L).toDF("node"), rounds = 3)
+    val checkpoint = out.queryExecution.analyzed.collectFirst {
+      case r: LogicalRDD => r.rdd.id
+    }
+    assert(checkpoint.isDefined)
+    assert(sc.getPersistentRDDs.keySet.toSet -- before == checkpoint.toSet)
+    assert(out.count() == 5L)
+    checkpoint.foreach(sc.getPersistentRDDs(_).unpersist(blocking = false))
   }
 }

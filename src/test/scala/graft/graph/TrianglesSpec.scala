@@ -28,7 +28,8 @@ class TrianglesSpec extends SparkSpec {
   }
 
   private def run(edges: Seq[(Long, Long)]): Map[Long, (Long, Long, Double)] =
-    Triangles.nodeTriangles(edges.toDF("id_a", "id_b"))
+    Triangles.nodeTrianglesOn(
+        EdgeFrames.symmetrizedWeighted(edges.toDF("id_a", "id_b")))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
