@@ -6,11 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ExpressionBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native SQ8 scalar-quantization kernels (FAISS ScalarQuantizer
+/** Native SQ8 scalar-quantization kernel (FAISS ScalarQuantizer
   * QT_8bit shape) — the per-dimension affine 256-level grid the
-  * `Ann.sqTrain` pass fits. These replace the `transform(vec, …)`
+  * `Ann.sqTrain` pass fits. It replaces the `transform(vec, …)`
   * higher-order-function formulation, whose lambdas evaluate
   * INTERPRETED per element with two `element_at` lookups into
   * dim-sized literal arrays each; here the grids ride as codegen
@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * fuses into WholeStageCodegen — on a 100 TB corpus the
   * reconstruct-and-score scan is the SQ8 search's entire cost.
   *
-  * Bit-exactness contract with the HOF forms (gates q_ann_sq8 +
-  * the LlmDataSpec code/decode round-trip stay hash-identical):
+  * Bit-exactness contract with the HOF form (gate q_ann_sq8 stays
+  * hash-identical):
   * code = `clamp(round((x − min_d)/scale_d, 0), 0, 255)` with Spark's
   * `round(_, 0)` semantics — HALF_UP (half away from zero) decided on
   * the EXACT value, which `Math.floor(v + 0.5)` alone does not honor
@@ -47,31 +47,6 @@ object SqQuantize {
     c.toInt
   }
 
-  def encode(vec: ArrayData, isFloat: Boolean, mins: Array[Double],
-      scales: Array[Double]): ArrayData = {
-    val n = math.min(vec.numElements(), mins.length)
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val x = if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
-      out(i) = code((x - mins(i)) / scales(i))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def decode(codes: ArrayData, mins: Array[Double],
-      scales: Array[Double]): ArrayData = {
-    val n = math.min(codes.numElements(), mins.length)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      out(i) = mins(i) + codes.getInt(i).toDouble * scales(i)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
   def roundTrip(vec: ArrayData, isFloat: Boolean, mins: Array[Double],
       scales: Array[Double]): ArrayData = {
     val n = math.min(vec.numElements(), mins.length)
@@ -86,95 +61,25 @@ object SqQuantize {
   }
 }
 
-/** Base for the three grid-referencing kernels: float/double input
-  * array, grids as reference objects, one static call per row.
-  */
-sealed trait SqGridExpression extends UnaryExpression {
-  def mins: Array[Double]
-  def scales: Array[Double]
-  require(mins.length == scales.length && mins.nonEmpty,
-    "mins/scales must be same nonempty length")
-
-  protected def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  protected def inputElementTypes: Set[DataType]
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(t, _) if inputElementTypes(t) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs array<${inputElementTypes.mkString("|")}>, got $other")
-  }
-}
-
-/** SQ8 encode: `array<int>` per-dim codes (1 byte of information per
-  * dimension). Map-only, scan-fused. */
-case class SqEncode(child: Expression, mins: Array[Double],
-    scales: Array[Double]) extends SqGridExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "sq_encode"
-  override protected def inputElementTypes: Set[DataType] =
-    Set(FloatType, DoubleType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SqQuantize.encode(input.asInstanceOf[ArrayData], isFloat, mins, scales)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mn = ctx.addReferenceObj("sqMins", mins, "double[]")
-    val sc = ctx.addReferenceObj("sqScales", scales, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SqQuantize.encode($c, $isFloat, $mn, $sc)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SqEncode =
-    copy(child = newChild)
-}
-
-object SqEncode {
-  def apply(col: Column, mins: Array[Double], scales: Array[Double]): Column =
-    ExpressionBridge.column(
-      SqEncode(ExpressionBridge.expression(col), mins, scales))
-}
-
-/** SQ8 decode: x̂_d = min_d + code_d·scale_d from an `array<int>` code
-  * column (map-only). */
-case class SqDecode(child: Expression, mins: Array[Double],
-    scales: Array[Double]) extends SqGridExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "sq_decode"
-  override protected def inputElementTypes: Set[DataType] = Set(IntegerType)
-  override protected def isFloat: Boolean = false
-
-  override protected def nullSafeEval(input: Any): Any =
-    SqQuantize.decode(input.asInstanceOf[ArrayData], mins, scales)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mn = ctx.addReferenceObj("sqMins", mins, "double[]")
-    val sc = ctx.addReferenceObj("sqScales", scales, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SqQuantize.decode($c, $mn, $sc)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SqDecode =
-    copy(child = newChild)
-}
-
-object SqDecode {
-  def apply(col: Column, mins: Array[Double], scales: Array[Double]): Column =
-    ExpressionBridge.column(
-      SqDecode(ExpressionBridge.expression(col), mins, scales))
-}
-
 /** Fused encode→decode (`x̂` straight from `x`): the SQ8 search's
   * corpus-side scan — one loop, no intermediate code array survives
   * the row. */
 case class SqRoundTrip(child: Expression, mins: Array[Double],
-    scales: Array[Double]) extends SqGridExpression {
+    scales: Array[Double]) extends UnaryExpression {
+  require(mins.length == scales.length && mins.nonEmpty,
+    "mins/scales must be same nonempty length")
+
+  private def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<float|double>, got $other")
+  }
+
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "sq_round_trip"
-  override protected def inputElementTypes: Set[DataType] =
-    Set(FloatType, DoubleType)
 
   override protected def nullSafeEval(input: Any): Any =
     SqQuantize.roundTrip(input.asInstanceOf[ArrayData], isFloat, mins, scales)

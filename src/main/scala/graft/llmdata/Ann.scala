@@ -6,15 +6,25 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]).
   *
-  *  - [[cosineTopK]]: exact brute force — broadcast the (small) query
-  *    set against the corpus; per-row dot products are codegen'd
-  *    native expressions; top-k via a bounded size-k-heap aggregate
-  *    (map-side partial merge). At 100 TB corpus this is one scan, and
-  *    the only shuffle carries ≤ k·nPartitions rows per query.
-  *  - [[randomHyperplaneBuckets]] / [[lshCosineTopK]]: the scale path —
-  *    sign-random-projection LSH (Charikar). Corpus is bucketed once by
-  *    a b-bit signature; queries probe only their own bucket, cutting
-  *    the candidate set ~2^b fold at slight recall cost.
+  * Every top-k entry here is ONE search ([[search]]): broadcast the
+  * small `(query_id, qv, …)` query side, join it to the corpus side on
+  * a probe key, keep pairs with `id ≠ query_id`, add a score column and
+  * take each query's top k with a bounded size-k-heap aggregate
+  * ([[topKPerQuery]]; map-side partial merge, so at 100 TB the only
+  * shuffle carries ≤ k·nPartitions rows per query). The probe key is
+  * one of three:
+  *  - none: every pair is scored (exact brute force — [[cosineTopK]],
+  *    [[knnGraph]], [[sqTopK]], [[pqAdcTopK]]);
+  *  - the LSH bucket ([[lshProbe]]): sign-random-projection signatures
+  *    (Charikar), each query probing its own bucket and optionally its
+  *    Hamming-1 neighbours — [[lshCosineTopK]], [[knnGraphLsh]];
+  *  - the IVF cell ([[ivfProbe]]): the query's `nProbe` nearest k-means
+  *    cells — [[ivfCosineTopK]], [[ivfPqTopK]].
+  * (The exact re-rank of [[pqAdcTopKReranked]] keys its PQ candidates
+  * by query id.) The entries differ only in the corpus code (raw
+  * vectors, the SQ8 round trip or PQ codes) and in the score
+  * expression, each kept exactly: raw cosine, cosine rounded to 6 dp,
+  * or −round(ADC, 6).
   */
 object Ann {
 
@@ -44,9 +54,6 @@ object Ann {
       dotExpr(vecCol, array(b.map(lit).toIndexedSeq: _*))
     }: _*)
 
-  def cosineExpr(a: Column, b: Column): Column =
-    dotExpr(a, b) / (normExpr(a) * normExpr(b))
-
   /** Matryoshka truncation (Kusupati et al., arXiv:2205.13147: MRL
     * embeddings are trained so prefixes are usable sub-embeddings):
     * keep the first `d` dims and re-L2-normalize — the standard
@@ -73,25 +80,63 @@ object Ann {
       .select(col("query_id"), (col("__pos") + 1).as("rank"),
         col("__s.id").as("neighbor_id"), col("__s.score").as("cos"))
 
+  /** A probe key: the column both sides carry, how a corpus row gets
+    * its key, and how a query expands to one row per probed key. A
+    * (corpus row, query) pair must share at most one key, so that it is
+    * scored at most once: an LSH or IVF corpus row holds exactly one.
+    */
+  private[llmdata] final case class Probe(key: String,
+      corpusSide: DataFrame => DataFrame, querySide: DataFrame => DataFrame)
+
+  /** The `(query_id, qv)` query side of a search. */
+  private[llmdata] def querySide(queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+
+  /** The one search: join the corpus side `c` to the query side `q`
+    * (broadcast unless it is corpus-sized) on the probe key, or with a
+    * plain non-equi join when there is none; keep pairs with
+    * `id ≠ query_id` and `pairFilter`; score them into `cos`; take each
+    * query's top k. Output (query_id, rank, neighbor_id, cos).
+    */
+  private def search(c: DataFrame, q: DataFrame, idCol: String,
+      probe: Option[Probe], score: Column, k: Int,
+      pairFilter: Option[Column] = None,
+      broadcastQueries: Boolean = true): DataFrame = {
+    def side(df: DataFrame) = if (broadcastQueries) broadcast(df) else df
+    val keep = pairFilter.foldLeft(col(idCol) =!= col("query_id"))(_ && _)
+    val pairs = probe match {
+      case None => c.join(side(q), keep)
+      case Some(p) =>
+        p.corpusSide(c).join(side(p.querySide(q)), Seq(p.key)).filter(keep)
+    }
+    topKPerQuery(pairs.withColumn("cos", score), idCol, k)
+  }
+
+  /** [[search]] scored by cosine. Norms are computed ONCE per corpus row
+    * (`__nc`) and once per query (`__nq`), not per (query, row) pair —
+    * a |Q|-query search would otherwise traverse each corpus vector
+    * 2|Q|+1 times instead of |Q|+2. `rounded` ranks on round(cos, 6)
+    * with id tie break, so ranks replay in any engine.
+    */
+  private[llmdata] def cosineSearch(corpus: DataFrame, vecCol: String,
+      queries: DataFrame, idCol: String, k: Int, rounded: Boolean,
+      probe: Option[Probe] = None, pairFilter: Option[Column] = None,
+      broadcastQueries: Boolean = true): DataFrame = {
+    val cos = dotExpr(col("qv"), col(vecCol)) / (col("__nq") * col("__nc"))
+    search(corpus.withColumn("__nc", normExpr(col(vecCol))),
+      queries.withColumn("__nq", normExpr(col("qv"))), idCol, probe,
+      if (rounded) round(cos, 6) else cos, k, pairFilter, broadcastQueries)
+  }
+
   /** Exact top-k cosine neighbors of each query vector.
-    *
-    * Norms are computed ONCE per corpus row and once per query (not per
-    * (query, row) pair — a |Q|-query search would otherwise traverse
-    * each corpus vector 2|Q|+1 times instead of |Q|+2).
     * @param corpus (idCol, vecCol) rows to search
     * @param queries (idCol, vecCol) rows to search for (small; broadcast)
     */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__nq", normExpr(col("qv"))))
-    val scored = corpus.withColumn("__nc", normExpr(col(vecCol)))
-      .join(q, col(idCol) =!= col("query_id"))
-      .withColumn("cos",
-        dotExpr(col("qv"), col(vecCol)) / (col("__nq") * col("__nc")))
-    topKPerQuery(scored, idCol, k)
-  }
+      vecCol: String, k: Int): DataFrame =
+    cosineSearch(corpus, vecCol, querySide(queries, idCol, vecCol), idCol, k,
+      rounded = false)
 
   /** Deterministic ±1 hyperplanes from a seed (md5-bit-derived), as
     * literal arrays — broadcast implicitly with the plan.
@@ -112,45 +157,43 @@ object Ann {
       when(dotExpr(vecCol, planeLit) > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  def randomHyperplaneBuckets(df: DataFrame, vecCol: String,
-      nPlanes: Int, dim: Int, seed: Int = 42): DataFrame =
-    df.withColumn("bucket", signatureExpr(col(vecCol), hyperplanes(nPlanes, dim, seed)))
-
-  /** LSH-bucketed ANN: candidates = same bucket, then exact cosine
-    * top-k within. Recall < 1; bucket count 2^nPlanes trades recall for
-    * candidate-set size.
-    */
-  /** @param multiProbe 0 = each query probes only its own bucket (the
+  /** The LSH probe: each corpus row sits in the bucket of its b-bit
+    * signature.
+    * @param multiProbe 0 = each query probes only its own bucket (the
     *   recall cliff: a query near a hyperplane misses neighbors across
     *   it); 1 = also probe every bucket at Hamming distance 1 (flip
     *   each signature bit) — nPlanes+1 buckets per query, the standard
-    *   multi-probe recall fix (Lv et al. VLDB'07). Corpus rows stay in
-    *   exactly one bucket, so no candidate is generated twice.
+    *   multi-probe recall fix (Lv et al. VLDB'07).
+    */
+  private def lshProbe(vecCol: String, nPlanes: Int, dim: Int, seed: Int,
+      multiProbe: Int): Probe = {
+    require(multiProbe == 0 || multiProbe == 1,
+      s"multiProbe must be 0 (own bucket) or 1 (Hamming-1), got $multiProbe")
+    val planes = hyperplanes(nPlanes, dim, seed)
+    Probe("bucket",
+      _.withColumn("bucket", signatureExpr(col(vecCol), planes)),
+      q => {
+        val q0 = q.withColumn("__b0", signatureExpr(col("qv"), planes))
+        if (multiProbe == 0) q0.withColumn("bucket", col("__b0")).drop("__b0")
+        else {
+          val probes = array((col("__b0") +:
+            (0 until nPlanes).map(j =>
+              col("__b0").bitwiseXOR(lit(1L << j)))): _*)
+          q0.withColumn("bucket", explode(probes)).drop("__b0")
+        }
+      })
+  }
+
+  /** LSH-bucketed ANN: candidates = the probed buckets, then exact
+    * cosine top-k within. Recall < 1; bucket count 2^nPlanes trades
+    * recall for candidate-set size; `multiProbe` as in [[lshProbe]].
     */
   def lshCosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nPlanes: Int, dim: Int, seed: Int = 42,
-      multiProbe: Int = 0): DataFrame = {
-    require(multiProbe <= 1, "only Hamming-1 multi-probe is supported")
-    val planes = hyperplanes(nPlanes, dim, seed)
-    val c = corpus.withColumn("bucket", signatureExpr(col(vecCol), planes))
-      .withColumn("__nc", normExpr(col(vecCol)))
-    val q0 = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__b0", signatureExpr(col("qv"), planes))
-      .withColumn("__nq", normExpr(col("qv")))
-    val q = broadcast(
-      if (multiProbe == 0) q0.withColumn("bucket", col("__b0")).drop("__b0")
-      else {
-        val probes = array((col("__b0") +:
-          (0 until nPlanes).map(j =>
-            col("__b0").bitwiseXOR(lit(1L << j)))): _*)
-        q0.withColumn("bucket", explode(probes)).drop("__b0")
-      })
-    val scored = c.join(q, Seq("bucket")).filter(col(idCol) =!= col("query_id"))
-      .withColumn("cos",
-        dotExpr(col("qv"), col(vecCol)) / (col("__nq") * col("__nc")))
-    topKPerQuery(scored, idCol, k)
-  }
+      multiProbe: Int = 0): DataFrame =
+    cosineSearch(corpus, vecCol, querySide(queries, idCol, vecCol), idCol, k,
+      rounded = false,
+      probe = Some(lshProbe(vecCol, nPlanes, dim, seed, multiProbe)))
 
   /** First-class bounded-degree kNN graph over an embedding corpus —
     * the base graph for common-neighbor link prediction
@@ -159,65 +202,42 @@ object Ann {
     * co-occurrence graph's degrees grow with the corpus; a kNN graph's
     * are k BY CONSTRUCTION, so wedge volume stays ~n·k²).
     *
-    * This brute variant scores all pairs with the corpus side
-    * broadcast — exact, for bounded corpora and gate slices; the scale
-    * path is [[knnGraphLsh]]. Cosines are QUANTIZED (round 6) BEFORE
-    * the bounded top-k heap so neighbor ranks replay in any engine.
+    * This brute variant is the search with queries = corpus, the query
+    * side broadcast — exact, for bounded corpora and gate slices; the
+    * scale path is [[knnGraphLsh]]. Cosines are QUANTIZED (round 6)
+    * BEFORE the bounded top-k heap so neighbor ranks replay in any
+    * engine.
     *
     * @return (src, rank, dst, cos) — k rows per node, ties broken
     *   (cos desc, dst asc)
     */
   def knnGraph(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
-    val base = corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
-      .withColumn("__nc", normExpr(col("__cv")))
-    val q = broadcast(base.select(col("__cid").as("query_id"),
-      col("__cv").as("qv"), col("__nc").as("__nq")))
-    val scored = base.join(q, col("__cid") =!= col("query_id"))
-      .withColumn("cos", round(
-        dotExpr(col("qv"), col("__cv")) / (col("__nq") * col("__nc")), 6))
-    topKPerQuery(scored, "__cid", k)
-      .select(col("query_id").as("src"), col("rank"),
-        col("neighbor_id").as("dst"), col("cos"))
-  }
+      k: Int): DataFrame =
+    asGraph(cosineSearch(corpus, vecCol, querySide(corpus, idCol, vecCol),
+      idCol, k, rounded = true))
 
   /** [[knnGraph]] at scale: candidates from the hyperplane-LSH bucket
     * join instead of all pairs. The corpus is bucketed ONCE and stays
     * in one bucket per row; the probe side of the SAME corpus explodes
-    * to its own bucket plus the `multiProbe` Hamming-1 flips (Lv et
-    * al. VLDB'07), so the join is a bucket-keyed equi-join — NO
-    * broadcast of the corpus, no all-pairs blow-up; candidate volume
-    * is Σ_b |b|·|probes into b|. Per-node degree is still capped at k
-    * by the bounded heap, with the same round-6-before-heap rank
-    * replay. Recall < 1 (gated vs [[knnGraph]] in q_knn_graph).
+    * to its own bucket plus the `multiProbe` Hamming-1 flips, so the
+    * join is a bucket-keyed equi-join — the probe side is corpus-sized,
+    * so it is NOT broadcast, and there is no all-pairs blow-up;
+    * candidate volume is Σ_b |b|·|probes into b|. Per-node degree is
+    * still capped at k by the bounded heap, with the same
+    * round-6-before-heap rank replay. Recall < 1 (gated vs [[knnGraph]]
+    * in q_knn_graph).
     */
   def knnGraphLsh(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nPlanes: Int, dim: Int, seed: Int = 42,
-      multiProbe: Int = 1): DataFrame = {
-    require(multiProbe <= 1, "only Hamming-1 multi-probe is supported")
-    val planes = hyperplanes(nPlanes, dim, seed)
-    val c = corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
-      .withColumn("bucket", signatureExpr(col("__cv"), planes))
-      .withColumn("__nc", normExpr(col("__cv")))
-    val q0 = corpus.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__b0", signatureExpr(col("qv"), planes))
-      .withColumn("__nq", normExpr(col("qv")))
-    val q =
-      if (multiProbe == 0) q0.withColumn("bucket", col("__b0")).drop("__b0")
-      else {
-        val probes = array((col("__b0") +:
-          (0 until nPlanes).map(j =>
-            col("__b0").bitwiseXOR(lit(1L << j)))): _*)
-        q0.withColumn("bucket", explode(probes)).drop("__b0")
-      }
-    val scored = c.join(q, Seq("bucket"))
-      .filter(col("__cid") =!= col("query_id"))
-      .withColumn("cos", round(
-        dotExpr(col("qv"), col("__cv")) / (col("__nq") * col("__nc")), 6))
-    topKPerQuery(scored, "__cid", k)
-      .select(col("query_id").as("src"), col("rank"),
-        col("neighbor_id").as("dst"), col("cos"))
-  }
+      multiProbe: Int = 1): DataFrame =
+    asGraph(cosineSearch(corpus, vecCol, querySide(corpus, idCol, vecCol),
+      idCol, k, rounded = true,
+      probe = Some(lshProbe(vecCol, nPlanes, dim, seed, multiProbe)),
+      broadcastQueries = false))
+
+  private def asGraph(nn: DataFrame): DataFrame =
+    nn.select(col("query_id").as("src"), col("rank"),
+      col("neighbor_id").as("dst"), col("cos"))
 
   /** IVF (inverted-file) ANN — the other standard scale path next to
     * sign-LSH: partition the corpus into `nList` Voronoi cells around
@@ -233,8 +253,8 @@ object Ann {
     * the queries probing its cell. At 100 TB: one scan to bucket, one
     * broadcast-join scan to score, a tiny top-k shuffle; candidate
     * volume is |corpus|·nProbe/nList on average.
-    */
-  /** @param rowCountHint corpus row count, if the caller already knows
+    *
+    * @param rowCountHint corpus row count, if the caller already knows
     *   it (e.g. from table stats or an earlier action) — sizes the
     *   hash-range pre-filter without the extra full scan a `count()`
     *   costs per index build. An overestimate only widens the filter
@@ -374,29 +394,32 @@ object Ann {
     */
   def pqAdcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int,
-      codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val m = codebooks.length
-    val dsub = codebooks(0)(0).length
-    val c = corpus.withColumn("__code", pqCodeExpr(col(vecCol), codebooks))
-      .select(col(idCol), col("__code"))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__dt", pqDistTablesExpr(codebooks))
-      .select("query_id", "__dt"))
-    val scored = c.join(q, col(idCol) =!= col("query_id"))
-      .withColumn("cos", round(adcSumExpr(m), 6) * lit(-1.0))
-    topKPerQuery(scored, idCol, k)
+      codebooks: Array[Array[Array[Double]]]): DataFrame =
+    adcSearch(corpus, queries, idCol, vecCol, k, codebooks, probe = None)
+
+  /** [[search]] scored by −round(ADC, 6): the corpus side carries its PQ
+    * codes, the query side its distance tables; `adc_d` is the rounded
+    * ADC distance of each kept neighbor.
+    */
+  private def adcSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, codebooks: Array[Array[Array[Double]]],
+      probe: Option[Probe]): DataFrame =
+    search(corpus.withColumn("__code", pqCodeExpr(col(vecCol), codebooks)),
+      querySide(queries, idCol, vecCol)
+        .withColumn("__dt", pqDistTablesExpr(codebooks)),
+      idCol, probe, round(adcSumExpr(codebooks.length), 6) * lit(-1.0), k)
       .withColumn("adc_d", col("cos") * lit(-1.0)).drop("cos")
-  }
 
   /** PQ search with exact re-ranking (the standard recall-recovery
     * step — PAMI'11 §VII evaluates exactly this IVFADC+R shape): ADC
     * retrieves `rerank` coarse candidates per query (cheap m-lookup
     * scoring), then ONLY those candidates are re-scored with true
     * cosine against the broadcast query vectors and the top `k` kept.
-    * At 100 TB the corpus-wide scan still reads only codes; the exact
-    * math touches `rerank·|Q|` rows — a driver-bounded semi-join back
-    * into the vector table.
+    * The re-rank search's probe key is the query id: each candidate row
+    * is keyed by the queries whose coarse list holds it. At 100 TB the
+    * corpus-wide scan still reads only codes; the exact math touches
+    * `rerank·|Q|` rows — a driver-bounded semi-join back into the
+    * vector table.
     */
   def pqAdcTopKReranked(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, codebooks: Array[Array[Array[Double]]],
@@ -404,19 +427,13 @@ object Ann {
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
     val coarse = pqAdcTopK(corpus, queries, idCol, vecCol, rerank, codebooks)
       .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__nq", normExpr(col("qv"))))
     val cand = corpus
       .join(broadcast(coarse.select(col("neighbor_id").as(idCol)).distinct()),
         Seq(idCol), "left_semi")
-      .withColumn("__nc", normExpr(col(vecCol)))
-    val scored = coarse
-      .join(cand, col(idCol) === col("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cos",
-        round(dotExpr(col("qv"), col(vecCol)) / (col("__nq") * col("__nc")), 6))
-    topKPerQuery(scored, idCol, k)
+    val byQuery = Probe("query_id",
+      c => coarse.join(c, col(idCol) === col("neighbor_id")), identity)
+    cosineSearch(cand, vecCol, querySide(queries, idCol, vecCol), idCol, k,
+      rounded = true, probe = Some(byQuery))
   }
 
   /** IVFPQ — the composed FAISS workhorse (Jégou PAMI'11 §V, minus
@@ -432,24 +449,9 @@ object Ann {
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], nProbe: Int = 2): DataFrame = {
-    require(nProbe >= 1 && nProbe <= centroids.length)
-    val c = corpus
-      .withColumn("__cell", cellExpr(col(vecCol), centroids))
-      .withColumn("__code", pqCodeExpr(col(vecCol), codebooks))
-      .select(col(idCol), col("__cell"), col("__code"))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__dt", pqDistTablesExpr(codebooks))
-      .withColumn("__cell", explode(probeCellsExpr(centroids, nProbe)))
-      .select("query_id", "__cell", "__dt"))
-    // each corpus row sits in exactly ONE cell → no duplicate pairs
-    val scored = c.join(q, Seq("__cell"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cos", round(adcSumExpr(codebooks.length), 6) * lit(-1.0))
-    topKPerQuery(scored, idCol, k)
-      .withColumn("adc_d", col("cos") * lit(-1.0)).drop("cos")
-  }
+      codebooks: Array[Array[Array[Double]]], nProbe: Int = 2): DataFrame =
+    adcSearch(corpus, queries, idCol, vecCol, k, codebooks,
+      probe = Some(ivfProbe(vecCol, centroids, nProbe)))
 
   /** Scalar 8-bit quantization training (the FAISS ScalarQuantizer
     * QT_8bit design, Jégou PAMI'11 §III positions SQ as the baseline PQ
@@ -471,28 +473,11 @@ object Ann {
     (mins, scales)
   }
 
-  /** SQ8 encode: `array<int>` of per-dim codes
-    * `clamp(round((x_d − min_d)/scale_d), 0, 255)` — map-only,
-    * scan-fused, 1 byte of information per dimension instead of a
-    * 4-byte float. Native codegen kernel
-    * ([[graft.functions.SqEncode]] — grids as reference objects, one
-    * fused loop) replacing the interpreted `transform` HOF lambda;
-    * bit-exact Spark round(_, 0) semantics (see SqQuantize scaladoc).
-    */
-  def sqCodeExpr(vecCol: Column, mins: Array[Double],
-      scales: Array[Double]): Column =
-    graft.functions.SqEncode(vecCol, mins, scales)
-
-  /** SQ8 decode: x̂_d = min_d + code_d·scale_d (map-only, native
-    * codegen loop). */
-  def sqReconstructExpr(codeCol: Column, mins: Array[Double],
-      scales: Array[Double]): Column =
-    graft.functions.SqDecode(codeCol, mins, scales)
-
   /** Asymmetric SQ8 search: corpus rows are scored from their
-    * RECONSTRUCTED vectors (encode → decode fused into the scan — at
-    * 100 TB the stored index is dim bytes/row), queries keep their
-    * exact vectors and broadcast. Cosine ranked ROUNDED to 6 dp (ties
+    * RECONSTRUCTED vectors (graft.functions.SqRoundTrip: encode →
+    * decode fused into one loop in the scan — at 100 TB the stored
+    * index is dim bytes/row), queries keep their exact vectors and
+    * broadcast. Cosine ranked ROUNDED to 6 dp (ties
     * by id) via the bounded-heap top-k — the house ANN determinism
     * convention. Recall sits between PQ (coarser) and exact
     * brute-force; unlike PQ there is no per-query table, so the
@@ -500,22 +485,11 @@ object Ann {
     */
   def sqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, mins: Array[Double],
-      scales: Array[Double]): DataFrame = {
-    // fused encode→decode: one codegen loop per row, no intermediate
-    // code array (graft.functions.SqRoundTrip) — bit-identical to the
-    // sqReconstructExpr(sqCodeExpr(..)) composition it replaces
-    val c = corpus
-      .withColumn("__xhat",
-        graft.functions.SqRoundTrip(col(vecCol), mins, scales))
-      .select(col(idCol), col("__xhat"), normExpr(col("__xhat")).as("__nc"))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__nq", normExpr(col("qv"))))
-    val scored = c.join(q, col(idCol) =!= col("query_id"))
-      .withColumn("cos",
-        round(dotExpr(col("qv"), col("__xhat")) / (col("__nq") * col("__nc")), 6))
-    topKPerQuery(scored, idCol, k)
-  }
+      scales: Array[Double]): DataFrame =
+    cosineSearch(
+      corpus.select(col(idCol),
+        graft.functions.SqRoundTrip(col(vecCol), mins, scales).as("__xhat")),
+      "__xhat", querySide(queries, idCol, vecCol), idCol, k, rounded = true)
 
   /** Squared-L2 argmin cell id over the trained centroids — map-only.
     * ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖²; ‖x‖² is common to all cells, so
@@ -552,20 +526,23 @@ object Ann {
       pqCodeExpr(col(vecCol), codebooks).as("code"),
       round(normExpr(col(vecCol)), 6).as("norm"))
 
-  /** IVF-bucketed top-k cosine: queries probe their `nProbe` nearest
-    * cells. Recall < 1 at cell boundaries (the IVF analog of the LSH
-    * recall cliff); raise nProbe to trade cost for recall.
+  /** The IVF probe: each corpus row sits in its nearest cell
+    * ([[cellExpr]]); each query probes its `nProbe` nearest cells
+    * (graft.functions.ProbeCells on `qv`).
     */
-  /** The `nProbe` nearest cells of the vector in column `qv`, as an
-    * array — shared by the IVF and IVFPQ probe sides.
-    */
-  private def probeCellsExpr(centroids: Array[Array[Double]],
-      nProbe: Int): Column =
-    graft.functions.ProbeCells(col("qv"), centroids, nProbe)
+  private def ivfProbe(vecCol: String, centroids: Array[Array[Double]],
+      nProbe: Int): Probe = {
+    require(nProbe >= 1 && nProbe <= centroids.length,
+      s"nProbe must be in [1, ${centroids.length}], got $nProbe")
+    Probe("__cell",
+      _.withColumn("__cell", cellExpr(col(vecCol), centroids)),
+      _.withColumn("__cell", explode(
+        graft.functions.ProbeCells(col("qv"), centroids, nProbe))))
+  }
 
   /** The m·ksub ADC distance tables of the vector in column `qv`
-    * (`dt(j)(c) = ‖q_j − c‖²`), as a nested array — shared by the PQ
-    * and IVFPQ query sides.
+    * (`dt(j)(c) = ‖q_j − c‖²`), as a nested array — the query side of
+    * [[adcSearch]].
     */
   private def pqDistTablesExpr(codebooks: Array[Array[Array[Double]]]): Column =
     graft.functions.PqDistTables(col("qv"), codebooks)
@@ -578,31 +555,16 @@ object Ann {
       element_at(col("__dt").getItem(j), col("__code").getItem(j) + 1))
       .reduce(_ + _)
 
+  /** IVF-bucketed top-k cosine: queries probe their `nProbe` nearest
+    * cells. Recall < 1 at cell boundaries (the IVF analog of the LSH
+    * recall cliff); raise nProbe to trade cost for recall.
+    */
   def ivfCosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Array[Array[Double]],
-      nProbe: Int = 2): DataFrame = {
-    val nList = centroids.length
-    require(nProbe >= 1 && nProbe <= nList)
-    val c = corpus.withColumn("__cell", cellExpr(col(vecCol), centroids))
-      .withColumn("__nc", normExpr(col(vecCol)))
-    val sortedCells = probeCellsExpr(centroids, nProbe)
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__nq", normExpr(col("qv")))
-      .withColumn("__cell", explode(sortedCells)))
-    val scored = c.join(q, Seq("__cell")).filter(col(idCol) =!= col("query_id"))
-      .withColumn("cos",
-        dotExpr(col("qv"), col(vecCol)) / (col("__nq") * col("__nc")))
-    topKPerQuery(scored, idCol, k)
-  }
+      nProbe: Int = 2): DataFrame =
+    cosineSearch(corpus, vecCol, querySide(queries, idCol, vecCol), idCol, k,
+      rounded = false, probe = Some(ivfProbe(vecCol, centroids, nProbe)))
 
-  /** Embedding near-duplicate pairs: all (a<b) pairs with cosine ≥
-    * threshold, pruned by LSH buckets (exact within bucket). Buckets
-    * over `maxBucketSize` rows are dropped before the self-join (the
-    * same Manku-style skew cap as Dedup.candidatePairs — a bucket of
-    * identical/zero vectors would square inside one partition; exact
-    * dedup on a vector hash catches those cheaper).
-    */
   /** SemDeDup (Abbas et al., arXiv:2303.09540 — public): SEMANTIC
     * near-duplicate pairs via k-means clustering + within-cluster
     * cosine. The paper's recipe: k-means the embedding space, then
@@ -647,25 +609,6 @@ object Ann {
       .withColumn("cos", dotExpr(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("__cell").as("cluster"), col("id_a"), col("id_b"), col("cos"))
-  }
-
-  def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nPlanes: Int, dim: Int, seed: Int = 42,
-      maxBucketSize: Int = 10000): DataFrame = {
-    // aggregate+broadcast-anti-join cap (see Dedup.dropOversized): never
-    // concentrates a hot bucket on one task just to discard it
-    val b = Dedup.dropOversized(
-      randomHyperplaneBuckets(df, vecCol, nPlanes, dim, seed)
-        .withColumn("__n", normExpr(col(vecCol))),
-      Seq("bucket"), maxBucketSize)
-    val a = b.select(col("bucket"), col(idCol).as("id_a"),
-      col(vecCol).as("va"), col("__n").as("na"))
-    val c = b.select(col("bucket"), col(idCol).as("id_b"),
-      col(vecCol).as("vb"), col("__n").as("nb"))
-    a.join(c, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .withColumn("cos", dotExpr(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos").distinct()
   }
 
   /** Per-group mean embedding (domain centroid): posexplode to

@@ -3,8 +3,6 @@ package graft.llmdata
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.llmdata.Ann.{dotExpr, normExpr}
-
 /** Training-pair assembly for contrastive / embedding-model training —
   * the data-side half of a retrieval training pipeline (the reference
   * stops at feature extraction; these are the ops a 100 TB pair-mining
@@ -15,10 +13,10 @@ import graft.llmdata.Ann.{dotExpr, normExpr}
   *    the corpus keyed by batch, pairs materialize per-batch (batch
   *    count grows with the corpus, per-batch work is O(B²) for a
   *    constant expected batch size B — never a global window or sort).
-  *  - hard negatives: brute-force scored join against a BROADCAST
+  *  - hard negatives: the [[Ann]] cosine search against a BROADCAST
   *    anchor set (anchors are always the small side in mining runs),
-  *    ranked per anchor by the repo's TopKByScore single-aggregate
-  *    top-k — no per-anchor window over the corpus.
+  *    ranked per anchor by its bounded-heap top-k — no per-anchor
+  *    window over the corpus.
   */
 object Contrastive {
 
@@ -56,19 +54,13 @@ object Contrastive {
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val a = broadcast(anchors
-      .select(col(idCol).as("anchor_id"), col(vecCol).as("__av"),
-        col(labelCol).as("__albl"))
-      .withColumn("__na", normExpr(col("__av"))))
-    val scored = corpus.withColumn("__nc", normExpr(col(vecCol)))
-      .join(a, col(idCol) =!= col("anchor_id") && col(labelCol) =!= col("__albl"))
-      .withColumn("__cos",
-        round(dotExpr(col("__av"), col(vecCol)) / (col("__na") * col("__nc")), 6))
-    scored.groupBy("anchor_id")
-      .agg(graft.functions.TopKByScore(col("__cos"), col(idCol), k).as("__nn"))
-      .select(col("anchor_id"), posexplode(col("__nn")).as(Seq("__pos", "__s")))
-      .select(col("anchor_id"), (col("__pos") + 1).as("rank"),
-        col("__s.id").as("neg_id"), col("__s.score").as("cos"))
+    Ann.cosineSearch(corpus, vecCol,
+        anchors.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+          col(labelCol).as("__albl")),
+        idCol, k, rounded = true,
+        pairFilter = Some(col(labelCol) =!= col("__albl")))
+      .select(col("query_id").as("anchor_id"), col("rank"),
+        col("neighbor_id").as("neg_id"), col("cos"))
   }
 
   /** Deterministic shard assignment + per-shard manifest — what a

@@ -1422,19 +1422,13 @@ object LlmDataQueries extends QueryPack {
         .select(posexplode(col("nn")).as(Seq("pos", "sc")))
         .select(col("sc.id").as("doc_id"), (col("pos") + 1).as("rank"))
       val emb = Tables.embeddings(s, dir)
-      val q0 = broadcast(emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("qv"))
-        .withColumn("__nq", Ann.normExpr(col("qv"))))
-      val vec = emb.filter(col("vec_id") =!= 0)
-        .join(q0)
-        .select(col("vec_id").as("doc_id"),
-          round(Ann.dotExpr(col("qv"), col("embedding")) /
-            (col("__nq") * Ann.normExpr(col("embedding"))), 6).as("cos"))
-        .groupBy()
-        .agg(graft.functions.TopKByScore(col("cos"), col("doc_id"), 10)
-          .as("nn"))
-        .select(posexplode(col("nn")).as(Seq("pos", "sc")))
-        .select(col("sc.id").as("doc_id"), (col("pos") + 1).as("rank"))
+      val vec = Ann.cosineSearch(emb, "embedding",
+          Ann.querySide(emb.filter(col("vec_id") === 0), "vec_id", "embedding"),
+          "vec_id", k = 10, rounded = true)
+        .select(col("neighbor_id").as("doc_id"), col("rank"))
+        // one query's ten rows in one partition, like the lexical list's
+        // global top-k: the fusion aggregates then need no exchange
+        .coalesce(1)
       Retrieval.rrfFuse(Seq(lex, vec), "doc_id", "rank", k = 5)
         .select(col("rank"), col("doc_id"), round(col("rrf"), 6).as("rrf"),
           col("n_lists"))

@@ -3067,8 +3067,9 @@ object RelationalQueries extends QueryPack {
          |  CAST(fc.h AS INT) AS h, fc.forecast, act.y AS actual,
          |  round(abs(fc.forecast - CAST(act.y AS DOUBLE))
          |    / CAST(act.y AS DOUBLE), 6) AS ape,
-         |  round(abs(fc.forecast - CAST(act.y AS DOUBLE)) / nv.dnv, 6)
-         |    AS ase
+         |  CASE WHEN nv.dnv = 0 THEN NULL
+         |    ELSE round(abs(fc.forecast - CAST(act.y AS DOUBLE)) / nv.dnv, 6)
+         |    END AS ase
          |FROM fc
          |JOIN idx od ON od.i = fc.o - 1
          |JOIN idx act ON act.i = fc.o + fc.h - 1

@@ -468,7 +468,9 @@ object Temporal {
     *  - ASE  |ŷ − y| / MAE_naive(train) — the MASE cell (Hyndman &
     *    Koehler, IJF 2006): scaled by the in-sample one-step NAIVE
     *    error, so values < 1 beat "predict yesterday" and the metric
-    *    survives zero-valued days where MAPE explodes.
+    *    survives zero-valued days where MAPE explodes. MASE is
+    *    undefined when the naive MAE is 0 (a constant training
+    *    series), so ASE is NULL there.
     *
     * Scale shape — the [[holtSmoothing]] posture: ONE corpus aggregate
     * to the ≤|days| frame; the per-origin folds are driver arithmetic
@@ -517,7 +519,7 @@ object Temporal {
         val a = daily(o - 1 + h - 1)._2
         val err = math.abs(f - a.toDouble)
         (fmt.format(daily(o - 2)._1), h, f, a,
-          r6(err / a.toDouble), r6(err / dNaive))
+          r6(err / a.toDouble), Option.when(dNaive != 0)(r6(err / dNaive)))
       }
     }
     rows.toDF("origin_day", "h", "forecast", "actual", "ape", "ase")

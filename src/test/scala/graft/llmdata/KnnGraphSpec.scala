@@ -24,13 +24,14 @@ class KnnGraphSpec extends SparkSpec {
   }
   private def df = vecs.toDF("id", "vec")
 
+  private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+    val d = a.zip(b).map { case (x, y) => x * y }.sum
+    d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+  }
+
   private def bruteTop5: Map[Long, Seq[Long]] = {
-    def cos(a: Seq[Double], b: Seq[Double]): Double = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      val r = d / (math.sqrt(a.map(x => x * x).sum)
-        * math.sqrt(b.map(x => x * x).sum))
-      BigDecimal(r).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
+    def cos(a: Seq[Double], b: Seq[Double]): Double =
+      BigDecimal(cosine(a, b)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     vecs.map { case (i, v) =>
       i -> vecs.filter(_._1 != i)
         .map { case (j, u) => (j, cos(v, u)) }
@@ -45,6 +46,19 @@ class KnnGraphSpec extends SparkSpec {
         s -> rows.sortBy(_._2).map(_._3).toSeq
       }
     assert(got == bruteTop5)
+    // the raw-cosine search over the same pairs: same neighbours and
+    // ranks, cosines within 1e-12 of the driver's unrounded values
+    val cosTop = Ann.cosineTopK(df, df, "id", "vec", k = 5)
+      .select("query_id", "rank", "neighbor_id", "cos")
+      .as[(Long, Int, Long, Double)].collect()
+      .groupBy(_._1).map { case (q, rows) => q -> rows.sortBy(_._2).toSeq }
+    assert(cosTop.map { case (q, rows) => q -> rows.map(_._3) } == bruteTop5)
+    cosTop.foreach { case (q, rows) =>
+      rows.foreach { case (_, _, n, c) =>
+        assert(math.abs(c - cosine(vecs(q.toInt)._2, vecs(n.toInt)._2)) <= 1e-12,
+          s"query $q neighbour $n: cos $c")
+      }
+    }
   }
 
   test("LSH knn graph: high recall on clustered data, degree bounded") {
@@ -70,5 +84,12 @@ class KnnGraphSpec extends SparkSpec {
     val rec0 = r0.count(brute.contains).toDouble / brute.size
     val rec1 = r1.count(brute.contains).toDouble / brute.size
     assert(rec1 >= rec0)
+    // only 0 (own bucket) and 1 (Hamming-1) exist; anything else is
+    // rejected by name, not silently run as Hamming-1
+    for (bad <- Seq(-1, 2)) {
+      val e = intercept[IllegalArgumentException](Ann.knnGraphLsh(df, "id",
+        "vec", k = 5, nPlanes = 4, dim = dim, multiProbe = bad))
+      assert(e.getMessage.contains(s"got $bad"), e.getMessage)
+    }
   }
 }

@@ -153,18 +153,20 @@ class LlmDataSpec extends SparkSpec {
   test("SQ8 ANN: codes in [0,255], reconstruction within half a grid step, high recall@1") {
     val (mins, scales) = Ann.sqTrain(emb, "embedding", dim = 64)
     assert(mins.length == 64 && scales.forall(_ > 0))
-    val coded = emb.select(col("vec_id"), col("embedding"),
-      Ann.sqCodeExpr(col("embedding"), mins, scales).as("code"),
-      Ann.sqReconstructExpr(
-        Ann.sqCodeExpr(col("embedding"), mins, scales), mins, scales).as("xhat"))
-    val rows = coded.collect()
+    val rows = emb.select(col("embedding"),
+      graft.functions.SqRoundTrip(col("embedding"), mins, scales).as("xhat"))
+      .collect()
     rows.foreach { r =>
-      val code = r.getSeq[Int](2)
-      assert(code.forall(c => c >= 0 && c <= 255))
-      val x = r.getSeq[Float](1); val xh = r.getSeq[Double](3)
-      // in-range dims reconstruct within sc/2 (clamping only binds at
-      // the corpus extremes, which are exactly representable)
+      val x = r.getSeq[Float](0); val xh = r.getSeq[Double](1)
       x.indices.foreach { d =>
+        // x̂ lies on the grid: its code (x̂ − min)/sc is an integer in
+        // [0, 255]
+        val code = (xh(d) - mins(d)) / scales(d)
+        assert(math.abs(code - math.rint(code)) <= 1e-9
+          && math.rint(code) >= 0 && math.rint(code) <= 255,
+          s"dim $d: code $code")
+        // in-range dims reconstruct within sc/2 (clamping only binds at
+        // the corpus extremes, which are exactly representable)
         assert(math.abs(x(d) - xh(d)) <= scales(d) / 2 + 1e-9,
           s"dim $d: ${x(d)} vs ${xh(d)} (sc=${scales(d)})")
       }
@@ -533,19 +535,6 @@ class LlmDataSpec extends SparkSpec {
       .select(Ann.projectExpr(col("v"), basis).as("p"))
       .as[Seq[Double]].head()
     assert(p == Seq(3.0, 7.0))
-  }
-
-  test("embeddingNearDupPairs caps hot buckets and keeps norms correct") {
-    import spark.implicits._
-    val vecs = Seq(
-      (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
-      (2L, Array(0.99f, 0.1f, 0.0f, 0.0f)),
-      (3L, Array(0.0f, 1.0f, 0.0f, 0.0f))
-    ).toDF("vec_id", "embedding")
-    val pairs = Ann.embeddingNearDupPairs(vecs, "vec_id", "embedding",
-      threshold = 0.9, nPlanes = 2, dim = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.toSet.subsetOf(Set((1L, 2L))))
   }
 
   test("connectedComponents: both paths reach the fixpoint on a chain") {

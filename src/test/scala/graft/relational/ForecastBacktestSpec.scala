@@ -60,5 +60,14 @@ class ForecastBacktestSpec extends SparkSpec {
         s"forecast ${r.getDouble(2)} vs actual ${r.getLong(3)}")
       assert(r.getDouble(5) < 0.3, s"ase ${r.getDouble(5)}")
     }
+    // a constant series is linear too, but its naive MAE is 0: MASE is
+    // undefined there, so ase is NULL
+    val flat = Temporal.forecastBacktest(series(Seq.fill(12)(7)), "ts").collect()
+    assert(flat.length == 9)
+    for (r <- flat) {
+      assert(r.getDouble(2) == r.getLong(3).toDouble,
+        s"forecast ${r.getDouble(2)} vs actual ${r.getLong(3)}")
+      assert(r.isNullAt(5), s"ase ${r.get(5)}")
+    }
   }
 }
