@@ -645,8 +645,9 @@ object EstimatorQueries extends QueryPack {
         |SELECT source, rank, doc_id, CAST(h AS DOUBLE) AS score
         |FROM r WHERE rank <= 20 ORDER BY source, rank""".stripMargin,
     // UniMax water-fill, closed form: group i (cap-ascending rank rk)
-    // is capped ⟺ cap·(nl−rk+1) ≤ T − cum_prev — all BIGINT; θ is the
-    // single double. T = 3·total//2, epochs = 2.
+    // fits ⟺ cap·(nl−rk+1) ≤ T − cum_prev — all BIGINT; only the
+    // prefix of fitting groups is capped (the first miss ends the
+    // capping). θ is the single double. T = 3·total//2, epochs = 2.
     "q_unimax" ->
       """WITH tc AS (SELECT lang,
         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n
@@ -658,9 +659,11 @@ object EstimatorQueries extends QueryPack {
         |        CAST(sum(n * 2) OVER (ORDER BY n, lang
         |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
         |      FROM tc),
-        |f AS (SELECT s.lang, s.n, s.cap, s.rk, s.cum, tot.t, tot.nl,
-        |        (cap * (nl - rk + 1) <= t - (cum - cap)) AS capped
+        |g AS (SELECT s.lang, s.n, s.cap, s.rk, s.cum, tot.t, tot.nl,
+        |        (cap * (nl - rk + 1) <= t - (cum - cap)) AS fits
         |      FROM s CROSS JOIN tot),
+        |f AS (SELECT *, bool_and(fits) OVER (ORDER BY rk
+        |        ROWS UNBOUNDED PRECEDING) AS capped FROM g),
         |th AS (SELECT coalesce(
         |         CAST(t - CAST(coalesce(sum(CASE WHEN capped THEN cap END),
         |           0) AS BIGINT) AS DOUBLE)

@@ -1,41 +1,42 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Scale-safe GLOBAL cumulative sums (guide §2, r15 optimization
-  * round): an unpartitioned `Window.orderBy` moves the whole frame to
-  * ONE partition — fine for decile/threshold-sized aggregates, a
-  * single-task corpus sort for row-scale inputs (distinct scores,
-  * distinct event times, vocab weights). This helper computes the same
-  * running sums with a two-pass range-partitioned plan:
+/** Scale-safe GLOBAL cumulative sums as a two-pass partition carry
+  * (guide §2): an unpartitioned `Window.orderBy` moves the whole frame
+  * to ONE partition, a single-task sort for row-scale inputs (distinct
+  * scores, distinct event times, vocab weights). Here every partition
+  * scans its own rows and carries the totals of the partitions before
+  * it.
   *
-  *  1. range-repartition by the order key and pin the layout with ONE
-  *     checkpoint (the per-row partition id must be STABLE across
-  *     the two consumers below — a re-executed range exchange may
-  *     sample different boundaries);
-  *  2. per-partition totals (≤ #partitions rows) get their own running
-  *     offsets through a window over that BOUNDED frame (partition
-  *     count is a cluster property, not a data property);
-  *  3. each row's global cumulative sum = its within-partition window
-  *     sum (parallel across partitions) + its partition's offset
-  *     (broadcast-joined back).
+  * Layout: the input plus one `__pv<i>` column per addend is
+  * range-partitioned by `order` into `defaultParallelism` partitions
+  * and sorted within each. Both passes read ONE RDD of that plan, so
+  * they read the same range-shuffle output and see the same
+  * row→partition layout; nothing is checkpointed or persisted.
+  *  1. totals: one `Array[Long]` per partition, collected; the driver
+  *     scans the ≤ #partitions totals into exclusive offsets;
+  *  2. carry: each partition folds its rows into a `Long` per sum,
+  *     seeded with its offset, and emits the inclusive or strict value.
   *
-  * EXACTNESS CONTRACT: the regrouped accumulation is bit-identical to
-  * the sequential fold ONLY for order-insensitive addends — integral
-  * types, or doubles that are exactly integer-valued (counts cast to
-  * double), where IEEE addition below 2^53 is associative. Call sites
-  * feed counts (longs / integer-valued doubles) exclusively; never
-  * route arbitrary float sums through this (their sequential-fold
-  * bits are what generated oracles replay).
+  * EXACTNESS CONTRACT: an addend is integral, or a double that is an
+  * exact integer with |v| ≤ 2^53 (counts cast to double); a null addend
+  * counts as 0, as `sum` does. Any other addend type is rejected up
+  * front and any other double value fails the job, both naming the sum.
+  * Every partial sum is then an exact `Long`, so the result is the
+  * sequential fold's value under any partitioning. A sum column is
+  * `LongType` for integral addends and `DoubleType` for double ones,
+  * the type `sum` gives.
   *
   * Order keys must be UNIQUE per row (call sites pass groupBy outputs
-  * keyed by the order column), so ROWS/RANGE frame semantics coincide.
+  * keyed by the order column), so the within-partition order is
+  * deterministic.
   *
   * Reserved columns: `__pid`, `__pv<i>`, `__pt<i>` and `__po<i>` are
-  * the helper's own; an input carrying one is rejected (it would be
-  * overwritten and then dropped).
+  * the helper's own; an input carrying one is rejected.
   */
 object Prefix {
 
@@ -44,9 +45,9 @@ object Prefix {
     * @param df     input frame; order keys unique per row
     * @param order  global ordering (e.g. `Seq(col("s"))`, descending
     *               via `col("s").desc`)
-    * @param sums   (addend, outputName, inclusive): inclusive=true is
-    *               ROWS UNBOUNDED PRECEDING..CURRENT ROW, false stops
-    *               at -1 (strict prefix; 0 for the first row)
+    * @param sums   (addend, outputName, inclusive): inclusive=true sums
+    *               up to and including the row, false stops before it
+    *               (strict prefix; 0 for the first row)
     */
   def cumSums(df: DataFrame, order: Seq[Column],
       sums: Seq[(Column, String, Boolean)]): DataFrame = {
@@ -56,48 +57,58 @@ object Prefix {
       s"Prefix.cumSums: input column $c is reserved"))
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism
-    // materialize the addends once so per-partition totals and the
-    // within-partition window sum the IDENTICAL values
-    val vals = sums.zipWithIndex.map { case ((c, _, _), i) =>
-      c.as(s"__pv$i")
+    val (w, k) = (df.columns.length, sums.length)
+    val sorted = df
+      .select(col("*") +: sums.zipWithIndex.map { case ((c, _, _), i) =>
+        c.as(s"__pv$i") }: _*)
+      .repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
+    val integral = sums.indices.map(i => sorted.schema(w + i).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case DoubleType => false
+      case t => throw new IllegalArgumentException(
+        s"Prefix.cumSums: sum ${sums(i)._2} has a ${t.simpleString} addend; " +
+          "only integral and double addends are exact")
+    }).toArray
+    val labels = sums.map { case (c, name, _) => s"sum $name addend $c" }.toArray
+    val inclusive = sums.map(_._3).toArray
+    val rows = sorted.rdd
+    val totals = rows.mapPartitions { it =>
+      val t = new Array[Long](k)
+      it.foreach(r => for (i <- 0 until k)
+        t(i) = Math.addExact(t(i), exact(r.get(w + i), labels(i))))
+      Iterator(t)
+    }.collect()
+    val offsets = totals.scanLeft(new Array[Long](k))((o, t) =>
+      Array.tabulate(k)(i => Math.addExact(o(i), t(i))))
+    val out = rows.mapPartitionsWithIndex { (p, it) =>
+      val acc = offsets(p).clone()
+      it.map { r =>
+        val a = new Array[Any](w + k)
+        for (j <- 0 until w) a(j) = r.get(j)
+        for (i <- 0 until k) {
+          val before = acc(i)
+          acc(i) = Math.addExact(before, exact(r.get(w + i), labels(i)))
+          val v = if (inclusive(i)) acc(i) else before
+          // box each branch: `if (c) long else double` widens to Double
+          a(w + i) = if (integral(i)) v: Any else v.toDouble: Any
+        }
+        new GenericRow(a): Row
+      }
     }
-    // materialize the input ONCE before range partitioning: the range
-    // exchange SAMPLES its child, so feeding it the raw lineage would
-    // execute the (often corpus-rooted) upstream plan twice — once for
-    // the sample, once for the exchange (measured ~1 s per call on the
-    // Mann–Whitney gate). After this checkpoint both passes read cached
-    // partitions.
-    val once = Rounds.materialize(df.select(col("*") +: vals: _*))
-    // the range exchange is sampled; the second checkpoint pins
-    // row→partition so the offsets branch and the window branch see
-    // the same layout (a re-executed sampled exchange may pick
-    // different boundaries). Only `marked` is read after this.
-    val marked = Rounds.materialize(once
-      .repartitionByRange(n, order: _*)
-      .withColumn("__pid", spark_partition_id()))
-    Rounds.release(once)
-    val offs = marked.groupBy("__pid")
-      .agg(sums.indices.map(i => sum(col(s"__pv$i")).as(s"__pt$i")).head,
-        sums.indices.map(i => sum(col(s"__pv$i")).as(s"__pt$i")).tail: _*)
-    // running offsets over the ≤ #partitions frame: bounded by cluster
-    // size, so the single-partition window here is legitimate
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sums.indices.foldLeft(offs) { (d, i) =>
-      d.withColumn(s"__po$i", coalesce(sum(col(s"__pt$i")).over(wOff), lit(0)))
-    }.select(col("__pid") +: sums.indices.map(i => col(s"__po$i")): _*)
-    val wLoc = Window.partitionBy("__pid").orderBy(order: _*)
-    val out = sums.zipWithIndex.foldLeft(
-        marked.join(broadcast(offsets), Seq("__pid"))) {
-      case (d, ((_, name, inclusive), i)) =>
-        val frame =
-          if (inclusive) wLoc.rowsBetween(Window.unboundedPreceding, 0)
-          else wLoc.rowsBetween(Window.unboundedPreceding, -1)
-        d.withColumn(name,
-          coalesce(sum(col(s"__pv$i")).over(frame), lit(0)) + col(s"__po$i"))
-    }
-    out.drop("__pid")
-      .drop(sums.indices.map(i => s"__pv$i"): _*)
-      .drop(sums.indices.map(i => s"__po$i"): _*)
+    spark.createDataFrame(out, StructType(df.schema.fields ++
+      sums.indices.map(i => StructField(sums(i)._2,
+        if (integral(i)) LongType else DoubleType, nullable = false))))
+  }
+
+  /** An addend as an exact `Long`: null is 0, a double must be an
+    * integer with |v| ≤ 2^53. */
+  private def exact(v: Any, label: String): Long = v match {
+    case null => 0L
+    case d: Double =>
+      require(d == math.rint(d) && math.abs(d) <= (1L << 53).toDouble,
+        s"Prefix.cumSums: $label = $d is not an integer-valued double " +
+          "with |v| <= 2^53")
+      d.toLong
+    case x: Number => x.longValue
   }
 }

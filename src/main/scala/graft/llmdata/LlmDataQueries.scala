@@ -2108,6 +2108,8 @@ object LlmDataQueries extends QueryPack {
 
     // A-ES weighted sample mirror: the same md5-60-bit uniform,
     // log-space key ln(u)/w, rank on the ROUNDED key with id tiebreak.
+    // `+ 0.0` folds DuckDB's −0.0 into 0.0: Spark's round never emits
+    // a negative zero.
     "q_weighted_sample" ->
       """WITH d AS (SELECT doc_id,
         |             CAST(len(string_split(text, ' ')) AS BIGINT) AS w
@@ -2116,7 +2118,7 @@ object LlmDataQueries extends QueryPack {
         |        round(ln((('0x' || substr(md5('aes' ||
         |            CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
         |            + CAST(0.5 AS DOUBLE)) / 1152921504606846976.0)
-        |          / CAST(w AS DOUBLE), 6) AS aes_key
+        |          / CAST(w AS DOUBLE), 6) + 0.0 AS aes_key
         |      FROM d),
         |r AS (SELECT doc_id, w, aes_key, row_number()
         |        OVER (ORDER BY aes_key DESC, doc_id) AS rn FROM k)

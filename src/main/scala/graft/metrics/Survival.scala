@@ -141,7 +141,9 @@ object Survival {
     * the reverse cumulative risk-set sums and the two Σ run strictly
     * over the ≤|distinct durations| frame. Sums stay unrounded into
     * the final statistics (single-provenance rule); every reported
-    * column rounds at the output boundary.
+    * column rounds at the output boundary. The covariate must be
+    * integer-valued (|Σx²| ≤ 2^53 per duration); any other value fails
+    * in [[graft.core.Prefix.cumSums]], naming the addend.
     */
   def coxOneStep(df: DataFrame, durationCol: String, eventCol: String,
       covariateCol: String): DataFrame = {
@@ -158,11 +160,9 @@ object Survival {
     val dD = col("__d").cast("double")
     val xbar = col("__s1") / s0
     // reverse cumulative risk-set moments as two-pass prefix sums
-    // (guide §2, r15). Exactness note: __sx/__sxx are double sums, so
-    // this relies on the covariate being integer-valued (the declared
-    // gate feeds an event count) — integer-valued doubles accumulate
-    // exactly under any regrouping below 2^53, identical to the old
-    // sequential window fold.
+    // (guide §2, r15). __sx/__sxx are double sums: Prefix.cumSums
+    // rejects a non-integer addend, so a non-integer covariate fails
+    // here, naming __sx (the declared gate feeds an event count).
     val agg = graft.core.Prefix.cumSums(per, Seq(col("__t").desc),
         Seq((col("__m"), "__s0", true), (col("__sx"), "__s1", true),
           (col("__sxx"), "__s2", true)))

@@ -378,13 +378,13 @@ object Splits {
     *
     * Group token counts are ONE tiny aggregation (≤ |groups| rows,
     * collected bounded like any trained summary); the fill runs on the
-    * driver in INTEGER arithmetic — group i (cap-ascending, 0-based)
-    * is capped ⟺ cap_i·(L−i) ≤ T − S_{i−1} — the same closed-form
-    * predicate a SQL window evaluates, so both engines decide
-    * bit-identically (the predicate is monotone: g(i+1)−g(i) =
-    * (c_i−c_{i+1})(L−i−1) ≤ 0 on the sorted order, hence capped groups
-    * form a prefix and the sequential fill equals the closed form).
-    * θ = (T−S_k)/(L−k) is the only double.
+    * driver in INTEGER arithmetic, as the paper's Algorithm 1 does:
+    * walking cap-ascending (0-based), group i is capped while
+    * cap_i·(L−i) ≤ T − S_{i−1}, S the caps applied so far; the first
+    * miss ends the capping and every later group is uncapped. The
+    * SQL mirror takes the same prefix of its closed-form predicate,
+    * so both engines decide bit-identically. θ = (T−S_k)/(L−k) is the
+    * only double.
     *
     * Returns (group, n_tokens, cap, alloc, rate); rate = alloc/n may
     * exceed 1 — that is the point (repetition up to `epochs`).
@@ -400,19 +400,16 @@ object Splits {
     require(counts.length <= 100000,
       s"unimax: ${counts.length} groups exceed the driver bound")
     val L = counts.length
-    var s = 0L
-    val capped = Array.ofDim[Boolean](L)
-    for (i <- 0 until L) {
-      val cap = counts(i)._2 * epochs
-      if (cap * (L - i).toLong <= budget - s) { capped(i) = true; s += cap }
+    var (s, k) = (0L, 0)
+    while (k < L && counts(k)._2 * epochs * (L - k).toLong <= budget - s) {
+      s += counts(k)._2 * epochs; k += 1
     }
-    val k = capped.count(identity)
     val theta = if (k == L) 0.0 else (budget - s).toDouble / (L - k)
     val spark = df.sparkSession
     import spark.implicits._
     counts.zipWithIndex.map { case ((g, n), i) =>
       val cap = n * epochs
-      val alloc = if (capped(i)) cap.toDouble else theta
+      val alloc = if (i < k) cap.toDouble else theta
       (g, n, cap, alloc, alloc / n)
     }.toSeq.toDF(groupCol, "n_tokens", "cap", "alloc", "rate")
   }

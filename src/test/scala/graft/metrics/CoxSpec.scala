@@ -81,4 +81,10 @@ class CoxSpec extends SparkSpec {
     assert(got.getAs[Double]("u_score") ~== (r6(u), 1e-6))
     assert(got.getAs[Double]("information") ~== (r6(i), 1e-6))
   }
+
+  test("a non-integer covariate is rejected, naming the addend") {
+    val e = intercept[Exception](run(Seq(
+      (1L, true, 1.0), (2L, true, 0.5), (3L, false, 2.0))))
+    assert(e.getMessage.contains("addend __sx = 0.5"), e.getMessage)
+  }
 }

@@ -41,4 +41,12 @@ class UnimaxSpec extends SparkSpec {
     assert(thetas.distinct.size == 1)
     assert(math.abs(thetas.head - (400.0 - 5.0) / 3) < 1e-9)
   }
+
+  test("the first group that misses its cap ends the capping") {
+    // caps (epochs=1): a=10, b=11, c=100; budget 25. a misses
+    // (10·3 > 25), so no later group is capped even though b alone
+    // would fit (11·2 ≤ 25): every group gets 25/3
+    val a = alloc(Map("a" -> 10L, "b" -> 11L, "c" -> 100L), 25L, 1)
+    assert(a.values.toSet == Set(25.0 / 3), a)
+  }
 }
