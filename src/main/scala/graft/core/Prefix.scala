@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRow
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.graft.ExpressionBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,11 +14,13 @@ import org.apache.spark.sql.types._
   * scans its own rows and carries the totals of the partitions before
   * it.
   *
-  * Layout: the input plus one `__pv<i>` column per addend is
-  * range-partitioned by `order` into `defaultParallelism` partitions
-  * and sorted within each. Both passes read ONE RDD of that plan, so
-  * they read the same range-shuffle output and see the same
-  * row→partition layout; nothing is checkpointed or persisted.
+  * Layout: the input plus one `__pv<i>` column per addend (cast to
+  * `long` when integral) is range-partitioned by `order` into
+  * `defaultParallelism` partitions and sorted within each. Both passes
+  * read ONE RDD of that plan's Catalyst rows, so they read the same
+  * range-shuffle output and see the same row→partition layout; nothing
+  * is checkpointed or persisted, and no row is converted to or from an
+  * external `Row`.
   *  1. totals: one `Array[Long]` per partition, collected; the driver
   *     scans the ≤ #partitions totals into exclusive offsets;
   *  2. carry: each partition folds its rows into a `Long` per sum,
@@ -58,57 +62,63 @@ object Prefix {
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism
     val (w, k) = (df.columns.length, sums.length)
-    val sorted = df
-      .select(col("*") +: sums.zipWithIndex.map { case ((c, _, _), i) =>
-        c.as(s"__pv$i") }: _*)
-      .repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
-    val integral = sums.indices.map(i => sorted.schema(w + i).dataType match {
+    val types = df.select(sums.map(_._1): _*).schema.map(_.dataType)
+    val integral = types.indices.map(i => types(i) match {
       case ByteType | ShortType | IntegerType | LongType => true
       case DoubleType => false
       case t => throw new IllegalArgumentException(
         s"Prefix.cumSums: sum ${sums(i)._2} has a ${t.simpleString} addend; " +
           "only integral and double addends are exact")
     }).toArray
+    val addends = sums.indices.map(i => s"__pv$i")
+    val sorted = df
+      .select(col("*") +: sums.zipWithIndex.map { case ((c, _, _), i) =>
+        (if (integral(i)) c.cast(LongType) else c).as(addends(i)) }: _*)
+      .repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
     val labels = sums.map { case (c, name, _) => s"sum $name addend $c" }.toArray
     val inclusive = sums.map(_._3).toArray
-    val rows = sorted.rdd
+    // Catalyst rows, read in place: no external Row round trip
+    val rows = sorted.queryExecution.toRdd
     val totals = rows.mapPartitions { it =>
       val t = new Array[Long](k)
       it.foreach(r => for (i <- 0 until k)
-        t(i) = Math.addExact(t(i), exact(r.get(w + i), labels(i))))
+        t(i) = Math.addExact(t(i), exact(r, w + i, integral(i), labels(i))))
       Iterator(t)
     }.collect()
     val offsets = totals.scanLeft(new Array[Long](k))((o, t) =>
       Array.tabulate(k)(i => Math.addExact(o(i), t(i))))
     val out = rows.mapPartitionsWithIndex { (p, it) =>
       val acc = offsets(p).clone()
+      val tail = new GenericInternalRow(k)
+      val row = new JoinedRow
+      // each row is consumed before the next: `tail` and `row` are reused
       it.map { r =>
-        val a = new Array[Any](w + k)
-        for (j <- 0 until w) a(j) = r.get(j)
         for (i <- 0 until k) {
           val before = acc(i)
-          acc(i) = Math.addExact(before, exact(r.get(w + i), labels(i)))
+          acc(i) = Math.addExact(before, exact(r, w + i, integral(i), labels(i)))
           val v = if (inclusive(i)) acc(i) else before
-          // box each branch: `if (c) long else double` widens to Double
-          a(w + i) = if (integral(i)) v: Any else v.toDouble: Any
+          if (integral(i)) tail.setLong(i, v) else tail.setDouble(i, v.toDouble)
         }
-        new GenericRow(a): Row
+        row(r, tail): InternalRow
       }
     }
-    spark.createDataFrame(out, StructType(df.schema.fields ++
+    ExpressionBridge.internalDataFrame(spark, out, StructType(sorted.schema.fields ++
       sums.indices.map(i => StructField(sums(i)._2,
         if (integral(i)) LongType else DoubleType, nullable = false))))
+      .drop(addends: _*)
   }
 
-  /** An addend as an exact `Long`: null is 0, a double must be an
-    * integer with |v| ≤ 2^53. */
-  private def exact(v: Any, label: String): Long = v match {
-    case null => 0L
-    case d: Double =>
+  /** Addend `c` of `r` as an exact `Long`: null is 0, a double must be
+    * an integer with |v| ≤ 2^53. */
+  private def exact(r: InternalRow, c: Int, integral: Boolean,
+      label: String): Long =
+    if (r.isNullAt(c)) 0L
+    else if (integral) r.getLong(c)
+    else {
+      val d = r.getDouble(c)
       require(d == math.rint(d) && math.abs(d) <= (1L << 53).toDouble,
         s"Prefix.cumSums: $label = $d is not an integer-valued double " +
           "with |v| <= 2^53")
       d.toLong
-    case x: Number => x.longValue
-  }
+    }
 }

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for the `private[sql]` Expression⇄Column bridge —
   * the supported extension-library pattern for exposing custom native
@@ -54,4 +56,16 @@ object ExpressionBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .registerFunction(FunctionIdentifier(name), info, builder)
+
+  /** A frame over Catalyst rows already laid out as `schema`, without
+    * the external `Row` encoder round trip of
+    * `createDataFrame(RDD[Row], schema)`: no generated deserializer or
+    * serializer, no per-row `Row` object. The scan projects each row as
+    * it reads it, so `rows` may reuse one mutable row per partition.
+    * Used by `graft.core.Prefix.cumSums`.
+    */
+  def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }
